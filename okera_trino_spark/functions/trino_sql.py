@@ -16,7 +16,9 @@ placeholders while the dialect rewrites run over the full statement —
 so a literal like ``'strpos'`` can never be rewritten, yet structural
 rewrites still see across literal arguments (``date_add('day', …)``,
 ``TRY(CAST(x AS t))`` with string args inside) — then restored
-verbatim.
+verbatim. Call-shaped rewrites are one table (``_CALLS``: name →
+handler) applied in a single right-to-left scan of the statement; the
+non-call rewrites are the ordered passes of ``_rewrite_code``.
 Everything compiles to Spark builtins — JVM-side, codegen-friendly,
 never a Python UDF — and then Catalyst owns the plan exactly as if the
 query had been written in Spark SQL directly.
@@ -1004,22 +1006,6 @@ def _split_top_level(s: str) -> list[str]:
     return parts
 
 
-def _rewrite_calls(code: str, name: str, fn) -> str:
-    """Rewrite every call of ``name`` via ``fn(args) -> str | None``
-    (None = leave the call unchanged). Runs right-to-left so nested
-    calls of the same function rewrite correctly."""
-    pat = re.compile(r"\b" + name + r"\s*\(", re.IGNORECASE)
-    matches = list(pat.finditer(code))
-    for m in reversed(matches):
-        open_idx = m.end() - 1
-        close = _find_close(code, open_idx)
-        args = _split_top_level(code[open_idx + 1:close])
-        new = fn([a.strip() for a in args])
-        if new is not None:
-            code = code[:m.start()] + new + code[close + 1:]
-    return code
-
-
 #: Trino (MySQL-style) datetime %-tokens → Java SimpleDateFormat-style
 #: patterns (the subset with an exact Spark equivalent; anything else
 #: raises rather than silently reformatting).
@@ -1904,1960 +1890,1896 @@ def _jsonpath_wildcard_matches(x_sql: str, path: str, requote,
     return cur
 
 
-def _structural_rewrites(code: str, stash: list[str]) -> str:
-    """Call-shape rewrites that need argument access (masked text)."""
+# ------------------------------------------------------ call rewrites
+#
+# Every call-shaped rewrite is a handler ``fn(args, ctx) -> str | None``
+# (None = leave the call unchanged) registered under its lowercase
+# name in ``_CALLS``; ``_rewrite_call_sites`` applies the table to a
+# masked statement in one right-to-left scan.
+class _CallCtx:
+    """What a handler may use besides its stripped arguments: the
+    literal stash, and the statement text with the offset just past
+    the call's closing paren (``code``/``end``, set per call site)."""
 
-    def _lit(arg: str) -> str | None:
-        """If arg is exactly one string-literal placeholder, return its
-        unquoted text, else None."""
-        m = re.fullmatch(r"'\x00(\d+)\x00'", arg)
+    def __init__(self, stash: list[str]):
+        self.stash = stash
+        self.code, self.end = "", 0
+
+    def lit(self, arg: str) -> str | None:
+        """If arg is exactly one string-literal placeholder, return
+        its unquoted text, else None."""
+        m = _STRING_PH_RE.fullmatch(arg)
         if not m:
             return None
-        return stash[int(m.group(1))][1:-1].replace("''", "'")
+        return self.stash[int(m.group(1))][1:-1].replace("''", "'")
 
-    def requote(text: str) -> str:
+    def requote(self, text: str) -> str:
         """Emit a literal as a STASH PLACEHOLDER, not raw quoted text
-        (r9, advice): later passes (_find_close/_split_top_level/
-        greatest-least) rely on the invariant that string literals are
-        atomic placeholders — a raw quoted delimiter containing a
-        paren, e.g. split_part(s, ')', 1), made them mis-parse and
-        emit unbalanced SQL. _unmask doubles backslashes on restore
-        (Trino literals have no escapes), so callers pass text with
-        SINGLE backslashes — regex escapes must NOT be pre-doubled."""
-        stash.append("'" + text.replace("'", "''") + "'")
-        return f"'\x00{len(stash) - 1}\x00'"
+        (r9, advice): the scanner (_find_close/_split_top_level/
+        greatest-least) relies on the invariant that string literals
+        are atomic placeholders — a raw quoted delimiter containing a
+        paren, e.g. split_part(s, ')', 1), made it mis-parse and emit
+        unbalanced SQL. _unmask doubles backslashes on restore (Trino
+        literals have no escapes), so callers pass text with SINGLE
+        backslashes — regex escapes must NOT be pre-doubled."""
+        self.stash.append("'" + text.replace("'", "''") + "'")
+        return f"'\x00{len(self.stash) - 1}\x00'"
 
-    # CAST(x AS VARCHAR(n)) — Trino TRUNCATES to n characters; Spark's
-    # STRING is unbounded, so the faithful form wraps a substring.
-    def _cast_varchar_n(cast_name):
-        def fn(a):
-            if len(a) != 1:
-                return None
-            m = _CAST_VARCHAR_N_RE.match(a[0])
-            if m is None:
-                return None
-            return (f"substring({cast_name}({m.group(1)} AS STRING), "
-                    f"1, {m.group(2)})")
-        return fn
 
-    code = _rewrite_calls(code, "cast", _cast_varchar_n("CAST"))
-    code = _rewrite_calls(code, "try_cast", _cast_varchar_n("TRY_CAST"))
+def _fixed(arity: int, template):
+    """Handler for a call rewritten at one arity only."""
+    return lambda a, ctx: template(a) if len(a) == arity else None
 
-    # Trino random() → uniform double in [0, 1) = Spark rand(); but
-    # random(n) → uniform INTEGER in [0, n), while Spark rand(n) treats
-    # n as a SEED — a silent wrong-values trap, so the 1-arg form maps
-    # to floor(rand() * n) and the 2-arg bounded form random(m, n)
-    # (uniform integer in [m, n)) to the shifted equivalent.
-    def _random_fn(a):
-        if len(a) == 0:
-            return "rand()"
-        if len(a) == 1:
-            return f"CAST(floor(rand() * ({a[0]})) AS BIGINT)"
-        if len(a) == 2:
-            return (f"(({a[0]}) + CAST(floor(rand() * "
-                    f"(({a[1]}) - ({a[0]}))) AS BIGINT))")
+
+def _first(*handlers):
+    """One entry for a name with several call shapes: the first
+    handler that rewrites the call wins."""
+    def fn(a, ctx):
+        for h in handlers:
+            new = h(a, ctx)
+            if new is not None:
+                return new
         return None
+    return fn
 
-    code = _rewrite_calls(code, "random", _random_fn)
 
+# CAST(x AS VARCHAR(n)) — Trino TRUNCATES to n characters; Spark's
+# STRING is unbounded, so the faithful form wraps a substring.
+def _cast_varchar_n(cast_name):
+    def fn(a, ctx):
+        if len(a) != 1:
+            return None
+        m = _CAST_VARCHAR_N_RE.match(a[0])
+        if m is None:
+            return None
+        return (f"substring({cast_name}({m.group(1)} AS STRING), "
+                f"1, {m.group(2)})")
+    return fn
+
+
+# Trino random() → uniform double in [0, 1) = Spark rand(); but
+# random(n) → uniform INTEGER in [0, n), while Spark rand(n) treats
+# n as a SEED — a silent wrong-values trap, so the 1-arg form maps
+# to floor(rand() * n) and the 2-arg bounded form random(m, n)
+# (uniform integer in [m, n)) to the shifted equivalent.
+def _random_fn(a, ctx):
+    if len(a) == 0:
+        return "rand()"
+    if len(a) == 1:
+        return f"CAST(floor(rand() * ({a[0]})) AS BIGINT)"
+    if len(a) == 2:
+        return (f"(({a[0]}) + CAST(floor(rand() * "
+                f"(({a[1]}) - ({a[0]}))) AS BIGINT))")
+    return None
+
+
+# CAST(x AS ROW(a T, ...)) named-row type (r8): lower the type
+# recursively to STRUCT<a: T', ...> — Trino and Spark both cast
+# row/struct fields by POSITION, so the semantics line up; the
+# target field names become the result's field names in both.
+def _cast_row_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    cm = re.match(r"(.+?)\s+AS\s+(ROW\s*\(.*)$", a[0],
+                  re.IGNORECASE | re.DOTALL)
+    if not cm:
+        return None
+    return (f"CAST({cm.group(1)} AS "
+            f"{_trino_type_to_spark(cm.group(2))})")
+
+
+# CAST(x AS JSON) (r7): Trino's JSON type is a string here. The
+# cast SERIALIZES the operand to JSON text for every operand type
+# (varchar → quoted/escaped JSON string — Trino does NOT parse;
+# numerics/booleans → JSON scalars; arrays/maps/rows → nested
+# JSON). One type-agnostic lowering: to_json of a 1-field struct,
+# with the constant {"v": wrapper sliced off — exact JSON escaping
+# from Spark's own serializer, nested nulls preserved
+# (ignoreNullFields off). A standalone SQL NULL stays SQL NULL
+# (Trino's rule), via the CASE.
+def _cast_json_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    cm = re.match(r"(.+)\s+AS\s+JSON\s*$", a[0],
+                  re.IGNORECASE | re.DOTALL)
+    if not cm:
+        return None
+    x = cm.group(1).strip()
+    tj = (f"to_json(named_struct('v', {x}), "
+          f"map('ignoreNullFields', 'false'))")
+    return (f"(CASE WHEN ({x}) IS NULL THEN NULL "
+            f"ELSE substring({tj}, 6, length({tj}) - 6) END)")
+
+
+def _regex_quote(expr: str, ctx) -> str:
+    """Runtime Pattern.quote for a COMPUTED delimiter (r9 —
+    formerly refused): wrap in \\Q…\\E with any embedded \\E
+    broken out exactly as java.util.regex.Pattern.quote does, so
+    Spark's regex-splitting functions see a literal. Empty/NULL
+    callers guard separately."""
+    q_open = ctx.requote("\\Q")
+    q_close = ctx.requote("\\E")
+    fix = ctx.requote("\\E\\\\E\\Q")
+    return (f"concat({q_open}, "
+            f"replace({expr}, {q_close}, {fix}), {q_close})")
+
+
+def _regex_delim(arg: str, ctx) -> str:
+    """A Trino LITERAL-delimiter argument as a Spark regex: a literal
+    has its metachars escaped (Spark's SQL string literals consume one
+    backslash layer, '\\.'→'.'; requote stashes the single-escaped
+    regex and _unmask doubles the backslashes on restore), a computed
+    one is runtime-quoted."""
+    lit = ctx.lit(arg)
+    if lit is None:
+        return _regex_quote(f"({arg})", ctx)
+    return ctx.requote(_REGEX_META.sub(lambda m: "\\" + m.group(0), lit))
+
+
+# element_at (wave 20, divergence audit): Trino returns NULL when
+# an array index exceeds the length; Spark's ANSI element_at
+# RAISES there. try_element_at matches Trino on every edge we
+# checked: over-length index → NULL, missing map key → NULL,
+# index 0 → error in both.
+def _element_at(a, ctx):
+    return f"try_element_at({a[0]}, {a[1]})" if len(a) == 2 else None
+
+
+# Trino split(s, delim) splits on a LITERAL delimiter; Spark's
+# second argument is a REGEX. Escape metachars when the delimiter
+# is a literal; a COMPUTED delimiter is runtime-quoted with
+# \\Q…\\E (r9) and the empty delimiter raises like Trino's
+# INVALID_FUNCTION_ARGUMENT.
+def _split_fn(a, ctx):
+    if len(a) not in (2, 3):
+        return None
+    rest = f", {a[2]}" if len(a) == 3 else ""
+    if ctx.lit(a[1]) is not None:
+        return f"split({a[0]}, {_regex_delim(a[1], ctx)}{rest})"
+    err = ctx.requote("split: the delimiter must not be empty")
+    return _element_at([f"transform(array(({a[1]})), _sd -> "
+                        f"CASE WHEN length(_sd) = 0 THEN "
+                        f"CAST(raise_error({err}) AS ARRAY<STRING>) "
+                        f"ELSE split({a[0]}, {_regex_quote('_sd', ctx)}"
+                        f"{rest}) END)", "1"], ctx)
+
+
+# split_part (wave 20, divergence audit): Spark's same-named
+# builtin returns '' when the index is past the last field; Trino
+# returns NULL — a silent value divergence (and nullif('') would
+# corrupt genuinely empty fields like 'a,,b' part 2). Literal
+# delimiters lower to try_element_at over a literal-escaped
+# split, which yields NULL past the end and '' for real empty
+# fields. Negative indexes count from the end here (Trino rejects
+# them — this front end is permissive, never wrong-valued). A
+# COMPUTED delimiter (r9, formerly refused) uses Spark's native
+# LITERAL split_part guarded by a parts-count check — replace()
+# removes exactly split's non-overlapping occurrences, so
+# (len(s) - len(replace)) / len(d) + 1 is the field count and
+# indexes past it return Trino's NULL instead of ''.
+def _split_part_fn(a, ctx):
+    if len(a) != 3:
+        return None
+    if ctx.lit(a[1]) is not None:
+        return (f"try_element_at(split({a[0]}, {_regex_delim(a[1], ctx)}, "
+                f"-1), {a[2]})")
+    err = ctx.requote("split_part: the delimiter must not be empty")
+    return _element_at([
+        f"transform(array(named_struct("
+        f"'s', ({a[0]}), 'd', ({a[1]}), 'n', ({a[2]}))), _sp -> "
+        f"CASE WHEN length(_sp.d) = 0 THEN "
+        f"CAST(raise_error({err}) AS STRING) "
+        f"WHEN _sp.n > (length(_sp.s) - length(replace(_sp.s, "
+        f"_sp.d, {ctx.requote('')}))) div length(_sp.d) + 1 THEN NULL "
+        f"ELSE split_part(_sp.s, _sp.d, _sp.n) END)", "1"], ctx)
+
+
+# log family (wave 20, divergence audit): Trino follows Java
+# Math.log — ln(0) = -Infinity, ln(negative) = NaN — while Spark
+# returns NULL for any non-positive input (verified; sqrt/acos/
+# power/exp already agree on IEEE specials). The wrapper restores
+# the IEEE values; NULL in → NULL out (no CASE branch matches).
+def _log_fn(name: str):
+    def fn(a, ctx):
+        if len(a) != 1:
+            return None
+        return (f"element_at(transform(array(CAST(({a[0]}) "
+                f"AS DOUBLE)), _lg -> CASE WHEN _lg > 0 "
+                f"THEN {name}(_lg) "
+                "WHEN _lg = 0 THEN CAST('-Infinity' AS DOUBLE) "
+                "WHEN _lg < 0 THEN CAST('NaN' AS DOUBLE) END), 1)")
+    return fn
+
+
+# 2-arg log(b, x) = Math.log(x) / Math.log(b) in Trino; both ln()
+# calls get the IEEE wrapper above. (b = 1 makes the divisor 0.0 —
+# that lands in the documented double-division divergence.)
+def _log_base_fn(a, ctx):
+    if len(a) != 2:
+        return None
+    ln = _log_fn("ln")
+    return f"({ln([a[1]], ctx)} / {ln([a[0]], ctx)})"
+
+
+# array_min/array_max (wave 20, divergence audit): Trino returns
+# NULL when the array CONTAINS a null element; Spark skips nulls
+# and returns the min/max of the rest — silently different values.
+def _array_extreme_fn(name: str):
+    def fn(a, ctx):
+        if len(a) != 1:
+            return None
+        return (f"element_at(transform(array(({a[0]})), _am -> "
+                "CASE WHEN exists(_am, _ae -> _ae IS NULL) "
+                f"THEN NULL ELSE {name}(_am) END), 1)")
+    return fn
+
+
+# map_concat (wave 20, divergence audit): Trino keeps the value
+# from the LAST map holding a key; Spark's default dedup policy
+# ERRORS on any duplicate. Earlier maps are filtered to the keys
+# no later map holds, so the concat inputs are disjoint — last-wins
+# semantics without touching the session-wide dedup policy (which
+# would also relax map()/map_from_entries, where BOTH engines
+# reject duplicates).
+def _map_concat_fn(a, ctx):
+    if len(a) < 2:
+        return None
+    parts = []
+    for i, m in enumerate(a[:-1]):
+        later = " OR ".join(f"map_contains_key({x}, _mk)"
+                            for x in a[i + 1:])
+        parts.append(f"map_filter({m}, (_mk, _mv) -> NOT ({later}))")
+    parts.append(a[-1])
+    return f"map_concat({', '.join(parts)})"
+
+
+# wave 13 (r8). split_to_map(s, entryDelim, kvDelim) →
+# str_to_map — same argument order, but Spark's delimiters are
+# REGEXES where Trino's are literals, so literal delimiters are
+# escaped exactly like split(); computed delimiters (r9) are
+# runtime-quoted with \\Q…\\E like split()'s.
+def _split_to_map_fn(a, ctx):
+    if len(a) != 3:
+        return None
+    return (f"str_to_map({a[0]}, {_regex_delim(a[1], ctx)}, "
+            f"{_regex_delim(a[2], ctx)})")
+
+
+# split_to_multimap(s, entryDelim, kvDelim) (r10, was a silent
+# unresolved-routine): map<string, array<string>> — values keep
+# entry order, keys first-appearance order; an entry without
+# exactly one kvDelim errors like Trino. Pure HOF codegen: split
+# to (k, v) structs (the same literal-delimiter escaping as
+# split_to_map), then group by distinct keys with an ordered
+# filter per key — O(keys × entries) per row, fine for the short
+# header/qs strings the function exists for.
+def _split_to_multimap_fn(a, ctx):
+    if len(a) != 3:
+        return None
+    ed, kd = _regex_delim(a[1], ctx), _regex_delim(a[2], ctx)
+    err = ctx.requote("split_to_multimap: entry does not have exactly "
+                  "one key-value delimiter")
+    pairs = (
+        f"transform(split({a[0]}, {ed}), _me -> "
+        f"element_at(transform(array(split(_me, {kd})), _ps -> "
+        f"CASE WHEN size(_ps) = 2 THEN "
+        f"named_struct('k', element_at(_ps, 1), "
+        f"'v', element_at(_ps, 2)) "
+        f"ELSE named_struct('k', CAST(raise_error({err}) AS STRING), "
+        f"'v', '') END), 1))")
+    return _group_multimap(pairs)
+
+
+def _group_multimap(pairs: str) -> str:
+    """array<struct<k, v>> → map<k, array<v>>: values in entry
+    order, keys first-appearance order (shared by
+    split_to_multimap and multimap_from_entries)."""
+    return (
+        f"element_at(transform(array({pairs}), _mp -> "
+        f"element_at(transform(array(array_distinct("
+        f"transform(_mp, _pe -> _pe.k))), _mk -> "
+        f"map_from_arrays(_mk, transform(_mk, _kk -> "
+        f"transform(filter(_mp, _pe -> _pe.k <=> _kk), "
+        f"_pe -> _pe.v)))), 1)), 1)")
+
+
+# multimap_from_entries(array<row(K, V)>) (r10): the entries'
+# field NAMES are caller-defined, so each row is normalized to a
+# (k, v) struct POSITIONALLY via a singleton map_from_entries
+# (whose contract is field-order, not field-name), then grouped by
+# the shared multimap codegen. A NULL entry errors like Trino.
+def _multimap_from_entries_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    err = ctx.requote("multimap_from_entries: null entry")
+    pairs = (
+        f"transform(({a[0]}), _mm0 -> "
+        f"element_at(transform(array(map_from_entries(array("
+        f"IF(_mm0 IS NULL, raise_error({err}), _mm0)))), _mm -> "
+        f"named_struct('k', element_at(map_keys(_mm), 1), "
+        f"'v', element_at(map_values(_mm), 1))), 1))")
+    return _group_multimap(pairs)
+
+
+# map_union(m) (r10): aggregate union of maps. Trino documents an
+# ARBITRARY winner for duplicate keys; a deterministic engine
+# cannot be arbitrary, so this picks the SMALLEST (key, value)
+# entry per key — a legal instantiation that is stable across
+# partitionings and replays (AQE/speculation safe). Keys come out
+# in ascending order (Trino's map order is unspecified).
+def _map_union_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    return (
+        f"element_at(transform(array(array_sort(flatten("
+        f"collect_list(map_entries(({a[0]})))))), _ue -> "
+        f"element_at(transform(array(array_distinct("
+        f"transform(_ue, _e -> _e.key))), _uk -> "
+        f"map_from_arrays(_uk, transform(_uk, _kk -> "
+        f"element_at(transform(filter(_ue, _e -> _e.key <=> _kk), "
+        f"_e -> _e.value), 1)))), 1)), 1)")
+
+
+# HyperLogLog surface (r10): Trino's approx_set/merge/cardinality
+# triple maps onto Spark's Apache-DataSketches HLL builtins. The
+# SKETCH BINARIES differ between engines (airlift HLL vs
+# DataSketches) and so may the estimates — same approximate
+# contract, engine-specific values (the approx_distinct
+# precedent). cardinality(<sketch expr>) is detected structurally
+# (Spark's own cardinality is array/map-typed); merge() can only
+# ever see HLL here because qdigest_agg/tdigest_agg refuse at
+# creation, so mapping it to hll_union_agg is type-sound.
+def _cardinality_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    inner = a[0].strip()
+    if re.match(r"(?i)(hll_sketch_agg|hll_union_agg)\s*\(", inner):
+        return f"hll_sketch_estimate({inner})"
+    return None   # array/map cardinality — Spark builtin
+
+
+def _approx_set_fn(a, ctx):
+    if len(a) == 1:
+        return f"hll_sketch_agg({a[0]})"
+    if len(a) == 2:
+        # approx_set(x, e) — Trino's max-standard-error form.
+        # HLL error ≈ 1.04/sqrt(2^lgK), so e maps structurally to
+        # lgConfigK = ceil(log2((1.04/e)^2)), clamped to Spark's
+        # DataSketches range [4, 21] (Trino validates e itself to
+        # [0.0040625, 0.26] — same check here). Same
+        # approx-divergence class as the 1-arg form: sketch
+        # VALUES differ across engines, cardinality estimates are
+        # bounds-tested. Non-literal error bounds refuse by name.
+        import math
+        try:
+            e_val = float(a[1])
+        except ValueError:
+            raise TrinoSqlUnsupported(
+                "approx_set(x, e) requires a literal error bound "
+                "(the bound picks the sketch size at plan time)")
+        if not 0.0040625 <= e_val <= 0.26:
+            raise TrinoSqlUnsupported(
+                f"approx_set error bound {e_val} outside Trino's "
+                "[0.0040625, 0.26]")
+        lg_k = max(4, min(21, math.ceil(math.log2((1.04 / e_val) ** 2))))
+        return f"hll_sketch_agg({a[0]}, {lg_k})"
+    return None
+
+
+# qdigest/tdigest READ PATH (r11): the composed forms —
+# value_at_quantile(qdigest_agg(x), p), values_at_quantiles(
+# tdigest_agg(x), ps), quantile_at_value(qdigest_agg(x), v) —
+# lower structurally onto the raw column: the quantile lookups
+# ride Spark's approx_percentile (approx_percentile-class
+# divergence: sketch VALUES differ across engines; the estimate
+# is bounds-tested in tests/test_bounds.py), and the inverse
+# lookup is the exact INCLUSIVE CDF avg(x <= v). Convention note
+# (r11 review): at a value carrying large point mass the
+# inclusive-vs-exclusive rank convention dominates any sketch
+# error — Trino's qdigest behavior at such boundary values is
+# unverified offline, so this is a documented convention choice,
+# not a bounded-error claim. A digest NOT consumed in the same
+# expression refuses after the scan — there are no portable
+# qdigest/tdigest sketch bytes in Spark.
+def _digest_inner(caller: str, arg: str) -> str:
+    m = re.match(r"(?i)(qdigest_agg|tdigest_agg)\s*\(", arg)
+    if not m:
+        raise TrinoSqlUnsupported(
+            f"{caller}() over a pre-built qdigest/tdigest value is "
+            "not supported (no portable sketch bytes in Spark) — "
+            "compose with qdigest_agg(x)/tdigest_agg(x) directly, "
+            "or use approx_percentile")
+    close = _find_close(arg, m.end() - 1)
+    if arg[close + 1:].strip():
+        raise TrinoSqlUnsupported(
+            f"{caller}() over a digest expression is only "
+            "supported directly on qdigest_agg(x)/tdigest_agg(x)")
+    inner = [s.strip() for s in _split_top_level(arg[m.end():close])]
+    if len(inner) != 1:
+        raise TrinoSqlUnsupported(
+            f"{m.group(1)}() with weight/accuracy arguments is not "
+            "supported (Spark's percentile sketch is unweighted)")
+    return inner[0]
+
+
+def _vaq_fn(caller):
+    def fn(a, ctx):
+        if len(a) != 2:
+            return None
+        x = _digest_inner(caller, a[0])
+        return f"approx_percentile(({x}), ({a[1]}))"
+    return fn
+
+
+def _qav_fn(a, ctx):
+    if len(a) != 2:
+        return None
+    x = _digest_inner("quantile_at_value", a[0])
+    return (f"avg(IF(({x}) <= ({a[1]}), CAST(1 AS DOUBLE), "
+            f"CAST(0 AS DOUBLE)))")
+
+
+_OVER_RE = re.compile(r"\s*OVER(\s*\(|\s+[A-Za-z_])", re.IGNORECASE)
+
+
+# max(x, n) / min(x, n) (r10): Trino's top/bottom-n aggregate
+# forms returning array<T> (the 1-arg forms pass through to
+# Spark's own max/min). collect_list drops NULLs like Trino.
+# max(x, n) OVER (...) is legal in Trino but the collect_list
+# rewrite is aggregate-only — refuse the window form by name (r11)
+# instead of letting it die with a confusing analysis error.
+def _minmax_n(name: str, desc: bool):
+    order = "false" if desc else "true"
+
+    def fn(a, ctx):
+        if len(a) != 2:
+            return None
+        if _OVER_RE.match(ctx.code, ctx.end):
+            raise TrinoSqlUnsupported(
+                f"{name}(x, n) as a window function is not "
+                "supported (the top-n rewrite is aggregate-only; "
+                "use it in GROUP BY, or rank() + collect)")
+        return (f"slice(sort_array(collect_list(({a[0]})), {order}), "
+                f"1, ({a[1]}))")
+    return fn
+
+
+# parse_datetime(s, fmt): Trino takes a Joda-Time pattern; the
+# y/M/d/H/m/s/S/E/a core is identical in Java time, so a LITERAL
+# pattern built only of those passes through to to_timestamp.
+# Computed patterns refuse (can't validate the Joda-only letters),
+# and any other pattern letter refuses BY NAME (wave 20 — Joda
+# Z/z zone handling and x/w week fields differ from Java's; a
+# pass-through would silently re-interpret them).
+def _parse_datetime_fn(a, ctx):
+    if len(a) != 2:
+        return None
+    fmt = ctx.lit(a[1])
+    if fmt is None:
+        raise TrinoSqlUnsupported(
+            "parse_datetime() needs a literal format pattern")
+    bare = re.sub(r"'[^']*'", "", fmt)  # quoted literals are inert
+    bad = set(re.findall(r"[A-Za-z]", bare)) - set("yMdHmsSEa")
+    if bad:
+        raise TrinoSqlUnsupported(
+            f"parse_datetime: Joda pattern letters {sorted(bad)} "
+            "have no exact Java-pattern equivalent")
+    return f"to_timestamp({a[0]}, {a[1]})"
+
+
+# json_size(j, path): number of members of the object/array at
+# path, 0 for a scalar (Trino's contract), NULL for no match. The
+# '['/'{' probes compare ascii CODES (91/123) — a raw bracket
+# literal in masked code would corrupt later bracket-depth scans.
+def _json_size_fn(a, ctx):
+    if len(a) != 2:
+        return None
+    g = f"get_json_object({a[0]}, {a[1]})"
+    return (f"(CASE WHEN {g} IS NULL THEN NULL "
+            f"WHEN ascii(left({g}, 1)) = 91 "
+            f"THEN json_array_length({g}) "
+            f"WHEN ascii(left({g}, 1)) = 123 "
+            f"THEN size(json_object_keys({g})) "
+            f"ELSE 0 END)")
+
+
+# wave 14 (r8): Trino's greatest/least return NULL when ANY
+# argument is NULL; Spark's skip NULLs — a silent value divergence
+# if passed through. The guard re-evaluates arguments (scalar
+# expressions; cost negligible vs silent wrong answers).
+def _null_strict_fn(name):
+    def fn(a, ctx):
+        if len(a) < 2:
+            return None
+        checks = " OR ".join(f"({x}) IS NULL" for x in a)
+        return (f"(CASE WHEN {checks} THEN NULL "
+                f"ELSE {name}({', '.join(a)}) END)")
+    return fn
+
+
+# Trino truncate(x) rounds toward zero keeping the DOUBLE type;
+# Spark floor/ceil return BIGINT, so re-cast. The 2-arg decimal-
+# scale form truncate(x, n) scales by 10^n, truncates toward zero,
+# and scales back — the same multiply/trunc/divide sequence Trino's
+# own DOUBLE implementation performs, so the floating results agree
+# (|x|·10^n must fit a BIGINT, as in Trino).
+def _truncate_fn(a, ctx):
+    if len(a) == 1:
+        return (f"CAST(CASE WHEN ({a[0]}) < 0 THEN ceil({a[0]}) "
+                f"ELSE floor({a[0]}) END AS DOUBLE)")
+    if len(a) == 2:
+        scaled = f"(({a[0]}) * power(10, ({a[1]})))"
+        return (f"CAST(CASE WHEN ({a[0]}) < 0 THEN ceil({scaled}) "
+                f"ELSE floor({scaled}) END / power(10, ({a[1]})) "
+                "AS DOUBLE)")
+    return None
+
+
+def _hamming_fn(a, ctx):
+    if len(a) != 2:
+        return None
+    x, y = f"({a[0]})", f"({a[1]})"
+    return (
+        f"(CASE WHEN length({x}) <> length({y}) THEN "
+        "CAST(raise_error('hamming_distance: the input strings must "
+        "have the same length') AS BIGINT) "
+        f"WHEN length({x}) = 0 THEN CAST(0 AS BIGINT) "
+        f"ELSE CAST(size(filter(sequence(1, length({x})), _hp -> "
+        f"substring({x}, _hp, 1) <> substring({y}, _hp, 1))) "
+        "AS BIGINT) END)")
+
+
+def _bit_count_fn(a, ctx):
+    # Trino bit_count(x, bits) counts ones in the bits-wide two's
+    # complement and VALIDATES x fits; Spark's is 64-bit 1-arg.
+    if len(a) != 2 or not re.fullmatch(r"\d+", a[1].strip()):
+        return None
+    b = int(a[1])
+    if not 2 <= b <= 64:
+        return None
+    x = f"({a[0]})"
+    if b == 64:
+        return f"CAST(bit_count({x}) AS BIGINT)"
+    lo, hi = -(1 << (b - 1)), (1 << (b - 1)) - 1
+    mask = (1 << b) - 1
+    return (
+        f"(CASE WHEN {x} BETWEEN {lo} AND {hi} "
+        f"THEN CAST(bit_count({x} & {mask}) AS BIGINT) "
+        f"ELSE CAST(raise_error('bit_count: value must be "
+        f"representable in {b} bits') AS BIGINT) END)")
+
+
+def _ngrams_fn(a, ctx):
+    # n > cardinality yields the single whole-array n-gram (Trino).
+    if len(a) != 2 or not re.fullmatch(r"\d+", a[1].strip()):
+        return None
+    n = int(a[1])
+    if n < 1:
+        return None
+    return (
+        f"element_at(transform(array(({a[0]})), _na -> "
+        f"CASE WHEN size(_na) <= {n} THEN array(_na) "
+        f"ELSE transform(sequence(1, size(_na) - {n} + 1), "
+        f"_ni -> slice(_na, _ni, {n})) END), 1)")
+
+
+def _json_array_contains_fn(a, ctx):
+    if len(a) != 2:
+        return None
+    v = a[1].strip()
+    if re.fullmatch(r"-?\d+(\.\d+)?", v):
+        et, cast_v = "double", f"CAST({v} AS DOUBLE)"
+    elif re.fullmatch(r"'(?:[^']|'')*'", v) or re.fullmatch(
+            "'\x00\\d+\x00'", v):   # string literal (masked form)
+        et, cast_v = "string", v
+    elif v.upper() in ("TRUE", "FALSE"):
+        et, cast_v = "boolean", v.lower()
+    else:
+        raise TrinoSqlUnsupported(
+            "json_array_contains with a non-literal search value "
+            "(the element type drives the JSON decode)")
+    return (
+        f"element_at(transform(array(from_json(({a[0]}), "
+        f"'array<{et}>')), _ja -> CASE WHEN _ja IS NULL THEN NULL "
+        f"ELSE coalesce(array_contains(_ja, {cast_v}), false) END), "
+        "1)")
+
+
+def _cosine_similarity_fn(a, ctx):
+    # Trino's array form (the map-vector form stays unsupported —
+    # it would need sparse-map alignment, and Spark's analyzer
+    # rejects the map inputs loudly anyway).
+    if len(a) != 2:
+        return None
+    x, y = f"({a[0]})", f"({a[1]})"
+    def ssq(v):
+        return (f"aggregate(transform({v}, _cx -> _cx * _cx), "
+                "CAST(0 AS DOUBLE), (_ca, _cv) -> _ca + _cv)")
+    return (
+        f"(aggregate(zip_with({x}, {y}, (_cx, _cy) -> _cx * _cy), "
+        "CAST(0 AS DOUBLE), (_ca, _cv) -> _ca + _cv) "
+        f"/ (sqrt({ssq(x)}) * sqrt({ssq(y)})))")
+
+
+def _named_unsupported(name, why):
+    def fn(a, ctx):
+        raise TrinoSqlUnsupported(f"{name}() is not supported ({why})")
+    return fn
+
+
+# approx_most_frequent(buckets, value, capacity) → the EXACT top-
+# `buckets` value→count map (count DESC, value ASC tie-break) — an
+# exact answer satisfies every error bound the Trino sketch
+# permits, and is deterministic where the sketch is not. The
+# capacity argument is the sketch's memory knob and has no effect
+# on an exact computation; buckets must be a literal so the slice
+# bound is plan-constant. Collect buffers bind once as lambda
+# variables (the wave-15 rule).
+def _approx_most_frequent_fn(a, ctx):
+    if len(a) != 3:
+        return None
+    if not re.fullmatch(r"\d+", a[0].strip()):
+        raise TrinoSqlUnsupported(
+            "approx_most_frequent: the bucket count must be a "
+            "literal integer")
+    return (
+        f"element_at(transform(array(collect_list({a[1]})), _hl -> "
+        "map_from_entries(slice(array_sort("
+        "transform(array_distinct(_hl), _hv -> "
+        "struct(_hv AS k, CAST(size(filter(_hl, _hx -> _hx <=> _hv)) "
+        "AS BIGINT) AS c)), "
+        "(_hx, _hy) -> CASE WHEN _hx.c > _hy.c THEN -1 "
+        "WHEN _hx.c < _hy.c THEN 1 WHEN _hx.k < _hy.k THEN -1 "
+        "WHEN _hx.k > _hy.k THEN 1 ELSE 0 END), "
+        f"1, {a[0].strip()}))), 1)")
+
+
+# normalize(s[, form]) — UAX #15 Unicode normalization. Spark SQL
+# has no builtin, so this lowers onto the session-registered
+# trino_normalize pandas UDF (trino_compat.register_unicode_
+# normalize; execute_trino and the governed SQL path register it
+# on demand). The form is a bare keyword in Trino's grammar, not a
+# string — anything outside the four standard forms is refused.
+def _normalize_fn(a, ctx):
+    if len(a) == 1:
+        form = "NFC"
+    elif len(a) == 2 and re.fullmatch(r"(?i)NFK?[CD]", a[1].strip()):
+        form = a[1].strip().upper()
+    else:
+        raise TrinoSqlUnsupported(
+            "normalize: the form must be the bare keyword NFC, NFD, "
+            "NFKC or NFKD")
+    return f"trino_normalize({a[0]}, '{form}')"
+
+
+# chr(cp) — the Unicode codepoint character. Spark's char() wraps
+# at 256 (chr(8364) would silently emit \x04 instead of '€'), so a
+# literal codepoint becomes the exact character, masked into the
+# stash like any source literal (so the scanner can never mis-split
+# on a synthesized quote/comma, and _unmask applies the
+# same backslash contract as user literals). A non-literal
+# codepoint lowers to UTF-8 byte construction — pure arithmetic +
+# decode, whole-stage codegen, the codepoint bound once via the
+# let-binding transform. Out-of-range codepoints yield NULL/garbage
+# where Trino raises (documented divergence; Trino-valid inputs
+# agree exactly).
+def _chr_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    arg = a[0].strip()
+    if re.fullmatch(r"\d+", arg):
+        cp = int(arg)
+        if not (0 <= cp <= 0x10FFFF) or 0xD800 <= cp <= 0xDFFF:
+            raise TrinoSqlUnsupported(
+                f"chr({cp}): not a valid Unicode codepoint")
+        return ctx.requote(chr(cp))
+    b = ("CASE WHEN _cp < 128 THEN lpad(hex(_cp), 2, '0') "
+         "WHEN _cp < 2048 THEN hex(192 + _cp DIV 64) "
+         "|| hex(128 + _cp % 64) "
+         "WHEN _cp < 65536 THEN hex(224 + _cp DIV 4096) "
+         "|| hex(128 + _cp DIV 64 % 64) || hex(128 + _cp % 64) "
+         "ELSE hex(240 + _cp DIV 262144) "
+         "|| hex(128 + _cp DIV 4096 % 64) "
+         "|| hex(128 + _cp DIV 64 % 64) || hex(128 + _cp % 64) END")
+    return (f"element_at(transform(array(CAST(({arg}) AS BIGINT)), "
+            f"_cp -> decode(unhex({b}), 'UTF-8')), 1)")
+
+
+def _combinations_fn(a, ctx):
+    # n-element subsets in Trino's index-lexicographic order; the
+    # nested index transforms stay whole-stage codegen. n is
+    # literal 1..3 here (Trino caps at 5; 4-5 raise named).
+    if len(a) != 2 or not re.fullmatch(r"\d+", a[1].strip()):
+        return None
+    n = int(a[1])
+    arr = f"({a[0]})"
+    if n == 1:
+        return f"transform({arr}, _c0 -> array(_c0))"
+    # size < n yields a typed empty array-of-arrays (transform of
+    # an empty slice — sequence(1, n<1) would DESCEND, the pinned
+    # r8 lesson, so every sequence below is CASE-guarded).
+    empty = "transform(slice(_ca, 1, 0), _x -> array(_x))"
+    if n == 2:
+        return (
+            f"element_at(transform(array({arr}), _ca -> "
+            f"CASE WHEN size(_ca) < 2 THEN {empty} ELSE "
+            "flatten(transform(sequence(1, size(_ca) - 1), _i -> "
+            "transform(sequence(_i + 1, size(_ca)), _j -> "
+            "array(_ca[_i - 1], _ca[_j - 1])))) END), 1)")
+    if n == 3:
+        return (
+            f"element_at(transform(array({arr}), _ca -> "
+            f"CASE WHEN size(_ca) < 3 THEN {empty} ELSE "
+            "flatten(flatten(transform(sequence(1, size(_ca) - 2), "
+            "_i -> transform(sequence(_i + 1, size(_ca) - 1), _j -> "
+            "transform(sequence(_j + 1, size(_ca)), _k -> "
+            "array(_ca[_i - 1], _ca[_j - 1], _ca[_k - 1])))))) "
+            "END), 1)")
+    raise TrinoSqlUnsupported(
+        f"combinations(arr, {n}) — supported for n in 1..3 (the "
+        "expansion is C(size, n); enumerate larger subsets with an "
+        "explicit join)")
+
+
+# Trino array_agg KEEPS NULL elements; Spark collect_list drops
+# them — the faithful form collects struct-wrapped values (struct
+# fields preserve NULLs) and unwraps. The ORDER BY variant sorts the
+# (key, value) structs before unwrapping (array_sort orders by the
+# first field); a bare DESC on a single key reverses. DISTINCT
+# raises: collect_set also drops NULLs and Trino's dedup keeps one.
+def _array_agg_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    arg = a[0]
+    dm = re.match(r"DISTINCT\b\s*(.+)$", arg, re.IGNORECASE | re.DOTALL)
+    if dm:
+        rest = dm.group(1)
+        om2 = re.match(r"(.+?)\s+ORDER\s+BY\s+(.+?)(?:\s+(ASC|DESC))?$",
+                       rest, re.IGNORECASE | re.DOTALL)
+        # collect_set drops NULLs (Trino's dedup keeps one), so
+        # dedup the NULL-preserving struct-collect instead.
+        dedup = ("array_distinct(transform(collect_list("
+                 "named_struct('v', {})), s -> s.v))")
+        if om2 is None:
+            return dedup.format(rest)
+        val, key, direction = (om2.group(1), om2.group(2),
+                               (om2.group(3) or "ASC").upper())
+        if key.strip() != val.strip():
+            raise TrinoSqlUnsupported(
+                "array_agg(DISTINCT x ORDER BY y) with y != x: "
+                "dedup + foreign-key ordering — rewrite explicitly")
+        # Sorting AFTER dedup: Spark's array_sort is ASC NULLS LAST,
+        # matching Trino's default null ordering; reverse() gives
+        # DESC NULLS FIRST — also Trino's DESC default.
+        body = f"array_sort({dedup.format(val)})"
+        return f"reverse({body})" if direction == "DESC" else body
+    if re.search(r"\bNULLS\s+(FIRST|LAST)\b", arg, re.IGNORECASE):
+        raise TrinoSqlUnsupported(
+            "array_agg(... ORDER BY ... NULLS FIRST/LAST): explicit "
+            "null placement in the struct sort — rewrite explicitly")
+    om = re.match(r"(.+?)\s+ORDER\s+BY\s+(.+?)(?:\s+(ASC|DESC))?$",
+                  arg, re.IGNORECASE | re.DOTALL)
+    if not om:
+        return (f"transform(collect_list(named_struct('v', {arg})), "
+                "s -> s.v)")
+    val, key, direction = om.group(1), om.group(2), (om.group(3) or "ASC")
+    if "," in key:
+        raise TrinoSqlUnsupported(
+            "array_agg(... ORDER BY k1, k2): multi-key ordering — "
+            "rewrite with a struct sort explicitly")
+    # Null sort keys (r7): Spark's struct ordering puts null fields
+    # FIRST, Trino sorts nulls as LARGER than any value (NULLS LAST
+    # ascending; FIRST after the DESC reverse) — lead with an
+    # is-null discriminator so the Trino placement wins.
+    body = (f"array_sort(collect_list(named_struct("
+            f"'n', {key} IS NULL, 'k', {key}, 'v', {val})))")
+    if direction.upper() == "DESC":
+        body = f"reverse({body})"
+    return f"transform({body}, s -> s.v)"
+
+
+# SQL/JSON json_value with a LITERAL path. Plain member/subscript
+# chains delegate to get_json_object for the scalar TEXT (exact
+# source slices — no number re-canonicalization), gated by a
+# VARIANT scalar-ness check: Trino's json_value ERRORS on an
+# array/object item, which the default NULL ON ERROR turns into
+# NULL, while get_json_object would return the item's JSON text
+# (r10 fix of a silent divergence). Chains with one [*] and an
+# optional ?(...) filter lower through _jsonpath_wildcard_matches:
+# exactly one matched item → its scalar value (strings unquoted,
+# numbers/booleans in to_json canonical text), zero → NULL ON
+# EMPTY, several or a non-scalar item → error → NULL ON ERROR.
+# A non-literal path or an explicit handler clause raises.
+def _json_value_scalar(vexpr: str, text: str | None = None) -> str:
+    """Render the VARIANT item ``vexpr`` the way json_value does:
+    NULL for SQL NULL / JSON null / array / object; the exact
+    ``text`` (when given — the get_json_object slice) or the
+    to_json canonical text otherwise, unquoted for strings."""
+    out = text if text is not None else (
+        "CASE WHEN schema_of_variant(_mv) = 'STRING' "
+        "THEN try_cast(_mv AS STRING) ELSE to_json(_mv) END")
+    return (f"element_at(transform(array({vexpr}), _mv -> "
+            f"CASE WHEN _mv IS NULL THEN NULL "
+            f"WHEN schema_of_variant(_mv) = 'VOID' THEN NULL "
+            f"WHEN schema_of_variant(_mv) LIKE 'ARRAY%' "
+            f"OR schema_of_variant(_mv) LIKE 'OBJECT%' "
+            f"OR schema_of_variant(_mv) LIKE 'STRUCT%' THEN NULL "
+            f"ELSE {out} END), 1)")
+
+
+def _json_path_fn(a, ctx):
+    if len(a) != 2:
+        return None
+    lit = ctx.lit(a[1])
+    if lit is None:
+        # r9 (advice close-out): name the clause when the refusal
+        # is an explicit ON EMPTY / ON ERROR / RETURNING — with the
+        # DEFAULT clauses (NULL ON EMPTY, NULL ON ERROR) the
+        # get_json_object lowering is faithful even in strict mode
+        # (Trino turns the strict-mode structural error into NULL);
+        # an explicit ERROR/DEFAULT handler would change behavior,
+        # so it must refuse VISIBLY rather than lower silently.
+        cm = re.search(r"\bON\s+(?:EMPTY|ERROR)\b|\bRETURNING\b"
+                       r"|\bPASSING\b", a[1], re.IGNORECASE)
+        if cm:
+            raise TrinoSqlUnsupported(
+                f"json_value with an explicit {cm.group(0).upper()} "
+                "clause — only the defaults (NULL ON EMPTY, NULL ON "
+                "ERROR) lower faithfully; ERROR/DEFAULT handlers "
+                "would need runtime raise semantics Spark's "
+                "get_json_object cannot express")
+        raise TrinoSqlUnsupported(
+            "json_value/json_query need a literal JSON path")
+    path = lit.strip()
+    strict = bool(re.match(r"strict\b", path, re.IGNORECASE))
+    path = re.sub(r"^(?:lax|strict)\s+", "", path,
+                  flags=re.IGNORECASE).strip()
+    if re.fullmatch(r"\$(?:\.\w+|\[\d+\])*", path):
+        # r7: a strict path that is a plain member/subscript chain
+        # differs from lax ONLY in erroring on structural mismatch,
+        # and json_value's default NULL ON ERROR maps that error to
+        # the same NULL the lax empty sequence produces — one
+        # lowering serves both modes.
+        head = (f"variant_get(try_parse_json({a[0]}), "
+                f"{ctx.requote(path)}, 'variant')")
+        return _json_value_scalar(
+            head, text=f"get_json_object({a[0]}, {ctx.requote(path)})")
+    # wildcard/[last]/filter paths: the helper carries the full
+    # strict semantics (r11 — no auto-wrap, structural errors →
+    # NULL matches → NULL ON ERROR, strict filter atoms).
+    matches = _jsonpath_wildcard_matches(a[0], path, ctx.requote,
+                                         "json_value", strict=strict)
+    if matches is None:
+        raise TrinoSqlUnsupported(
+            "json_value path with item methods, several filters, "
+            "or a filter not attached to a [*] step — plain "
+            "member/subscript chains or [*] chains with at most "
+            "one (possibly compound/parenthesized/negated) "
+            "comparison-or-exists filter are the supported "
+            "surface")
+    one = (f"element_at(transform(array({matches}), _ms -> "
+           f"CASE WHEN _ms IS NULL OR size(_ms) <> 1 THEN NULL "
+           f"ELSE element_at(_ms, 1) END), 1)")
+    return _json_value_scalar(one)
+
+
+# json_exists (r10): TRUE iff the path selects at least one item.
+# A JSON null item EXISTS (VOID variant, non-NULL); a missing
+# member is the lax empty sequence → FALSE; malformed JSON input
+# is an input-conversion error → FALSE (the default FALSE ON
+# ERROR); a NULL document propagates NULL. Strict mode: [*] over
+# a non-array is a structural ERROR → FALSE ON ERROR (the helper's
+# strict flag — NOT lax auto-wrap, which would return TRUE);
+# strict missing members agree under the default handler (error →
+# FALSE, same observable as the lax empty sequence), and r11 makes
+# the !/exists filter connectives strict-aware too (missing member
+# → UNKNOWN inside the filter, so !(...) drops where lax keeps).
+def _json_exists_fn(a, ctx):
+    if len(a) != 2:
+        return None
+    lit = ctx.lit(a[1])
+    if lit is None:
+        cm = re.search(r"\b(?:TRUE|FALSE|UNKNOWN|ERROR)\s+ON\s+"
+                       r"ERROR\b|\bPASSING\b", a[1], re.IGNORECASE)
+        if cm:
+            raise TrinoSqlUnsupported(
+                f"json_exists with an explicit {cm.group(0).upper()}"
+                " clause — only the default (FALSE ON ERROR) "
+                "lowers faithfully")
+        raise TrinoSqlUnsupported(
+            "json_exists needs a literal JSON path")
+    strict = bool(re.match(r"strict\b", lit.strip(), re.IGNORECASE))
+    path = re.sub(r"^(?:lax|strict)\s+", "", lit.strip(),
+                  flags=re.IGNORECASE).strip()
+    if re.fullmatch(r"\$(?:\.\w+|\[\d+\])*", path):
+        found = (f"variant_get(try_parse_json({a[0]}), "
+                 f"{ctx.requote(path)}, 'variant') IS NOT NULL")
+    else:
+        matches = _jsonpath_wildcard_matches(a[0], path, ctx.requote,
+                                             "json_exists",
+                                             strict=strict)
+        if matches is None:
+            raise TrinoSqlUnsupported(
+                "json_exists path with item methods, several "
+                "filters, or a filter not attached to a [*] step "
+                "— plain chains or [*] chains with at most one "
+                "filter are the supported surface")
+        found = (f"element_at(transform(array({matches}), _ms -> "
+                 f"coalesce(size(_ms), 0) > 0), 1)")
+    return (f"(CASE WHEN ({a[0]}) IS NULL THEN NULL "
+            f"ELSE {found} END)")
+
+
+# json_query (r9, extended r10): returns JSON TEXT (KEEP QUOTES
+# default — string items stay quoted, so get_json_object's scalar
+# unquoting is NOT faithful here). Lowered through Spark's VARIANT
+# type: to_json(variant_get(parse_json(x), path)) reproduces exact
+# JSON item text. [*] chains (any number of steps) go through
+# _jsonpath_wildcard_matches (lax auto-wrap + member unwrap,
+# strict error semantics, full ?(...) predicate grammar); the
+# .size()/.type()/.double() terminal methods render the items.
+# All three wrapper forms:
+#   WITHOUT (default): one item → its text; empty/multi → NULL
+#     (NULL ON EMPTY / NULL ON ERROR defaults);
+#   WITH [UNCONDITIONAL]: always '[items…]', empty → NULL;
+#   WITH CONDITIONAL: single array/object item bare, else wrapped.
+# Other item methods and non-default clauses keep the named error.
+def _json_query_fn(a, ctx):
+    if len(a) != 2:
+        return None
+    wm = _JSON_ARG_WRAPPER_RE.match(a[1].strip())
+    lit = ctx.lit(wm.group("ph")) if wm else None
+    if lit is None:
+        raise TrinoSqlUnsupported(
+            "json_query needs a literal JSON path (QUOTES/ON EMPTY/"
+            "ON ERROR clauses beyond the defaults are unsupported)")
+    wrapper = ("without" if not wm.group("wrap")
+               else "cond" if wm.group("cond") else "with")
+    strict = bool(re.match(r"strict\b", lit.strip(), re.IGNORECASE))
+    path = re.sub(r"^(?:lax|strict)\s+", "", lit.strip(),
+                  flags=re.IGNORECASE)
+    # terminal .size()/.type() item methods (r10): strip the
+    # method and render the item accordingly — size() is the array
+    # element count (1 for any other item, lax); type() is the
+    # SQL/JSON type word as a quoted JSON string (KEEP QUOTES —
+    # Spark's VOID variant for JSON null makes "null" faithful);
+    # a missing member stays NULL (→ ON EMPTY) for both.
+    sm = re.fullmatch(
+        r"(?P<base>.*?)\s*"
+        r"\.(?P<meth>size|type|double|ceiling|floor|abs)\(\)\s*",
+        path, re.DOTALL)
+    size_of = None
+    meth = sm.group("meth") if sm else None
+    if sm:
+        path = sm.group("base")
+        if meth in ("ceiling", "floor", "abs"):
+            # numeric item methods (r11): number items only — any
+            # other item is an error → NULL render → whole-result
+            # NULL through the .double() channel below.
+            def size_of(vexpr, _m=meth):
+                return _jsonpath_numeric_method_render(vexpr, _m)
+        elif meth == "double":
+            # .double() (r10): number/numeric-string items render
+            # as the double's canonical text; any other item is a
+            # CONVERSION error (not structural — lax does not
+            # suppress it), so the renderer yields NULL and the
+            # wildcard aggregation below nulls the WHOLE result
+            # (ON ERROR default) instead of skipping the item.
+            size_of = _jsonpath_double_render
+        elif meth == "size":
+            def size_of(vexpr):   # noqa: E731-like rebind — closure
+                return (f"element_at(transform(array({vexpr}), _jq -> "
+                        f"CASE WHEN _jq IS NULL THEN NULL "
+                        f"WHEN schema_of_variant(_jq) LIKE 'ARRAY%' "
+                        f"THEN CAST(size(try_cast(_jq AS "
+                        f"ARRAY<VARIANT>)) AS STRING) "
+                        f"ELSE '1' END), 1)")
+        else:
+            def size_of(vexpr):
+                word = _variant_type_word("_jq", quoted=True)
+                return (
+                    f"element_at(transform(array({vexpr}), _jq -> "
+                    f"CASE WHEN _jq IS NULL THEN NULL "
+                    f"ELSE {word} END), 1)")
+    seq_meths = ("double", "ceiling", "floor", "abs")
+    plain = re.fullmatch(r"\$(?:\.\w+|\[\d+\])*", path)
+    if plain and meth not in seq_meths:
+        vexpr = (f"variant_get(try_parse_json({a[0]}), "
+                 f"{ctx.requote(path)}, 'variant')")
+        item = size_of(vexpr) if size_of else f"to_json({vexpr})"
+        if wrapper == "without":
+            return item
+        tail_case = (
+            "CASE WHEN _ji IS NULL THEN NULL "
+            "WHEN startswith(_ji, '[') OR startswith(_ji, '{') "
+            "THEN _ji ELSE concat('[', _ji, ']') END"
+            if wrapper == "cond" else
+            "CASE WHEN _ji IS NULL THEN NULL "
+            "ELSE concat('[', _ji, ']') END")
+        return (f"element_at(transform(array({item}), "
+                f"_ji -> {tail_case}), 1)")
+    if plain:
+        # plain chain + .double(): route through the sequence
+        # machinery — lax method application unwraps an array item
+        # one level, so the method may yield SEVERAL items and the
+        # wrapper rules must see all of them.
+        vexpr = (f"variant_get(try_parse_json({a[0]}), "
+                 f"{ctx.requote(path)}, 'variant')")
+        matches_v = f"filter(array({vexpr}), _jm0 -> _jm0 IS NOT NULL)"
+    else:
+        matches_v = _jsonpath_wildcard_matches(
+            a[0], path, ctx.requote, "json_query", strict=strict)
+    if matches_v is not None:
+        # head[*] ?(filter)? tail via the shared VARIANT pipeline
+        # (lax auto-wrap, exact-K3 filter, per-element tail); the
+        # matched items render to JSON text (or the .size()/
+        # .type()/.double() method result) before the wrapper
+        # aggregation.
+        if meth in seq_meths and not strict:
+            # SQL/JSON lax METHOD APPLICATION unwraps arrays one
+            # level before the method; strict applies the method
+            # to the item directly (array → conversion error).
+            matches_v = _jsonpath_unwrap(matches_v, "_jd")
+        elem = size_of("_je") if size_of else "to_json(_je)"
+        matches = f"transform({matches_v}, _je -> {elem})"
+        if meth in seq_meths:
+            # any NULL render = a conversion error → NULL result
+            matches = (f"element_at(transform(array({matches}), "
+                       f"_md -> CASE WHEN _md IS NULL "
+                       f"OR exists(_md, _x -> _x IS NULL) "
+                       f"THEN NULL ELSE _md END), 1)")
+        if wrapper == "with":
+            agg = ("CASE WHEN _m IS NULL OR size(_m) = 0 THEN NULL "
+                   "ELSE concat('[', array_join(_m, ','), ']') END")
+        elif wrapper == "cond":
+            agg = ("CASE WHEN _m IS NULL OR size(_m) = 0 THEN NULL "
+                   "WHEN size(_m) = 1 AND "
+                   "(startswith(element_at(_m, 1), '[') OR "
+                   "startswith(element_at(_m, 1), '{')) "
+                   "THEN element_at(_m, 1) "
+                   "ELSE concat('[', array_join(_m, ','), ']') END")
+        else:
+            agg = ("CASE WHEN _m IS NULL OR size(_m) <> 1 "
+                   "THEN NULL ELSE element_at(_m, 1) END")
+        return (f"element_at(transform(array({matches}), "
+                f"_m -> {agg}), 1)")
+    raise TrinoSqlUnsupported(
+        "json_query path with item methods other than "
+        ".size()/.type()/.double()/.ceiling()/.floor()/.abs(), "
+        "several filters, or a filter "
+        "not attached to a [*] step — member/subscript chains "
+        "with any number of [*] steps and at most one (possibly "
+        "compound/parenthesized/negated) comparison-or-exists "
+        "filter are the supported surface")
+
+
+# Trino date_format/date_parse use MySQL %-patterns; Spark's
+# date_format/to_timestamp take Java patterns.
+def _datefmt(spark_name):
+    def fn(a, ctx):
+        if len(a) != 2:
+            return None
+        lit = ctx.lit(a[1])
+        if lit is None:
+            raise TrinoSqlUnsupported(
+                f"{spark_name}: non-literal %-pattern cannot be translated")
+        if "%" not in lit:
+            return None  # already a Java pattern (or pure literal)
+        return f"{spark_name}({a[0]}, {ctx.requote(_mysql_fmt_to_java(lit))})"
+    return fn
+
+
+# ---- wave 16 (r8): base/byte-order conversion, occurrence
+# positions, durations, time-zone parts, interval→ms, Wilson
+# intervals, binary-returning digests. Inputs referenced more than
+# once are bound as lambda variables (the transform(array(x), …)
+# let-binding) so projection collapse can't re-inline them.
+# regexp_position start/occurrence forms (r9, formerly refused).
+# 3-arg: search the suffix, re-offset the hit. 4-arg: replay
+# matcher.find() — each round finds the next match at/after the
+# cursor, then advances the cursor past the match (max(len, 1) so
+# empty matches still advance), `occurrence` rounds via an
+# aggregate fold over sequence(1, occ). Anchors (^) see the
+# suffix, not the original string — the one documented divergence
+# of the substring approach.
+def _regexp_position_fn(a, ctx):
+    if len(a) == 2:
+        return ("element_at(transform(array(regexp_instr("
+                f"{a[0]}, {a[1]})), _rp -> "
+                "CASE WHEN _rp = 0 THEN -1 "
+                "ELSE CAST(_rp AS INT) END), 1)")
+    if len(a) not in (3, 4):
+        return None
+    err = ctx.requote(
+        "regexp_position: start and occurrence must be positive "
+        "(Trino INVALID_FUNCTION_ARGUMENT)")
+    if len(a) == 3:
+        return (
+            f"element_at(transform(array(named_struct("
+            f"'s', ({a[0]}), 'st', CAST(({a[2]}) AS INT))), _rs -> "
+            f"CASE WHEN _rs.st < 1 THEN "
+            f"CAST(raise_error({err}) AS INT) "
+            f"ELSE element_at(transform(array(regexp_instr("
+            f"substring(_rs.s, _rs.st), {a[1]})), _rp -> "
+            f"CASE WHEN _rp = 0 THEN -1 "
+            f"ELSE CAST(_rp AS INT) + _rs.st - 1 END), 1) END), 1)")
+    step = (
+        f"element_at(transform(array(CAST(regexp_instr("
+        f"substring(_rs.s, _ra.pos), {a[1]}) AS INT)), _rm -> "
+        "IF(_rm = 0, named_struct('pos', _ra.pos, "
+        "'res', CAST(-1 AS INT), 'dead', true), "
+        "named_struct('pos', CAST(_rm + _ra.pos - 1 + "
+        "greatest(length(regexp_extract(substring(_rs.s, "
+        f"CAST(_rm + _ra.pos - 1 AS INT)), {a[1]}, 0)), 1) AS INT), "
+        "'res', CAST(_rm + _ra.pos - 1 AS INT), 'dead', false))"
+        "), 1)")
+    return (
+        f"element_at(transform(array(named_struct("
+        f"'s', ({a[0]}), 'st', CAST(({a[2]}) AS INT), "
+        f"'oc', CAST(({a[3]}) AS INT))), _rs -> "
+        f"CASE WHEN _rs.st < 1 OR _rs.oc < 1 THEN "
+        f"CAST(raise_error({err}) AS INT) "
+        f"ELSE aggregate(sequence(1, _rs.oc), "
+        f"named_struct('pos', _rs.st, 'res', CAST(-1 AS INT), "
+        f"'dead', false), "
+        f"(_ra, _ri) -> IF(_ra.dead, _ra, {step}), "
+        f"_ra -> _ra.res) END), 1)")
+
+
+def _parse_duration_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    lit = ctx.lit(a[0])
+    if lit is not None:
+        m = re.fullmatch(r"\s*(\d+(?:\.\d+)?)\s*(ns|us|ms|s|m|h|d)\s*",
+                         lit)
+        if not m:
+            raise TrinoSqlUnsupported(
+                f"parse_duration: unparsable duration {lit!r}")
+        mult = {"ns": 1e-9, "us": 1e-6, "ms": 1e-3, "s": 1.0,
+                "m": 60.0, "h": 3600.0, "d": 86400.0}[m.group(2)]
+        secs = round(float(m.group(1)) * mult, 6)
+        return (f"make_dt_interval(0, 0, 0, "
+                f"CAST({secs} AS DECIMAL(18, 6)))")
+    # Column path (r10, formerly refused): the same airlift
+    # Duration grammar evaluated in codegen — regexp_extract the
+    # magnitude and unit, CASE the unit to its seconds factor
+    # (identical table to the literal fold above), NULL in → NULL
+    # out, a non-null non-conforming string errors like Trino.
+    pat = ctx.requote(r"^\s*(\d+(?:\.\d+)?)\s*(ns|us|ms|s|m|h|d)\s*$")
+    units = (("ns", "1.0e-9"), ("us", "1.0e-6"), ("ms", "1.0e-3"),
+             ("s", "1.0"), ("m", "60.0"), ("h", "3600.0"),
+             ("d", "86400.0"))
+    mult = ("CASE _pd.u " + " ".join(
+        f"WHEN {ctx.requote(u)} THEN {f}" for u, f in units) + " END")
+    err = ctx.requote("parse_duration: unparsable duration: ")
+    src = f"CAST(({a[0]}) AS STRING)"
+    return (
+        f"element_at(transform(array(named_struct("
+        f"'d', {src}, "
+        f"'n', try_cast(regexp_extract({src}, {pat}, 1) AS DOUBLE), "
+        f"'u', regexp_extract({src}, {pat}, 2))), _pd -> "
+        f"CASE WHEN _pd.d IS NULL THEN NULL "
+        f"WHEN _pd.n IS NULL OR _pd.u = {ctx.requote('')} THEN "
+        f"make_dt_interval(0, 0, 0, CAST(raise_error(concat({err}, "
+        f"_pd.d)) AS DECIMAL(18, 6))) "
+        f"ELSE make_dt_interval(0, 0, 0, "
+        f"CAST(round(_pd.n * {mult}, 6) AS DECIMAL(18, 6))) END), 1)")
+
+
+# timezone_hour/_minute: the session-zone UTC offset at the given
+# wall-clock instant (Trino coerces a timestamp to the session
+# zone). offset = wall-clock minus its UTC rendering, both
+# interpreted in one fixed zone so the interpretation cancels.
+def _tz_part(hour: bool):
+    def fn(a, ctx):
+        if len(a) != 1:
+            return None
+        off = ("CAST((unix_micros(CAST(({x}) AS TIMESTAMP)) - "
+               "unix_micros(CAST(convert_timezone("
+               "current_timezone(), 'UTC', ({x})) AS TIMESTAMP))) "
+               "DIV 1000000 AS BIGINT)").replace("{x}", a[0])
+        return (f"element_at(transform(array({off}), _tz -> "
+                + ("_tz DIV 3600" if hour else "(_tz DIV 60) % 60")
+                + "), 1)")
+    return fn
+
+
+def _from_be32(a, ctx):
+    if len(a) != 1:
+        return None
+    err = ctx.requote("from_big_endian_32: input must be exactly 4 bytes")
+    return (
+        f"CASE WHEN octet_length({a[0]}) <> 4 "
+        f"THEN CAST(raise_error({err}) AS INT) "
+        f"ELSE element_at(transform(array("
+        f"CAST(conv(hex({a[0]}), 16, 10) AS BIGINT)), _be -> "
+        f"CAST(IF(_be >= 2147483648, _be - 4294967296, _be) AS INT)"
+        f"), 1) END")
+
+
+def _wilson(sign):
+    def fn(a, ctx):
+        if len(a) != 3:
+            return None
+        s, n, z = a
+        return (
+            f"element_at(transform("
+            f"array(CAST(({s}) AS DOUBLE) / ({n})), _wp -> "
+            f"((_wp + ({z}) * ({z}) / (2.0 * ({n})) {sign} ({z}) * "
+            f"sqrt(_wp * (1.0 - _wp) / ({n}) + "
+            f"({z}) * ({z}) / (4.0 * ({n}) * ({n})))) "
+            f"/ (1.0 + ({z}) * ({z}) / ({n})))), 1)")
+    return fn
+
+
+# human_readable_seconds: weeks/days/hours/minutes/seconds parts,
+# singular/plural, ", "-joined, zero-valued parts dropped (CASE
+# without ELSE is NULL and concat_ws skips NULLs), all-zero → the
+# literal '0 seconds'. Input rounds half-up to whole seconds.
+def _hrs_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    part = ("CASE WHEN {v} > 0 THEN concat({v}, "
+            "IF({v} = 1, ' {u}', ' {u}s')) END")
+    units = [("_hr DIV 604800", "week"),
+             ("_hr % 604800 DIV 86400", "day"),
+             ("_hr % 86400 DIV 3600", "hour"),
+             ("_hr % 3600 DIV 60", "minute"),
+             ("_hr % 60", "second")]
+    parts = ", ".join(part.replace("{v}", f"({v})").replace("{u}", u)
+                      for v, u in units)
+    return (f"element_at(transform(array(CAST(floor(({a[0]}) + 0.5) "
+            f"AS BIGINT)), _hr -> CASE WHEN _hr = 0 "
+            f"THEN '0 seconds' "
+            f"ELSE concat_ws(', ', {parts}) END), 1)")
+
+
+# luhn_check (wave 18): the Luhn mod-10 checksum as a pure codegen
+# fold — from the RIGHT, every second digit doubles (minus 9 above
+# 9). NULL → NULL; non-digit input raises like Trino (raise_error
+# inside the guarded branch). The input binds once as a lambda
+# variable.
+def _luhn_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    d = "(ascii(substring(_lu, _li, 1)) - 48)"
+    term = (f"CASE WHEN (length(_lu) - _li) % 2 = 1 THEN "
+            f"CASE WHEN {d} > 4 THEN {d} * 2 - 9 ELSE {d} * 2 END "
+            f"ELSE {d} END")
+    return (f"element_at(transform(array(({a[0]})), _lu -> "
+            "CASE WHEN _lu IS NULL THEN CAST(NULL AS BOOLEAN) "
+            "WHEN NOT (_lu RLIKE '^[0-9]+$') THEN "
+            "CAST(raise_error('luhn_check: input must contain only "
+            "digits') AS BOOLEAN) "
+            "ELSE aggregate(sequence(1, length(_lu)), 0, "
+            f"(_ls, _li) -> _ls + ({term})) % 10 = 0 END), 1)")
+
+
+# ---- wave 19 (r8, divergence audit): skewness/kurtosis. Trino
+# computes the SAMPLE-adjusted statistics (bias-corrected, the
+# n/((n-1)(n-2)) family); Spark's same-named aggregates are the
+# POPULATION formulas (g1, m4/m2²-3) — a silent value divergence
+# on every finite group (verified: n=6 gives 1.0952 vs Trino's
+# 1.4997). Lowered to power sums (one pass, codegen) with the
+# central moments bound once per group via the nested-transform
+# let-binding; n below the defined minimum divides by zero → NULL,
+# matching both engines' NULL-for-undefined convention.
+def _sample_moment_fn(kind: str):
+    def fn(a, ctx):
+        if len(a) != 1:
+            return None
+        x = f"CAST(({a[0]}) AS DOUBLE)"
+        sums = (f"array(named_struct('n', CAST(count({x}) AS DOUBLE), "
+                f"'s1', sum({x}), 's2', sum({x} * {x}), "
+                f"'s3', sum({x} * {x} * {x}), "
+                f"'s4', sum({x} * {x} * {x} * {x})))")
+        mu = "(_m.s1 / _m.n)"
+        cm = (f"array(named_struct('n', _m.n, "
+              f"'m2', _m.s2 - _m.n * {mu} * {mu}, "
+              f"'m3', _m.s3 - 3 * {mu} * _m.s2 "
+              f"+ 2 * _m.n * {mu} * {mu} * {mu}, "
+              f"'m4', _m.s4 - 4 * {mu} * _m.s3 "
+              f"+ 6 * {mu} * {mu} * _m.s2 "
+              f"- 3 * _m.n * {mu} * {mu} * {mu} * {mu}))")
+        if kind == "skewness":
+            # Undefined below n=3 or on a constant group → NULL
+            # (DuckDB's convention too, so oracles line up).
+            final = ("CASE WHEN _c.n < 3 OR _c.m2 <= 0 "
+                     "THEN CAST(NULL AS DOUBLE) ELSE "
+                     "(_c.n / ((_c.n - 1) * (_c.n - 2))) * _c.m3 "
+                     "/ pow(sqrt(_c.m2 / (_c.n - 1)), 3) END")
+        else:
+            final = ("CASE WHEN _c.n < 4 OR _c.m2 <= 0 "
+                     "THEN CAST(NULL AS DOUBLE) ELSE "
+                     "_c.n * (_c.n + 1) / ((_c.n - 1) * (_c.n - 2) "
+                     "* (_c.n - 3)) * _c.m4 "
+                     "/ pow(_c.m2 / (_c.n - 1), 2) "
+                     "- 3 * (_c.n - 1) * (_c.n - 1) "
+                     "/ ((_c.n - 2) * (_c.n - 3)) END")
+        return (f"element_at(transform({sums}, _m -> "
+                f"element_at(transform({cm}, _c -> {final}), 1)), 1)")
+    return fn
+
+
+# 2-arg trim family (wave 20, divergence audit): Trino's
+# trim/ltrim/rtrim(string, chars) — Spark's 2-arg forms take
+# (trimStr, string), the arguments REVERSED (verified:
+# trim('xax', 'x') is 'a' in Trino/DuckDB but '' in Spark) — a
+# silent wrong-value pass-through until now. Lowered to the
+# unambiguous SQL-standard TRIM(BOTH|LEADING|TRAILING c FROM s),
+# identical in both engines. 1-arg forms (and the standard FROM
+# spelling, which arrives as a single comma-less argument) pass
+# through untouched.
+def _trim_fn(kind: str):
+    def fn(a, ctx):
+        if len(a) != 2:
+            return None
+        return f"TRIM({kind} ({a[1]}) FROM ({a[0]}))"
+    return fn
+
+
+# ---- wave 20 (r8): counting-distribution entropy, top-n
+# max_by/min_by, checksum refusal.
+# entropy(c): Shannon log-2 entropy of COUNT inputs —
+# -Σ (c/S)·log2(c/S) = log2(S) - Σ(c·log2 c)/S, a one-pass pair of
+# sums. Zero counts contribute 0; a NEGATIVE count poisons the
+# result to NaN (Trino raises — NaN is the visible equivalent this
+# front end can express without a per-row branch to raise_error).
+def _entropy_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    c = f"CAST(({a[0]}) AS DOUBLE)"
+    # Negative branch emits NaN DIRECTLY (r9, advice): bare
+    # log2(negative) is NULL in Spark (emitted text never gets the
+    # IEEE log wrapper), and sum() would SKIP the NULL — a silently
+    # wrong finite entropy instead of the documented NaN poison.
+    term = (f"CASE WHEN {c} > 0 THEN {c} * log2({c}) "
+            f"WHEN {c} = 0 THEN 0.0 "
+            f"ELSE CAST('NaN' AS DOUBLE) END")
+    return (f"element_at(transform(array(named_struct("
+            f"'s', sum({c}), 'sl', sum({term}))), _en -> "
+            "CASE WHEN _en.s IS NULL OR _en.s = 0 THEN 0.0 "
+            "ELSE log2(_en.s) - _en.sl / _en.s END), 1)")
+
+
+# max_by(x, y, n) / min_by(x, y, n): the x values of the n
+# largest/smallest y — Spark's twins are 2-arg only. Sorted
+# collect_list fold, NULL keys dropped (Trino ignores them), value
+# as final tie-break so equal keys order deterministically (Trino
+# leaves ties arbitrary). The 2-arg forms fall through untouched
+# (same name, same semantics in Spark).
+def _n_by_fn(desc: bool):
+    def fn(a, ctx):
+        if len(a) != 3:
+            return None
+        lo, hi = ("-1", "1") if desc else ("1", "-1")
+        cmp = (f"CASE WHEN _na.k > _nb.k THEN {lo} "
+               f"WHEN _na.k < _nb.k THEN {hi} "
+               f"WHEN _na.v > _nb.v THEN {lo} "
+               f"WHEN _na.v < _nb.v THEN {hi} ELSE 0 END")
+        return (f"transform(slice(array_sort(filter(collect_list("
+                f"struct(({a[1]}) AS k, ({a[0]}) AS v)), "
+                f"_nf -> _nf.k IS NOT NULL), "
+                f"(_na, _nb) -> {cmp}), 1, {a[2]}), _nv -> _nv.v)")
+    return fn
+
+
+# word_stem (r10, formerly refused): Trino stems with the Snowball
+# english stemmer (Porter2); lowered to the session-registered
+# trino_word_stem pandas UDF (functions/stemmer.py — implemented
+# from the public snowballstem.org spec, verified against the
+# spec's own example pairs). Only the english form is expressible;
+# other language codes keep a named error.
+def _word_stem(a, ctx):
+    if len(a) == 1:
+        return f"trino_word_stem({a[0]})"
+    lang = ctx.lit(a[1].strip()) if len(a) == 2 else None
+    if lang is not None and lang.lower() in ("en", "english"):
+        return f"trino_word_stem({a[0]})"
+    raise TrinoSqlUnsupported(
+        "word_stem: only the english (Porter2) stemmer is "
+        f"implemented — language {lang!r} has no verified "
+        "in-container twin")
+
+
+# format_number(x) (r9, formerly refused): Trino's unit-suffix
+# rendering — divide by 1000 into K/M/B/T/Q while ≥1000, then
+# DecimalFormat precision by magnitude of the SCALED value
+# (#.## under 10, #.# under 100, # otherwise): HALF_EVEN rounding
+# (Spark bround / DecimalFormat default), trailing zeros and a
+# bare decimal point stripped. 123456 → '123K', 1000000 → '1M'
+# (the documented Trino vectors). Rendering goes through
+# DECIMAL(38,6) so large scaled values never hit double
+# scientific notation. Best-effort edges, documented: non-finite
+# doubles render as Spark's NaN/Infinity text; sub-1 doubles keep
+# the leading zero. Spark's own 2-arg format_number (thousands
+# separators) is a different function and passes through.
+def _format_number_fn(a, ctx):
+    if len(a) != 1:
+        return None
+    scaled = (
+        "CASE WHEN abs(_fv) >= 1e15 THEN "
+        "named_struct('v', _fv / 1e15, 'u', 'Q') "
+        "WHEN abs(_fv) >= 1e12 THEN "
+        "named_struct('v', _fv / 1e12, 'u', 'T') "
+        "WHEN abs(_fv) >= 1e9 THEN "
+        "named_struct('v', _fv / 1e9, 'u', 'B') "
+        "WHEN abs(_fv) >= 1e6 THEN "
+        "named_struct('v', _fv / 1e6, 'u', 'M') "
+        "WHEN abs(_fv) >= 1e3 THEN "
+        "named_struct('v', _fv / 1e3, 'u', 'K') "
+        "ELSE named_struct('v', _fv, 'u', '') END")
+    strip1 = ctx.requote(r"(\.\d*[1-9])0+$")
+    strip2 = ctx.requote(r"\.0*$")
+    dollar1 = ctx.requote("$1")
+    empty = ctx.requote("")
+
+    def render(d: int) -> str:
+        # bround's scale must be foldable — one branch per scale
+        return (f"regexp_replace(regexp_replace(CAST(try_cast("
+                f"bround(_fs.v, {d}) AS DECIMAL(38, 6)) AS STRING), "
+                f"{strip1}, {dollar1}), {strip2}, {empty})")
+
+    num = (f"CASE WHEN abs(_fs.v) < 10 THEN {render(2)} "
+           f"WHEN abs(_fs.v) < 100 THEN {render(1)} "
+           f"ELSE {render(0)} END")
+    inf = ctx.requote("Infinity")
+    body = (f"CASE WHEN isnan(_fv) OR abs(_fv) = double({inf}) "
+            "THEN CAST(_fv AS STRING) "
+            f"ELSE element_at(transform(array({scaled}), "
+            f"_fs -> concat({num}, _fs.u)), 1) END")
+    return (f"element_at(transform(array(CAST(({a[0]}) AS DOUBLE)), "
+            f"_fv -> {body}), 1)")
+
+
+def _udf(name: str, arity: int):
+    """A call lowered onto the session-registered ``name`` UDF."""
+    return _fixed(arity, lambda a: f"{name}({', '.join(a)})")
+
+
+def _null_guarded_udf(name: str, arity: int):
+    """As _udf, but NULL-in-NULL-out decided SQL-side: Arrow converts
+    SQL NULL doubles to NaN before a pandas UDF can see them, so the
+    CASE keeps genuine NaN inputs flowing to the UDF (where IEEE
+    semantics apply) while NULL never reaches it (r10 review fix:
+    to_ieee754_64(NULL) returned the NaN bit pattern, and a NULL sd
+    crashed the stat CDFs' domain checks)."""
+    def template(a):
+        nulls = " OR ".join(f"({x}) IS NULL" for x in a)
+        null = "NULL" if arity == 1 else "CAST(NULL AS DOUBLE)"
+        return (f"CASE WHEN {nulls} THEN {null} "
+                f"ELSE {name}({', '.join(a)}) END")
+    return _fixed(arity, template)
+
+
+#: Call name → handler. Orderings the table relies on, each pinned by
+#: tests/trino_golden.json:
+#:   - Inner calls are rewritten before the call holding them (the scan
+#:     runs right to left), so a handler that copies an argument copies
+#:     it already rewritten: normalize→chr, element_at→split_to_map,
+#:     element_at→values_at_quantiles, element_at→histogram,
+#:     normal_cdf→inverse_normal_cdf, array_agg→json_value,
+#:     from_big_endian_64→to_big_endian_64, sha256→to_utf8,
+#:     from_utf8→to_base64url, and cast→row for the value operand.
+#:   - A name right after AS is a type, not a call: the ROW(...) of
+#:     CAST(x AS ROW(...)) reaches the cast handler untouched (cast→row).
+#:   - A handler whose output calls another table name hands that call
+#:     to its handler itself, since emitted text is never rescanned:
+#:     log→ln (_log_base_fn), split→element_at and
+#:     split_part→element_at (_element_at).
+#:   - value_at_quantile/values_at_quantiles/quantile_at_value consume
+#:     the raw qdigest_agg/tdigest_agg argument; a digest left over
+#:     after the scan refuses (_rewrite_call_sites).
+_CALLS = {
+    "cast": _first(_cast_varchar_n("CAST"), _cast_row_fn, _cast_json_fn),
+    "try_cast": _first(_cast_varchar_n("TRY_CAST"), _cast_row_fn),
+    "random": _random_fn,
     # Trino to_unixtime returns DOUBLE epoch seconds WITH the fraction;
     # Spark's unix_timestamp returns whole-second BIGINT, so the
     # fraction-preserving form goes through unix_micros.
-    code = _rewrite_calls(
-        code, "to_unixtime",
-        lambda a: f"(unix_micros(CAST({a[0]} AS TIMESTAMP)) / 1e6)"
-        if len(a) == 1 else None)
-
-    # Trino regexp_extract(s, p) returns the WHOLE match; Spark's
-    # 3rd argument defaults to group 1, so the 2-arg form needs ", 0".
-    code = _rewrite_calls(code, "regexp_extract",
-                          lambda a: f"regexp_extract({', '.join(a)}, 0)"
-                          if len(a) == 2 else None)
-    # Same group-0 default for the _all form (Spark's 2-arg
+    "to_unixtime": _fixed(
+        1, lambda a: f"(unix_micros(CAST({a[0]} AS TIMESTAMP)) / 1e6)"),
+    # Trino regexp_extract(s, p) returns the WHOLE match; Spark's 3rd
+    # argument defaults to group 1, so the 2-arg form needs ", 0". Same
+    # group-0 default for the _all form (Spark's 2-arg
     # regexp_extract_all errors on group-less patterns and silently
     # returns group 1 otherwise).
-    code = _rewrite_calls(code, "regexp_extract_all",
-                          lambda a: f"regexp_extract_all({', '.join(a)}, 0)"
-                          if len(a) == 2 else None)
-    # Trino sha256/sha512 return VARBINARY; Spark's sha2 returns the hex
-    # STRING, so unhex restores binary-for-binary semantics (to_hex of
-    # the result then round-trips exactly).
-    code = _rewrite_calls(code, "sha256",
-                          lambda a: f"unhex(sha2({a[0]}, 256))" if len(a) == 1 else None)
-    code = _rewrite_calls(code, "sha512",
-                          lambda a: f"unhex(sha2({a[0]}, 512))" if len(a) == 1 else None)
+    "regexp_extract": _fixed(
+        2, lambda a: f"regexp_extract({', '.join(a)}, 0)"),
+    "regexp_extract_all": _fixed(
+        2, lambda a: f"regexp_extract_all({', '.join(a)}, 0)"),
+    # Trino sha256/sha512/md5/sha1 return VARBINARY; Spark's return the
+    # hex STRING, so unhex restores binary-for-binary semantics (to_hex
+    # of the result then round-trips exactly).
+    "sha256": _fixed(1, lambda a: f"unhex(sha2({a[0]}, 256))"),
+    "sha512": _fixed(1, lambda a: f"unhex(sha2({a[0]}, 512))"),
+    "md5": _fixed(1, lambda a: f"unhex(md5({a[0]}))"),
+    "sha1": _fixed(1, lambda a: f"unhex(sha1({a[0]}))"),
     # bitwise_*(a, b) → infix operators
-    for name, op in (("bitwise_and", "&"), ("bitwise_or", "|"),
-                     ("bitwise_xor", "^")):
-        code = _rewrite_calls(code, name,
-                              lambda a, op=op: f"(({a[0]}) {op} ({a[1]}))"
-                              if len(a) == 2 else None)
-    code = _rewrite_calls(code, "bitwise_not",
-                          lambda a: f"(~({a[0]}))" if len(a) == 1 else None)
+    "bitwise_and": _fixed(2, lambda a: f"(({a[0]}) & ({a[1]}))"),
+    "bitwise_or": _fixed(2, lambda a: f"(({a[0]}) | ({a[1]}))"),
+    "bitwise_xor": _fixed(2, lambda a: f"(({a[0]}) ^ ({a[1]}))"),
+    "bitwise_not": _fixed(1, lambda a: f"(~({a[0]}))"),
     # Trino MAP(keys_array, values_array) constructor → map_from_arrays
     # (Spark's own map() takes interleaved k1, v1, ...; Trino's MAP
     # always takes two arrays, so the 2-arg form is unambiguous).
-    code = _rewrite_calls(code, "map",
-                          lambda a: f"map_from_arrays({a[0]}, {a[1]})"
-                          if len(a) == 2 else None)
-    # CAST(x AS ROW(a T, ...)) named-row type (r8): lower the type
-    # recursively to STRUCT<a: T', ...> — Trino and Spark both cast
-    # row/struct fields by POSITION, so the semantics line up; the
-    # target field names become the result's field names in both.
-    def _cast_row_fn(a):
-        if len(a) != 1:
-            return None
-        cm = re.match(r"(.+?)\s+AS\s+(ROW\s*\(.*)$", a[0],
-                      re.IGNORECASE | re.DOTALL)
-        if not cm:
-            return None
-        return (f"CAST({cm.group(1)} AS "
-                f"{_trino_type_to_spark(cm.group(2))})")
-
-    code = _rewrite_calls(code, "CAST", _cast_row_fn)
-    code = _rewrite_calls(code, "TRY_CAST", _cast_row_fn)
-    if re.search(r"\bAS\s+ROW\s*\(", code, re.IGNORECASE):
-        raise TrinoSqlUnsupported(
-            "AS ROW(...) outside a plain CAST/TRY_CAST — rewrite with "
-            "named_struct and a STRUCT<...> cast explicitly")
+    "map": _fixed(2, lambda a: f"map_from_arrays({a[0]}, {a[1]})"),
     # Trino ROW(a, b) anonymous-struct constructor → struct(a, b)
-    # (fields get positional names in both engines); runs AFTER the
-    # type-position CASTs above, so only constructors remain.
-    code = _rewrite_calls(code, "row",
-                          lambda a: f"struct({', '.join(a)})" if a else None)
+    # (fields get positional names in both engines). Type-position
+    # ROW(...)s never reach it (see above).
+    "row": lambda a, ctx: f"struct({', '.join(a)})" if a else None,
     # Trino map_agg(k, v) aggregate → entries-collect + map build. (Rows
     # with a NULL key are kept by collect_list but map_from_entries
     # rejects NULL keys as Trino's map_agg does — same failure surface.)
-    code = _rewrite_calls(code, "map_agg",
-                          lambda a: "map_from_entries(collect_list("
-                                    f"struct({a[0]}, {a[1]})))"
-                          if len(a) == 2 else None)
+    "map_agg": _fixed(2, lambda a: "map_from_entries(collect_list("
+                                   f"struct({a[0]}, {a[1]})))"),
     # Spark has no JSON type: json stays a string end-to-end, so Trino's
     # json_parse/json_format round-trip is the identity here.
-    for name in ("json_parse", "json_format"):
-        code = _rewrite_calls(code, name,
-                              lambda a: f"({a[0]})" if len(a) == 1 else None)
+    "json_parse": _fixed(1, lambda a: f"({a[0]})"),
+    "json_format": _fixed(1, lambda a: f"({a[0]})"),
     # Trino from_unixtime returns a TIMESTAMP; Spark's returns a STRING.
     # timestamp_seconds is the semantic match (epoch seconds → timestamp).
-    code = _rewrite_calls(code, "from_unixtime",
-                          lambda a: f"timestamp_seconds({a[0]})"
-                          if len(a) == 1 else None)
-
-    def _regex_quote(expr: str) -> str:
-        """Runtime Pattern.quote for a COMPUTED delimiter (r9 —
-        formerly refused): wrap in \\Q…\\E with any embedded \\E
-        broken out exactly as java.util.regex.Pattern.quote does, so
-        Spark's regex-splitting functions see a literal. Empty/NULL
-        callers guard separately."""
-        q_open = requote("\\Q")
-        q_close = requote("\\E")
-        fix = requote("\\E\\\\E\\Q")
-        return (f"concat({q_open}, "
-                f"replace({expr}, {q_close}, {fix}), {q_close})")
-
-    # Trino split(s, delim) splits on a LITERAL delimiter; Spark's
-    # second argument is a REGEX. Escape metachars when the delimiter
-    # is a literal; a COMPUTED delimiter is runtime-quoted with
-    # \\Q…\\E (r9) and the empty delimiter raises like Trino's
-    # INVALID_FUNCTION_ARGUMENT.
-    def _split_fn(a):
-        if len(a) not in (2, 3):
-            return None
-        lit = _lit(a[1])
-        rest = f", {a[2]}" if len(a) == 3 else ""
-        if lit is not None:
-            # Spark's SQL string literals consume one backslash layer
-            # ('\.'→'.'); requote stashes the single-escaped regex and
-            # _unmask doubles the backslashes on restore.
-            escaped = _REGEX_META.sub(lambda m: "\\" + m.group(0), lit)
-            return f"split({a[0]}, {requote(escaped)}{rest})"
-        err = requote("split: the delimiter must not be empty")
-        return (f"element_at(transform(array(({a[1]})), _sd -> "
-                f"CASE WHEN length(_sd) = 0 THEN "
-                f"CAST(raise_error({err}) AS ARRAY<STRING>) "
-                f"ELSE split({a[0]}, {_regex_quote('_sd')}{rest}) "
-                f"END), 1)")
-
-    code = _rewrite_calls(code, "split", _split_fn)
-
-    # split_part (wave 20, divergence audit): Spark's same-named
-    # builtin returns '' when the index is past the last field; Trino
-    # returns NULL — a silent value divergence (and nullif('') would
-    # corrupt genuinely empty fields like 'a,,b' part 2). Literal
-    # delimiters lower to try_element_at over a literal-escaped
-    # split, which yields NULL past the end and '' for real empty
-    # fields. Negative indexes count from the end here (Trino rejects
-    # them — this front end is permissive, never wrong-valued). A
-    # COMPUTED delimiter (r9, formerly refused) uses Spark's native
-    # LITERAL split_part guarded by a parts-count check — replace()
-    # removes exactly split's non-overlapping occurrences, so
-    # (len(s) - len(replace)) / len(d) + 1 is the field count and
-    # indexes past it return Trino's NULL instead of ''.
-    def _split_part_fn(a):
-        if len(a) != 3:
-            return None
-        lit = _lit(a[1])
-        if lit is not None:
-            escaped = _REGEX_META.sub(lambda m: "\\" + m.group(0), lit)
-            return (f"try_element_at(split({a[0]}, {requote(escaped)}, "
-                    f"-1), {a[2]})")
-        err = requote("split_part: the delimiter must not be empty")
-        return (
-            f"element_at(transform(array(named_struct("
-            f"'s', ({a[0]}), 'd', ({a[1]}), 'n', ({a[2]}))), _sp -> "
-            f"CASE WHEN length(_sp.d) = 0 THEN "
-            f"CAST(raise_error({err}) AS STRING) "
-            f"WHEN _sp.n > (length(_sp.s) - length(replace(_sp.s, "
-            f"_sp.d, {requote('')}))) div length(_sp.d) + 1 THEN NULL "
-            f"ELSE split_part(_sp.s, _sp.d, _sp.n) END), 1)")
-
-    code = _rewrite_calls(code, "split_part", _split_part_fn)
-
-    # element_at (wave 20, divergence audit): Trino returns NULL when
-    # an array index exceeds the length; Spark's ANSI element_at
-    # RAISES there. try_element_at matches Trino on every edge we
-    # checked: over-length index → NULL, missing map key → NULL,
-    # index 0 → error in both.
-    code = _rewrite_calls(
-        code, "element_at",
-        lambda a: f"try_element_at({a[0]}, {a[1]})"
-        if len(a) == 2 else None)
-
-    # log family (wave 20, divergence audit): Trino follows Java
-    # Math.log — ln(0) = -Infinity, ln(negative) = NaN — while Spark
-    # returns NULL for any non-positive input (verified; sqrt/acos/
-    # power/exp already agree on IEEE specials). The wrapper restores
-    # the IEEE values; NULL in → NULL out (no CASE branch matches).
-    def _log_fn(name: str):
-        def fn(a):
-            if len(a) != 1:
-                return None
-            return (f"element_at(transform(array(CAST(({a[0]}) "
-                    f"AS DOUBLE)), _lg -> CASE WHEN _lg > 0 "
-                    f"THEN {name}(_lg) "
-                    "WHEN _lg = 0 THEN CAST('-Infinity' AS DOUBLE) "
-                    "WHEN _lg < 0 THEN CAST('NaN' AS DOUBLE) END), 1)")
-        return fn
-
-    # array_min/array_max (wave 20, divergence audit): Trino returns
-    # NULL when the array CONTAINS a null element; Spark skips nulls
-    # and returns the min/max of the rest — silently different values.
-    def _array_extreme_fn(name: str):
-        def fn(a):
-            if len(a) != 1:
-                return None
-            return (f"element_at(transform(array(({a[0]})), _am -> "
-                    "CASE WHEN exists(_am, _ae -> _ae IS NULL) "
-                    f"THEN NULL ELSE {name}(_am) END), 1)")
-        return fn
-
-    code = _rewrite_calls(code, "array_min", _array_extreme_fn("array_min"))
-    code = _rewrite_calls(code, "array_max", _array_extreme_fn("array_max"))
-
-    # map_concat (wave 20, divergence audit): Trino keeps the value
-    # from the LAST map holding a key; Spark's default dedup policy
-    # ERRORS on any duplicate. Earlier maps are filtered to the keys
-    # no later map holds, so the concat inputs are disjoint — last-wins
-    # semantics without touching the session-wide dedup policy (which
-    # would also relax map()/map_from_entries, where BOTH engines
-    # reject duplicates).
-    def _map_concat_fn(a):
-        if len(a) < 2:
-            return None
-        parts = []
-        for i, m in enumerate(a[:-1]):
-            later = " OR ".join(f"map_contains_key({x}, _mk)"
-                                for x in a[i + 1:])
-            parts.append(f"map_filter({m}, (_mk, _mv) -> NOT ({later}))")
-        parts.append(a[-1])
-        return f"map_concat({', '.join(parts)})"
-
-    code = _rewrite_calls(code, "map_concat", _map_concat_fn)
-
-    # 2-arg log(b, x) = Math.log(x) / Math.log(b) in Trino — emitted
-    # BEFORE the 1-arg pass so both ln() calls pick up the IEEE
-    # wrapper. (b = 1 makes the divisor 0.0 — that lands in the
-    # documented double-division divergence.)
-    code = _rewrite_calls(
-        code, "log",
-        lambda a: f"(ln({a[1]}) / ln({a[0]}))" if len(a) == 2 else None)
-
-    for _log_name in ("ln", "log2", "log10"):
-        code = _rewrite_calls(code, _log_name, _log_fn(_log_name))
-
-    # wave 13 (r8). split_to_map(s, entryDelim, kvDelim) →
-    # str_to_map — same argument order, but Spark's delimiters are
-    # REGEXES where Trino's are literals, so literal delimiters are
-    # escaped exactly like split(); computed delimiters (r9) are
-    # runtime-quoted with \\Q…\\E like split()'s.
-    def _split_to_map_fn(a):
-        if len(a) != 3:
-            return None
-        outs = [a[0]]
-        for arg in a[1:]:
-            lit = _lit(arg)
-            if lit is not None:
-                esc = _REGEX_META.sub(lambda m: "\\" + m.group(0), lit)
-                outs.append(requote(esc))
-            else:
-                outs.append(_regex_quote(f"({arg})"))
-        return f"str_to_map({', '.join(outs)})"
-
-    code = _rewrite_calls(code, "split_to_map", _split_to_map_fn)
-
-    # split_to_multimap(s, entryDelim, kvDelim) (r10, was a silent
-    # unresolved-routine): map<string, array<string>> — values keep
-    # entry order, keys first-appearance order; an entry without
-    # exactly one kvDelim errors like Trino. Pure HOF codegen: split
-    # to (k, v) structs (the same literal-delimiter escaping as
-    # split_to_map), then group by distinct keys with an ordered
-    # filter per key — O(keys × entries) per row, fine for the short
-    # header/qs strings the function exists for.
-    def _split_to_multimap_fn(a):
-        if len(a) != 3:
-            return None
-        outs = []
-        for arg in a[1:]:
-            lit = _lit(arg)
-            if lit is not None:
-                esc = _REGEX_META.sub(lambda m: "\\" + m.group(0), lit)
-                outs.append(requote(esc))
-            else:
-                outs.append(_regex_quote(f"({arg})"))
-        ed, kd = outs
-        err = requote("split_to_multimap: entry does not have exactly "
-                      "one key-value delimiter")
-        pairs = (
-            f"transform(split({a[0]}, {ed}), _me -> "
-            f"element_at(transform(array(split(_me, {kd})), _ps -> "
-            f"CASE WHEN size(_ps) = 2 THEN "
-            f"named_struct('k', element_at(_ps, 1), "
-            f"'v', element_at(_ps, 2)) "
-            f"ELSE named_struct('k', CAST(raise_error({err}) AS STRING), "
-            f"'v', '') END), 1))")
-        return _group_multimap(pairs)
-
-    def _group_multimap(pairs: str) -> str:
-        """array<struct<k, v>> → map<k, array<v>>: values in entry
-        order, keys first-appearance order (shared by
-        split_to_multimap and multimap_from_entries)."""
-        return (
-            f"element_at(transform(array({pairs}), _mp -> "
-            f"element_at(transform(array(array_distinct("
-            f"transform(_mp, _pe -> _pe.k))), _mk -> "
-            f"map_from_arrays(_mk, transform(_mk, _kk -> "
-            f"transform(filter(_mp, _pe -> _pe.k <=> _kk), "
-            f"_pe -> _pe.v)))), 1)), 1)")
-
-    code = _rewrite_calls(code, "split_to_multimap", _split_to_multimap_fn)
-
-    # multimap_from_entries(array<row(K, V)>) (r10): the entries'
-    # field NAMES are caller-defined, so each row is normalized to a
-    # (k, v) struct POSITIONALLY via a singleton map_from_entries
-    # (whose contract is field-order, not field-name), then grouped by
-    # the shared multimap codegen. A NULL entry errors like Trino.
-    def _multimap_from_entries_fn(a):
-        if len(a) != 1:
-            return None
-        err = requote("multimap_from_entries: null entry")
-        pairs = (
-            f"transform(({a[0]}), _mm0 -> "
-            f"element_at(transform(array(map_from_entries(array("
-            f"IF(_mm0 IS NULL, raise_error({err}), _mm0)))), _mm -> "
-            f"named_struct('k', element_at(map_keys(_mm), 1), "
-            f"'v', element_at(map_values(_mm), 1))), 1))")
-        return _group_multimap(pairs)
-
-    code = _rewrite_calls(code, "multimap_from_entries",
-                          _multimap_from_entries_fn)
-
-    # map_union(m) (r10): aggregate union of maps. Trino documents an
-    # ARBITRARY winner for duplicate keys; a deterministic engine
-    # cannot be arbitrary, so this picks the SMALLEST (key, value)
-    # entry per key — a legal instantiation that is stable across
-    # partitionings and replays (AQE/speculation safe). Keys come out
-    # in ascending order (Trino's map order is unspecified).
-    def _map_union_fn(a):
-        if len(a) != 1:
-            return None
-        return (
-            f"element_at(transform(array(array_sort(flatten("
-            f"collect_list(map_entries(({a[0]})))))), _ue -> "
-            f"element_at(transform(array(array_distinct("
-            f"transform(_ue, _e -> _e.key))), _uk -> "
-            f"map_from_arrays(_uk, transform(_uk, _kk -> "
-            f"element_at(transform(filter(_ue, _e -> _e.key <=> _kk), "
-            f"_e -> _e.value), 1)))), 1)), 1)")
-
-    code = _rewrite_calls(code, "map_union", _map_union_fn)
-
-    # HyperLogLog surface (r10): Trino's approx_set/merge/cardinality
-    # triple maps onto Spark's Apache-DataSketches HLL builtins. The
-    # SKETCH BINARIES differ between engines (airlift HLL vs
-    # DataSketches) and so may the estimates — same approximate
-    # contract, engine-specific values (the approx_distinct
-    # precedent). cardinality(<sketch expr>) is detected structurally
-    # (Spark's own cardinality is array/map-typed); merge() can only
-    # ever see HLL here because qdigest_agg/tdigest_agg refuse at
-    # creation, so mapping it to hll_union_agg is type-sound.
-    def _cardinality_fn(a):
-        if len(a) != 1:
-            return None
-        inner = a[0].strip()
-        if re.match(r"(?i)(hll_sketch_agg|hll_union_agg)\s*\(", inner):
-            return f"hll_sketch_estimate({inner})"
-        return None   # array/map cardinality — Spark builtin
-
-    def _approx_set_fn(a):
-        if len(a) == 1:
-            return f"hll_sketch_agg({a[0]})"
-        if len(a) == 2:
-            # approx_set(x, e) — Trino's max-standard-error form.
-            # HLL error ≈ 1.04/sqrt(2^lgK), so e maps structurally to
-            # lgConfigK = ceil(log2((1.04/e)^2)), clamped to Spark's
-            # DataSketches range [4, 21] (Trino validates e itself to
-            # [0.0040625, 0.26] — same check here). Same
-            # approx-divergence class as the 1-arg form: sketch
-            # VALUES differ across engines, cardinality estimates are
-            # bounds-tested. Non-literal error bounds refuse by name.
-            import math
-            try:
-                e_val = float(a[1])
-            except ValueError:
-                raise TrinoSqlUnsupported(
-                    "approx_set(x, e) requires a literal error bound "
-                    "(the bound picks the sketch size at plan time)")
-            if not 0.0040625 <= e_val <= 0.26:
-                raise TrinoSqlUnsupported(
-                    f"approx_set error bound {e_val} outside Trino's "
-                    "[0.0040625, 0.26]")
-            lg_k = max(4, min(21, math.ceil(math.log2((1.04 / e_val) ** 2))))
-            return f"hll_sketch_agg({a[0]}, {lg_k})"
-        return None
-
-    code = _rewrite_calls(code, "approx_set", _approx_set_fn)
-    code = _rewrite_calls(
-        code, "merge",
-        lambda a: f"hll_union_agg({a[0]})" if len(a) == 1 else None)
-    code = _rewrite_calls(code, "cardinality", _cardinality_fn)
-    # qdigest/tdigest READ PATH (r11): the composed forms —
-    # value_at_quantile(qdigest_agg(x), p), values_at_quantiles(
-    # tdigest_agg(x), ps), quantile_at_value(qdigest_agg(x), v) —
-    # lower structurally onto the raw column: the quantile lookups
-    # ride Spark's approx_percentile (approx_percentile-class
-    # divergence: sketch VALUES differ across engines; the estimate
-    # is bounds-tested in tests/test_bounds.py), and the inverse
-    # lookup is the exact INCLUSIVE CDF avg(x <= v). Convention note
-    # (r11 review): at a value carrying large point mass the
-    # inclusive-vs-exclusive rank convention dominates any sketch
-    # error — Trino's qdigest behavior at such boundary values is
-    # unverified offline, so this is a documented convention choice,
-    # not a bounded-error claim. A digest NOT consumed in the same
-    # expression still refuses below — there are no portable
-    # qdigest/tdigest sketch bytes in Spark.
-    def _digest_inner(caller: str, arg: str) -> str:
-        m = re.match(r"(?i)(qdigest_agg|tdigest_agg)\s*\(", arg)
-        if not m:
-            raise TrinoSqlUnsupported(
-                f"{caller}() over a pre-built qdigest/tdigest value is "
-                "not supported (no portable sketch bytes in Spark) — "
-                "compose with qdigest_agg(x)/tdigest_agg(x) directly, "
-                "or use approx_percentile")
-        close = _find_close(arg, m.end() - 1)
-        if arg[close + 1:].strip():
-            raise TrinoSqlUnsupported(
-                f"{caller}() over a digest expression is only "
-                "supported directly on qdigest_agg(x)/tdigest_agg(x)")
-        inner = [s.strip() for s in _split_top_level(arg[m.end():close])]
-        if len(inner) != 1:
-            raise TrinoSqlUnsupported(
-                f"{m.group(1)}() with weight/accuracy arguments is not "
-                "supported (Spark's percentile sketch is unweighted)")
-        return inner[0]
-
-    def _vaq_fn(caller):
-        def fn(a):
-            if len(a) != 2:
-                return None
-            x = _digest_inner(caller, a[0])
-            return f"approx_percentile(({x}), ({a[1]}))"
-        return fn
-
-    def _qav_fn(a):
-        if len(a) != 2:
-            return None
-        x = _digest_inner("quantile_at_value", a[0])
-        return (f"avg(IF(({x}) <= ({a[1]}), CAST(1 AS DOUBLE), "
-                f"CAST(0 AS DOUBLE)))")
-
-    code = _rewrite_calls(code, "value_at_quantile",
-                          _vaq_fn("value_at_quantile"))
-    code = _rewrite_calls(code, "values_at_quantiles",
-                          _vaq_fn("values_at_quantiles"))
-    code = _rewrite_calls(code, "quantile_at_value", _qav_fn)
-
-    def _qdigest_refusal(name):
-        def fn(a):
-            raise TrinoSqlUnsupported(
-                f"{name}() outside value_at_quantile/"
-                "values_at_quantiles/quantile_at_value is not supported "
-                "(no portable qdigest/tdigest sketch bytes in Spark — "
-                "use approx_percentile for quantile estimation)")
-        return fn
-
-    for _qd in ("qdigest_agg", "tdigest_agg"):
-        code = _rewrite_calls(code, _qd, _qdigest_refusal(_qd))
-
-    # max(x, n) / min(x, n) (r10): Trino's top/bottom-n aggregate
-    # forms returning array<T> (the 1-arg forms pass through to
-    # Spark's own max/min). collect_list drops NULLs like Trino.
-    def _minmax_n(desc: bool):
-        order = "false" if desc else "true"
-
-        def fn(a):
-            if len(a) != 2:
-                return None
-            return (f"slice(sort_array(collect_list(({a[0]})), {order}), "
-                    f"1, ({a[1]}))")
-        return fn
-
-    # max(x, n) OVER (...) is legal in Trino but the collect_list
-    # rewrite below is aggregate-only — refuse the window form by name
-    # (r11) instead of letting it die with a confusing analysis error.
-    for _mm_name in ("max", "min"):
-        for _mm in re.finditer(r"\b" + _mm_name + r"\s*\(", code,
-                               re.IGNORECASE):
-            _mm_close = _find_close(code, _mm.end() - 1)
-            _mm_args = _split_top_level(code[_mm.end():_mm_close])
-            if (len(_mm_args) == 2 and
-                    re.match(r"\s*OVER(\s*\(|\s+[A-Za-z_])",
-                             code[_mm_close + 1:], re.IGNORECASE)):
-                raise TrinoSqlUnsupported(
-                    f"{_mm_name}(x, n) as a window function is not "
-                    "supported (the top-n rewrite is aggregate-only; "
-                    "use it in GROUP BY, or rank() + collect)")
-
-    code = _rewrite_calls(code, "max", _minmax_n(desc=True))
-    code = _rewrite_calls(code, "min", _minmax_n(desc=False))
+    "from_unixtime": _fixed(1, lambda a: f"timestamp_seconds({a[0]})"),
+    "split": _split_fn,
+    "split_part": _split_part_fn,
+    "element_at": _element_at,
+    "array_min": _array_extreme_fn("array_min"),
+    "array_max": _array_extreme_fn("array_max"),
+    "map_concat": _map_concat_fn,
+    "log": _log_base_fn,
+    "ln": _log_fn("ln"),
+    "log2": _log_fn("log2"),
+    "log10": _log_fn("log10"),
+    "split_to_map": _split_to_map_fn,
+    "split_to_multimap": _split_to_multimap_fn,
+    "multimap_from_entries": _multimap_from_entries_fn,
+    "map_union": _map_union_fn,
+    "approx_set": _approx_set_fn,
+    "merge": _fixed(1, lambda a: f"hll_union_agg({a[0]})"),
+    "cardinality": _cardinality_fn,
+    "value_at_quantile": _vaq_fn("value_at_quantile"),
+    "values_at_quantiles": _vaq_fn("values_at_quantiles"),
+    "quantile_at_value": _qav_fn,
+    "max": _minmax_n("max", desc=True),
+    "min": _minmax_n("min", desc=False),
     # from_iso8601_timestamp/date: Spark's string→timestamp/date cast
     # accepts ISO-8601 ('T' separator, optional offset) and resolves
     # offsets to the session-zone instant — the same instant Trino
     # returns (Trino keeps the offset as a tz field; this engine's
     # timestamps are NTZ wall-times, the q_trino_sql_tz precedent).
-    code = _rewrite_calls(code, "from_iso8601_timestamp",
-                          lambda a: f"CAST({a[0]} AS TIMESTAMP)"
-                          if len(a) == 1 else None)
-    code = _rewrite_calls(code, "from_iso8601_date",
-                          lambda a: f"CAST({a[0]} AS DATE)"
-                          if len(a) == 1 else None)
-    # parse_datetime(s, fmt): Trino takes a Joda-Time pattern; the
-    # y/M/d/H/m/s/S/E/a core is identical in Java time, so a LITERAL
-    # pattern built only of those passes through to to_timestamp.
-    # Computed patterns refuse (can't validate the Joda-only letters),
-    # and any other pattern letter refuses BY NAME (wave 20 — Joda
-    # Z/z zone handling and x/w week fields differ from Java's; a
-    # pass-through would silently re-interpret them).
-    def _parse_datetime_fn(a):
-        if len(a) != 2:
-            return None
-        fmt = _lit(a[1])
-        if fmt is None:
-            raise TrinoSqlUnsupported(
-                "parse_datetime() needs a literal format pattern")
-        bare = re.sub(r"'[^']*'", "", fmt)  # quoted literals are inert
-        bad = set(re.findall(r"[A-Za-z]", bare)) - set("yMdHmsSEa")
-        if bad:
-            raise TrinoSqlUnsupported(
-                f"parse_datetime: Joda pattern letters {sorted(bad)} "
-                "have no exact Java-pattern equivalent")
-        return f"to_timestamp({a[0]}, {a[1]})"
-
-    code = _rewrite_calls(code, "parse_datetime", _parse_datetime_fn)
-
-    # json_size(j, path): number of members of the object/array at
-    # path, 0 for a scalar (Trino's contract), NULL for no match. The
-    # '['/'{' probes compare ascii CODES (91/123) — a raw bracket
-    # literal in masked code would corrupt later bracket-depth scans.
-    def _json_size_fn(a):
-        if len(a) != 2:
-            return None
-        g = f"get_json_object({a[0]}, {a[1]})"
-        return (f"(CASE WHEN {g} IS NULL THEN NULL "
-                f"WHEN ascii(left({g}, 1)) = 91 "
-                f"THEN json_array_length({g}) "
-                f"WHEN ascii(left({g}, 1)) = 123 "
-                f"THEN size(json_object_keys({g})) "
-                f"ELSE 0 END)")
-
-    code = _rewrite_calls(code, "json_size", _json_size_fn)
-
-    # wave 14 (r8): Trino's greatest/least return NULL when ANY
-    # argument is NULL; Spark's skip NULLs — a silent value divergence
-    # if passed through. The guard re-evaluates arguments (scalar
-    # expressions; cost negligible vs silent wrong answers).
-    def _null_strict_fn(name):
-        def fn(a):
-            if len(a) < 2:
-                return None
-            checks = " OR ".join(f"({x}) IS NULL" for x in a)
-            return (f"(CASE WHEN {checks} THEN NULL "
-                    f"ELSE {name}({', '.join(a)}) END)")
-        return fn
-
-    code = _rewrite_calls(code, "greatest", _null_strict_fn("greatest"))
-    code = _rewrite_calls(code, "least", _null_strict_fn("least"))
-
-    # Trino regexp_split(s, p) → Spark split(s, p) (both regex). MUST
-    # run after the literal-split rewrite above, or the emitted split()
-    # would get its regex delimiter escaped as a literal.
-    code = _rewrite_calls(code, "regexp_split",
-                          lambda a: f"split({', '.join(a)})"
-                          if len(a) == 2 else None)
+    "from_iso8601_timestamp": _fixed(
+        1, lambda a: f"CAST({a[0]} AS TIMESTAMP)"),
+    "from_iso8601_date": _fixed(1, lambda a: f"CAST({a[0]} AS DATE)"),
+    "parse_datetime": _parse_datetime_fn,
+    "json_size": _json_size_fn,
+    "greatest": _null_strict_fn("greatest"),
+    "least": _null_strict_fn("least"),
+    # Trino regexp_split(s, p) → Spark split(s, p) (both regex). The
+    # emitted split() is never rescanned, so its regex delimiter is not
+    # escaped as a literal.
+    "regexp_split": _fixed(2, lambda a: f"split({', '.join(a)})"),
     # Trino 2-arg regexp_replace removes matches; Spark requires the
     # replacement argument.
-    code = _rewrite_calls(code, "regexp_replace",
-                          lambda a: f"regexp_replace({a[0]}, {a[1]}, '')"
-                          if len(a) == 2 else None)
+    "regexp_replace": _fixed(
+        2, lambda a: f"regexp_replace({a[0]}, {a[1]}, '')"),
     # none_match(arr, f) → NOT exists(arr, f)
-    code = _rewrite_calls(code, "none_match",
-                          lambda a: f"(NOT exists({a[0]}, {a[1]}))"
-                          if len(a) == 2 else None)
+    "none_match": _fixed(2, lambda a: f"(NOT exists({a[0]}, {a[1]}))"),
     # geometric_mean(x) = exp(avg(ln(x))) — guarded: Spark's ln of a
     # non-positive value yields NULL (which avg would silently SKIP),
     # while Trino accumulates Java Math.log: a NEGATIVE input gives NaN,
     # but log(0) = -Infinity, so zeros (with no negatives) give
     # exp(-Inf) = 0.0 — the r6 guard mapped both to NaN (r7 split).
-    code = _rewrite_calls(
-        code, "geometric_mean",
-        lambda a: (f"(CASE WHEN min({a[0]}) < 0 THEN CAST('NaN' AS DOUBLE) "
-                   f"WHEN min({a[0]}) = 0 THEN CAST(0 AS DOUBLE) "
-                   f"ELSE exp(avg(ln({a[0]}))) END)")
-        if len(a) == 1 else None)
+    "geometric_mean": _fixed(1, lambda a: (
+        f"(CASE WHEN min({a[0]}) < 0 THEN CAST('NaN' AS DOUBLE) "
+        f"WHEN min({a[0]}) = 0 THEN CAST(0 AS DOUBLE) "
+        f"ELSE exp(avg(ln({a[0]}))) END)")),
     # infinity()/nan() constants
-    code = _rewrite_calls(code, "infinity",
-                          lambda a: "CAST('Infinity' AS DOUBLE)"
-                          if len(a) == 1 and a[0] == "" else None)
-    code = _rewrite_calls(code, "nan",
-                          lambda a: "CAST('NaN' AS DOUBLE)"
-                          if len(a) == 1 and a[0] == "" else None)
-
-    # Trino truncate(x) rounds toward zero keeping the DOUBLE type;
-    # Spark floor/ceil return BIGINT, so re-cast. The 2-arg decimal-
-    # scale form truncate(x, n) scales by 10^n, truncates toward zero,
-    # and scales back — the same multiply/trunc/divide sequence Trino's
-    # own DOUBLE implementation performs, so the floating results agree
-    # (|x|·10^n must fit a BIGINT, as in Trino).
-    def _truncate_fn(a):
-        if len(a) == 1:
-            return (f"CAST(CASE WHEN ({a[0]}) < 0 THEN ceil({a[0]}) "
-                    f"ELSE floor({a[0]}) END AS DOUBLE)")
-        if len(a) == 2:
-            scaled = f"(({a[0]}) * power(10, ({a[1]})))"
-            return (f"CAST(CASE WHEN ({a[0]}) < 0 THEN ceil({scaled}) "
-                    f"ELSE floor({scaled}) END / power(10, ({a[1]})) "
-                    "AS DOUBLE)")
-        return None
-
-    code = _rewrite_calls(code, "truncate", _truncate_fn)
-
+    "infinity": lambda a, ctx: ("CAST('Infinity' AS DOUBLE)"
+                                if a == [""] else None),
+    "nan": lambda a, ctx: "CAST('NaN' AS DOUBLE)" if a == [""] else None,
+    "truncate": _truncate_fn,
     # ---- wave 15 (r8): aggregate/array/string breadth. The collect
     # results are bound ONCE as lambda variables (transform(array(agg),
     # x -> …) — aggregates may not appear inside lambda bodies, and
     # the binding also avoids re-evaluating the buffer per element.
-    code = _rewrite_calls(
-        code, "histogram",
-        lambda a: (
-            f"element_at(transform(array(collect_list({a[0]})), _hl -> "
-            "map_from_entries(transform(array_distinct(_hl), _hv -> "
-            "struct(_hv, CAST(size(filter(_hl, _hx -> _hx <=> _hv)) "
-            "AS BIGINT))))), 1)")
-        if len(a) == 1 else None)
-    code = _rewrite_calls(
-        code, "multimap_agg",
-        lambda a: (
-            "element_at(transform(array(collect_list(named_struct("
-            f"'k', {a[0]}, 'v', {a[1]}))), _ml -> "
-            "map_from_entries(transform("
-            "array_distinct(transform(_ml, _me -> _me.k)), _kk -> "
-            "struct(_kk, transform(filter(_ml, _me -> _me.k <=> _kk), "
-            "_me -> _me.v))))), 1)")
-        if len(a) == 2 else None)
-
-    def _hamming_fn(a):
-        if len(a) != 2:
-            return None
-        x, y = f"({a[0]})", f"({a[1]})"
-        return (
-            f"(CASE WHEN length({x}) <> length({y}) THEN "
-            "CAST(raise_error('hamming_distance: the input strings must "
-            "have the same length') AS BIGINT) "
-            f"WHEN length({x}) = 0 THEN CAST(0 AS BIGINT) "
-            f"ELSE CAST(size(filter(sequence(1, length({x})), _hp -> "
-            f"substring({x}, _hp, 1) <> substring({y}, _hp, 1))) "
-            "AS BIGINT) END)")
-
-    code = _rewrite_calls(code, "hamming_distance", _hamming_fn)
-
-    def _bit_count_fn(a):
-        # Trino bit_count(x, bits) counts ones in the bits-wide two's
-        # complement and VALIDATES x fits; Spark's is 64-bit 1-arg.
-        if len(a) != 2 or not re.fullmatch(r"\d+", a[1].strip()):
-            return None
-        b = int(a[1])
-        if not 2 <= b <= 64:
-            return None
-        x = f"({a[0]})"
-        if b == 64:
-            return f"CAST(bit_count({x}) AS BIGINT)"
-        lo, hi = -(1 << (b - 1)), (1 << (b - 1)) - 1
-        mask = (1 << b) - 1
-        return (
-            f"(CASE WHEN {x} BETWEEN {lo} AND {hi} "
-            f"THEN CAST(bit_count({x} & {mask}) AS BIGINT) "
-            f"ELSE CAST(raise_error('bit_count: value must be "
-            f"representable in {b} bits') AS BIGINT) END)")
-
-    code = _rewrite_calls(code, "bit_count", _bit_count_fn)
-
-    def _ngrams_fn(a):
-        # n > cardinality yields the single whole-array n-gram (Trino).
-        if len(a) != 2 or not re.fullmatch(r"\d+", a[1].strip()):
-            return None
-        n = int(a[1])
-        if n < 1:
-            return None
-        return (
-            f"element_at(transform(array(({a[0]})), _na -> "
-            f"CASE WHEN size(_na) <= {n} THEN array(_na) "
-            f"ELSE transform(sequence(1, size(_na) - {n} + 1), "
-            f"_ni -> slice(_na, _ni, {n})) END), 1)")
-
-    code = _rewrite_calls(code, "ngrams", _ngrams_fn)
-
-    def _json_array_contains_fn(a):
-        if len(a) != 2:
-            return None
-        v = a[1].strip()
-        if re.fullmatch(r"-?\d+(\.\d+)?", v):
-            et, cast_v = "double", f"CAST({v} AS DOUBLE)"
-        elif re.fullmatch(r"'(?:[^']|'')*'", v) or re.fullmatch(
-                "'\x00\\d+\x00'", v):   # string literal (masked form)
-            et, cast_v = "string", v
-        elif v.upper() in ("TRUE", "FALSE"):
-            et, cast_v = "boolean", v.lower()
-        else:
-            raise TrinoSqlUnsupported(
-                "json_array_contains with a non-literal search value "
-                "(the element type drives the JSON decode)")
-        return (
-            f"element_at(transform(array(from_json(({a[0]}), "
-            f"'array<{et}>')), _ja -> CASE WHEN _ja IS NULL THEN NULL "
-            f"ELSE coalesce(array_contains(_ja, {cast_v}), false) END), "
-            "1)")
-
-    code = _rewrite_calls(code, "json_array_contains",
-                          _json_array_contains_fn)
-
-    def _cosine_similarity_fn(a):
-        # Trino's array form (the map-vector form stays unsupported —
-        # it would need sparse-map alignment, and Spark's analyzer
-        # rejects the map inputs loudly anyway).
-        if len(a) != 2:
-            return None
-        x, y = f"({a[0]})", f"({a[1]})"
-        def ssq(v):
-            return (f"aggregate(transform({v}, _cx -> _cx * _cx), "
-                    "CAST(0 AS DOUBLE), (_ca, _cv) -> _ca + _cv)")
-        return (
-            f"(aggregate(zip_with({x}, {y}, (_cx, _cy) -> _cx * _cy), "
-            "CAST(0 AS DOUBLE), (_ca, _cv) -> _ca + _cv) "
-            f"/ (sqrt({ssq(x)}) * sqrt({ssq(y)})))")
-
-    code = _rewrite_calls(code, "cosine_similarity", _cosine_similarity_fn)
-
-    def _named_unsupported(name, why):
-        def fn(a):
-            raise TrinoSqlUnsupported(f"{name}() is not supported ({why})")
-        return fn
-
-    # approx_most_frequent(buckets, value, capacity) → the EXACT top-
-    # `buckets` value→count map (count DESC, value ASC tie-break) — an
-    # exact answer satisfies every error bound the Trino sketch
-    # permits, and is deterministic where the sketch is not. The
-    # capacity argument is the sketch's memory knob and has no effect
-    # on an exact computation; buckets must be a literal so the slice
-    # bound is plan-constant. Collect buffers bind once as lambda
-    # variables (the wave-15 rule).
-    def _approx_most_frequent_fn(a):
-        if len(a) != 3:
-            return None
-        if not re.fullmatch(r"\d+", a[0].strip()):
-            raise TrinoSqlUnsupported(
-                "approx_most_frequent: the bucket count must be a "
-                "literal integer")
-        return (
-            f"element_at(transform(array(collect_list({a[1]})), _hl -> "
-            "map_from_entries(slice(array_sort("
-            "transform(array_distinct(_hl), _hv -> "
-            "struct(_hv AS k, CAST(size(filter(_hl, _hx -> _hx <=> _hv)) "
-            "AS BIGINT) AS c)), "
-            "(_hx, _hy) -> CASE WHEN _hx.c > _hy.c THEN -1 "
-            "WHEN _hx.c < _hy.c THEN 1 WHEN _hx.k < _hy.k THEN -1 "
-            "WHEN _hx.k > _hy.k THEN 1 ELSE 0 END), "
-            f"1, {a[0].strip()}))), 1)")
-
-    code = _rewrite_calls(code, "approx_most_frequent",
-                          _approx_most_frequent_fn)
-    code = _rewrite_calls(
-        code, "numeric_histogram",
-        _named_unsupported("numeric_histogram",
-                           "input-order-dependent streaming bucketer; "
-                           "use width_bucket + count (q_agg_histogram) "
-                           "or the deterministic equi-depth twin "
-                           "(q_agg_numeric_histogram_det)"))
-    # normalize(s[, form]) — UAX #15 Unicode normalization. Spark SQL
-    # has no builtin, so this lowers onto the session-registered
-    # trino_normalize pandas UDF (trino_compat.register_unicode_
-    # normalize; execute_trino and the governed SQL path register it
-    # on demand). The form is a bare keyword in Trino's grammar, not a
-    # string — anything outside the four standard forms is refused.
-    def _normalize_fn(a):
-        if len(a) == 1:
-            form = "NFC"
-        elif len(a) == 2 and re.fullmatch(r"(?i)NFK?[CD]", a[1].strip()):
-            form = a[1].strip().upper()
-        else:
-            raise TrinoSqlUnsupported(
-                "normalize: the form must be the bare keyword NFC, NFD, "
-                "NFKC or NFKD")
-        return f"trino_normalize({a[0]}, '{form}')"
-
-    code = _rewrite_calls(code, "normalize", _normalize_fn)
-
-    # chr(cp) — the Unicode codepoint character. Spark's char() wraps
-    # at 256 (chr(8364) would silently emit \x04 instead of '€'), so a
-    # literal codepoint becomes the exact character, masked into the
-    # stash like any source literal (so later rewrite passes can never
-    # mis-split on a synthesized quote/comma, and _unmask applies the
-    # same backslash contract as user literals). A non-literal
-    # codepoint lowers to UTF-8 byte construction — pure arithmetic +
-    # decode, whole-stage codegen, the codepoint bound once via the
-    # let-binding transform. Out-of-range codepoints yield NULL/garbage
-    # where Trino raises (documented divergence; Trino-valid inputs
-    # agree exactly).
-    def _chr_fn(a):
-        if len(a) != 1:
-            return None
-        arg = a[0].strip()
-        if re.fullmatch(r"\d+", arg):
-            cp = int(arg)
-            if not (0 <= cp <= 0x10FFFF) or 0xD800 <= cp <= 0xDFFF:
-                raise TrinoSqlUnsupported(
-                    f"chr({cp}): not a valid Unicode codepoint")
-            stash.append("'" + chr(cp).replace("'", "''") + "'")
-            return f"'\x00{len(stash) - 1}\x00'"
-        b = ("CASE WHEN _cp < 128 THEN lpad(hex(_cp), 2, '0') "
-             "WHEN _cp < 2048 THEN hex(192 + _cp DIV 64) "
-             "|| hex(128 + _cp % 64) "
-             "WHEN _cp < 65536 THEN hex(224 + _cp DIV 4096) "
-             "|| hex(128 + _cp DIV 64 % 64) || hex(128 + _cp % 64) "
-             "ELSE hex(240 + _cp DIV 262144) "
-             "|| hex(128 + _cp DIV 4096 % 64) "
-             "|| hex(128 + _cp DIV 64 % 64) || hex(128 + _cp % 64) END")
-        return (f"element_at(transform(array(CAST(({arg}) AS BIGINT)), "
-                f"_cp -> decode(unhex({b}), 'UTF-8')), 1)")
-
-    code = _rewrite_calls(code, "chr", _chr_fn)
-
-    def _combinations_fn(a):
-        # n-element subsets in Trino's index-lexicographic order; the
-        # nested index transforms stay whole-stage codegen. n is
-        # literal 1..3 here (Trino caps at 5; 4-5 raise named).
-        if len(a) != 2 or not re.fullmatch(r"\d+", a[1].strip()):
-            return None
-        n = int(a[1])
-        arr = f"({a[0]})"
-        if n == 1:
-            return f"transform({arr}, _c0 -> array(_c0))"
-        # size < n yields a typed empty array-of-arrays (transform of
-        # an empty slice — sequence(1, n<1) would DESCEND, the pinned
-        # r8 lesson, so every sequence below is CASE-guarded).
-        empty = "transform(slice(_ca, 1, 0), _x -> array(_x))"
-        if n == 2:
-            return (
-                f"element_at(transform(array({arr}), _ca -> "
-                f"CASE WHEN size(_ca) < 2 THEN {empty} ELSE "
-                "flatten(transform(sequence(1, size(_ca) - 1), _i -> "
-                "transform(sequence(_i + 1, size(_ca)), _j -> "
-                "array(_ca[_i - 1], _ca[_j - 1])))) END), 1)")
-        if n == 3:
-            return (
-                f"element_at(transform(array({arr}), _ca -> "
-                f"CASE WHEN size(_ca) < 3 THEN {empty} ELSE "
-                "flatten(flatten(transform(sequence(1, size(_ca) - 2), "
-                "_i -> transform(sequence(_i + 1, size(_ca) - 1), _j -> "
-                "transform(sequence(_j + 1, size(_ca)), _k -> "
-                "array(_ca[_i - 1], _ca[_j - 1], _ca[_k - 1])))))) "
-                "END), 1)")
-        raise TrinoSqlUnsupported(
-            f"combinations(arr, {n}) — supported for n in 1..3 (the "
-            "expansion is C(size, n); enumerate larger subsets with an "
-            "explicit join)")
-
-    code = _rewrite_calls(code, "combinations", _combinations_fn)
-
+    "histogram": _fixed(1, lambda a: (
+        f"element_at(transform(array(collect_list({a[0]})), _hl -> "
+        "map_from_entries(transform(array_distinct(_hl), _hv -> "
+        "struct(_hv, CAST(size(filter(_hl, _hx -> _hx <=> _hv)) "
+        "AS BIGINT))))), 1)")),
+    "multimap_agg": _fixed(2, lambda a: (
+        "element_at(transform(array(collect_list(named_struct("
+        f"'k', {a[0]}, 'v', {a[1]}))), _ml -> "
+        "map_from_entries(transform("
+        "array_distinct(transform(_ml, _me -> _me.k)), _kk -> "
+        "struct(_kk, transform(filter(_ml, _me -> _me.k <=> _kk), "
+        "_me -> _me.v))))), 1)")),
+    "hamming_distance": _hamming_fn,
+    "bit_count": _bit_count_fn,
+    "ngrams": _ngrams_fn,
+    "json_array_contains": _json_array_contains_fn,
+    "cosine_similarity": _cosine_similarity_fn,
+    "approx_most_frequent": _approx_most_frequent_fn,
+    "numeric_histogram": _named_unsupported(
+        "numeric_histogram",
+        "input-order-dependent streaming bucketer; "
+        "use width_bucket + count (q_agg_histogram) "
+        "or the deterministic equi-depth twin "
+        "(q_agg_numeric_histogram_det)"),
+    "normalize": _normalize_fn,
+    "chr": _chr_fn,
+    "combinations": _combinations_fn,
     # reduce_agg(x, s0, input_fn, combine_fn): Trino REQUIRES the
     # functions to be commutative/associative, so folding the collected
     # inputs sequentially with input_fn is semantically identical (the
     # combiner exists only for partial-state merging).
-    code = _rewrite_calls(
-        code, "reduce_agg",
-        lambda a: (f"aggregate(collect_list({a[0]}), {a[1]}, {a[2]})")
-        if len(a) == 4 else None)
-
+    "reduce_agg": _fixed(
+        4, lambda a: f"aggregate(collect_list({a[0]}), {a[1]}, {a[2]})"),
     # URL family → Spark parse_url parts.
-    for name, part in (("url_extract_protocol", "PROTOCOL"),
-                       ("url_extract_host", "HOST"),
-                       ("url_extract_path", "PATH"),
-                       ("url_extract_query", "QUERY"),
-                       ("url_extract_fragment", "REF")):
-        code = _rewrite_calls(
-            code, name,
-            lambda a, part=part: f"parse_url({a[0]}, '{part}')"
-            if len(a) == 1 else None)
+    "url_extract_protocol": _fixed(
+        1, lambda a: f"parse_url({a[0]}, 'PROTOCOL')"),
+    "url_extract_host": _fixed(1, lambda a: f"parse_url({a[0]}, 'HOST')"),
+    "url_extract_path": _fixed(1, lambda a: f"parse_url({a[0]}, 'PATH')"),
+    "url_extract_query": _fixed(
+        1, lambda a: f"parse_url({a[0]}, 'QUERY')"),
+    "url_extract_fragment": _fixed(
+        1, lambda a: f"parse_url({a[0]}, 'REF')"),
     # Trino url_extract_port returns BIGINT. Spark 4's parse_url PORT
     # part yields NULL (the java.net.URI-based extractor dropped it), so
     # the port is taken by regex from the authority instead.
-    code = _rewrite_calls(
-        code, "url_extract_port",
-        lambda a: ("CAST(nullif(regexp_extract("
-                   f"{a[0]}, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?"
-                   "[^/:?#]*:([0-9]+)', 1), '') AS BIGINT)")
-        if len(a) == 1 else None)
-    code = _rewrite_calls(code, "url_extract_parameter",
-                          lambda a: f"parse_url({a[0]}, 'QUERY', {a[1]})"
-                          if len(a) == 2 else None)
+    "url_extract_port": _fixed(1, lambda a: (
+        "CAST(nullif(regexp_extract("
+        f"{a[0]}, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?"
+        "[^/:?#]*:([0-9]+)', 1), '') AS BIGINT)")),
+    "url_extract_parameter": _fixed(
+        2, lambda a: f"parse_url({a[0]}, 'QUERY', {a[1]})"),
     # UTF-8 codec pair
-    code = _rewrite_calls(code, "to_utf8",
-                          lambda a: f"encode({a[0]}, 'UTF-8')"
-                          if len(a) == 1 else None)
-    code = _rewrite_calls(code, "from_utf8",
-                          lambda a: f"decode({a[0]}, 'UTF-8')"
-                          if len(a) == 1 else None)
-
-    # Trino array_agg KEEPS NULL elements; Spark collect_list drops
-    # them — the faithful form collects struct-wrapped values (struct
-    # fields preserve NULLs) and unwraps. The ORDER BY variant sorts the
-    # (key, value) structs before unwrapping (array_sort orders by the
-    # first field); a bare DESC on a single key reverses. DISTINCT
-    # raises: collect_set also drops NULLs and Trino's dedup keeps one.
-    def _array_agg_fn(a):
-        if len(a) != 1:
-            return None
-        arg = a[0]
-        dm = re.match(r"DISTINCT\b\s*(.+)$", arg, re.IGNORECASE | re.DOTALL)
-        if dm:
-            rest = dm.group(1)
-            om2 = re.match(r"(.+?)\s+ORDER\s+BY\s+(.+?)(?:\s+(ASC|DESC))?$",
-                           rest, re.IGNORECASE | re.DOTALL)
-            # collect_set drops NULLs (Trino's dedup keeps one), so
-            # dedup the NULL-preserving struct-collect instead.
-            dedup = ("array_distinct(transform(collect_list("
-                     "named_struct('v', {})), s -> s.v))")
-            if om2 is None:
-                return dedup.format(rest)
-            val, key, direction = (om2.group(1), om2.group(2),
-                                   (om2.group(3) or "ASC").upper())
-            if key.strip() != val.strip():
-                raise TrinoSqlUnsupported(
-                    "array_agg(DISTINCT x ORDER BY y) with y != x: "
-                    "dedup + foreign-key ordering — rewrite explicitly")
-            # Sorting AFTER dedup: Spark's array_sort is ASC NULLS LAST,
-            # matching Trino's default null ordering; reverse() gives
-            # DESC NULLS FIRST — also Trino's DESC default.
-            body = f"array_sort({dedup.format(val)})"
-            return f"reverse({body})" if direction == "DESC" else body
-        if re.search(r"\bNULLS\s+(FIRST|LAST)\b", arg, re.IGNORECASE):
-            raise TrinoSqlUnsupported(
-                "array_agg(... ORDER BY ... NULLS FIRST/LAST): explicit "
-                "null placement in the struct sort — rewrite explicitly")
-        om = re.match(r"(.+?)\s+ORDER\s+BY\s+(.+?)(?:\s+(ASC|DESC))?$",
-                      arg, re.IGNORECASE | re.DOTALL)
-        if not om:
-            return (f"transform(collect_list(named_struct('v', {arg})), "
-                    "s -> s.v)")
-        val, key, direction = om.group(1), om.group(2), (om.group(3) or "ASC")
-        if "," in key:
-            raise TrinoSqlUnsupported(
-                "array_agg(... ORDER BY k1, k2): multi-key ordering — "
-                "rewrite with a struct sort explicitly")
-        # Null sort keys (r7): Spark's struct ordering puts null fields
-        # FIRST, Trino sorts nulls as LARGER than any value (NULLS LAST
-        # ascending; FIRST after the DESC reverse) — lead with an
-        # is-null discriminator so the Trino placement wins.
-        body = (f"array_sort(collect_list(named_struct("
-                f"'n', {key} IS NULL, 'k', {key}, 'v', {val})))")
-        if direction.upper() == "DESC":
-            body = f"reverse({body})"
-        return f"transform({body}, s -> s.v)"
-
-    code = _rewrite_calls(code, "array_agg", _array_agg_fn)
-
-    # SQL/JSON json_value with a LITERAL path. Plain member/subscript
-    # chains delegate to get_json_object for the scalar TEXT (exact
-    # source slices — no number re-canonicalization), gated by a
-    # VARIANT scalar-ness check: Trino's json_value ERRORS on an
-    # array/object item, which the default NULL ON ERROR turns into
-    # NULL, while get_json_object would return the item's JSON text
-    # (r10 fix of a silent divergence). Chains with one [*] and an
-    # optional ?(...) filter lower through _jsonpath_wildcard_matches:
-    # exactly one matched item → its scalar value (strings unquoted,
-    # numbers/booleans in to_json canonical text), zero → NULL ON
-    # EMPTY, several or a non-scalar item → error → NULL ON ERROR.
-    # A non-literal path or an explicit handler clause raises.
-    def _json_value_scalar(vexpr: str, text: str | None = None) -> str:
-        """Render the VARIANT item ``vexpr`` the way json_value does:
-        NULL for SQL NULL / JSON null / array / object; the exact
-        ``text`` (when given — the get_json_object slice) or the
-        to_json canonical text otherwise, unquoted for strings."""
-        out = text if text is not None else (
-            "CASE WHEN schema_of_variant(_mv) = 'STRING' "
-            "THEN try_cast(_mv AS STRING) ELSE to_json(_mv) END")
-        return (f"element_at(transform(array({vexpr}), _mv -> "
-                f"CASE WHEN _mv IS NULL THEN NULL "
-                f"WHEN schema_of_variant(_mv) = 'VOID' THEN NULL "
-                f"WHEN schema_of_variant(_mv) LIKE 'ARRAY%' "
-                f"OR schema_of_variant(_mv) LIKE 'OBJECT%' "
-                f"OR schema_of_variant(_mv) LIKE 'STRUCT%' THEN NULL "
-                f"ELSE {out} END), 1)")
-
-    def _json_path_fn(a):
-        if len(a) != 2:
-            return None
-        lit = _lit(a[1])
-        if lit is None:
-            # r9 (advice close-out): name the clause when the refusal
-            # is an explicit ON EMPTY / ON ERROR / RETURNING — with the
-            # DEFAULT clauses (NULL ON EMPTY, NULL ON ERROR) the
-            # get_json_object lowering is faithful even in strict mode
-            # (Trino turns the strict-mode structural error into NULL);
-            # an explicit ERROR/DEFAULT handler would change behavior,
-            # so it must refuse VISIBLY rather than lower silently.
-            cm = re.search(r"\bON\s+(?:EMPTY|ERROR)\b|\bRETURNING\b"
-                           r"|\bPASSING\b", a[1], re.IGNORECASE)
-            if cm:
-                raise TrinoSqlUnsupported(
-                    f"json_value with an explicit {cm.group(0).upper()} "
-                    "clause — only the defaults (NULL ON EMPTY, NULL ON "
-                    "ERROR) lower faithfully; ERROR/DEFAULT handlers "
-                    "would need runtime raise semantics Spark's "
-                    "get_json_object cannot express")
-            raise TrinoSqlUnsupported(
-                "json_value/json_query need a literal JSON path")
-        path = lit.strip()
-        strict = bool(re.match(r"strict\b", path, re.IGNORECASE))
-        path = re.sub(r"^(?:lax|strict)\s+", "", path,
-                      flags=re.IGNORECASE).strip()
-        if re.fullmatch(r"\$(?:\.\w+|\[\d+\])*", path):
-            # r7: a strict path that is a plain member/subscript chain
-            # differs from lax ONLY in erroring on structural mismatch,
-            # and json_value's default NULL ON ERROR maps that error to
-            # the same NULL the lax empty sequence produces — one
-            # lowering serves both modes.
-            head = (f"variant_get(try_parse_json({a[0]}), "
-                    f"{requote(path)}, 'variant')")
-            return _json_value_scalar(
-                head, text=f"get_json_object({a[0]}, {requote(path)})")
-        # wildcard/[last]/filter paths: the helper carries the full
-        # strict semantics (r11 — no auto-wrap, structural errors →
-        # NULL matches → NULL ON ERROR, strict filter atoms).
-        matches = _jsonpath_wildcard_matches(a[0], path, requote,
-                                             "json_value", strict=strict)
-        if matches is None:
-            raise TrinoSqlUnsupported(
-                "json_value path with item methods, several filters, "
-                "or a filter not attached to a [*] step — plain "
-                "member/subscript chains or [*] chains with at most "
-                "one (possibly compound/parenthesized/negated) "
-                "comparison-or-exists filter are the supported "
-                "surface")
-        one = (f"element_at(transform(array({matches}), _ms -> "
-               f"CASE WHEN _ms IS NULL OR size(_ms) <> 1 THEN NULL "
-               f"ELSE element_at(_ms, 1) END), 1)")
-        return _json_value_scalar(one)
-
-    code = _rewrite_calls(code, "json_value", _json_path_fn)
-
-    # json_exists (r10): TRUE iff the path selects at least one item.
-    # A JSON null item EXISTS (VOID variant, non-NULL); a missing
-    # member is the lax empty sequence → FALSE; malformed JSON input
-    # is an input-conversion error → FALSE (the default FALSE ON
-    # ERROR); a NULL document propagates NULL. Strict mode: [*] over
-    # a non-array is a structural ERROR → FALSE ON ERROR (the helper's
-    # strict flag — NOT lax auto-wrap, which would return TRUE);
-    # strict missing members agree under the default handler (error →
-    # FALSE, same observable as the lax empty sequence), and r11 makes
-    # the !/exists filter connectives strict-aware too (missing member
-    # → UNKNOWN inside the filter, so !(...) drops where lax keeps).
-    def _json_exists_fn(a):
-        if len(a) != 2:
-            return None
-        lit = _lit(a[1])
-        if lit is None:
-            cm = re.search(r"\b(?:TRUE|FALSE|UNKNOWN|ERROR)\s+ON\s+"
-                           r"ERROR\b|\bPASSING\b", a[1], re.IGNORECASE)
-            if cm:
-                raise TrinoSqlUnsupported(
-                    f"json_exists with an explicit {cm.group(0).upper()}"
-                    " clause — only the default (FALSE ON ERROR) "
-                    "lowers faithfully")
-            raise TrinoSqlUnsupported(
-                "json_exists needs a literal JSON path")
-        strict = bool(re.match(r"strict\b", lit.strip(), re.IGNORECASE))
-        path = re.sub(r"^(?:lax|strict)\s+", "", lit.strip(),
-                      flags=re.IGNORECASE).strip()
-        if re.fullmatch(r"\$(?:\.\w+|\[\d+\])*", path):
-            found = (f"variant_get(try_parse_json({a[0]}), "
-                     f"{requote(path)}, 'variant') IS NOT NULL")
-        else:
-            matches = _jsonpath_wildcard_matches(a[0], path, requote,
-                                                 "json_exists",
-                                                 strict=strict)
-            if matches is None:
-                raise TrinoSqlUnsupported(
-                    "json_exists path with item methods, several "
-                    "filters, or a filter not attached to a [*] step "
-                    "— plain chains or [*] chains with at most one "
-                    "filter are the supported surface")
-            found = (f"element_at(transform(array({matches}), _ms -> "
-                     f"coalesce(size(_ms), 0) > 0), 1)")
-        return (f"(CASE WHEN ({a[0]}) IS NULL THEN NULL "
-                f"ELSE {found} END)")
-
-    code = _rewrite_calls(code, "json_exists", _json_exists_fn)
-
-    # json_query (r9, extended r10): returns JSON TEXT (KEEP QUOTES
-    # default — string items stay quoted, so get_json_object's scalar
-    # unquoting is NOT faithful here). Lowered through Spark's VARIANT
-    # type: to_json(variant_get(parse_json(x), path)) reproduces exact
-    # JSON item text. [*] chains (any number of steps) go through
-    # _jsonpath_wildcard_matches (lax auto-wrap + member unwrap,
-    # strict error semantics, full ?(...) predicate grammar); the
-    # .size()/.type()/.double() terminal methods render the items.
-    # All three wrapper forms:
-    #   WITHOUT (default): one item → its text; empty/multi → NULL
-    #     (NULL ON EMPTY / NULL ON ERROR defaults);
-    #   WITH [UNCONDITIONAL]: always '[items…]', empty → NULL;
-    #   WITH CONDITIONAL: single array/object item bare, else wrapped.
-    # Other item methods and non-default clauses keep the named error.
-    def _json_query_fn(a):
-        if len(a) != 2:
-            return None
-        wm = _JSON_ARG_WRAPPER_RE.match(a[1].strip())
-        lit = _lit(wm.group("ph")) if wm else None
-        if lit is None:
-            raise TrinoSqlUnsupported(
-                "json_query needs a literal JSON path (QUOTES/ON EMPTY/"
-                "ON ERROR clauses beyond the defaults are unsupported)")
-        wrapper = ("without" if not wm.group("wrap")
-                   else "cond" if wm.group("cond") else "with")
-        strict = bool(re.match(r"strict\b", lit.strip(), re.IGNORECASE))
-        path = re.sub(r"^(?:lax|strict)\s+", "", lit.strip(),
-                      flags=re.IGNORECASE)
-        # terminal .size()/.type() item methods (r10): strip the
-        # method and render the item accordingly — size() is the array
-        # element count (1 for any other item, lax); type() is the
-        # SQL/JSON type word as a quoted JSON string (KEEP QUOTES —
-        # Spark's VOID variant for JSON null makes "null" faithful);
-        # a missing member stays NULL (→ ON EMPTY) for both.
-        sm = re.fullmatch(
-            r"(?P<base>.*?)\s*"
-            r"\.(?P<meth>size|type|double|ceiling|floor|abs)\(\)\s*",
-            path, re.DOTALL)
-        size_of = None
-        meth = sm.group("meth") if sm else None
-        if sm:
-            path = sm.group("base")
-            if meth in ("ceiling", "floor", "abs"):
-                # numeric item methods (r11): number items only — any
-                # other item is an error → NULL render → whole-result
-                # NULL through the .double() channel below.
-                def size_of(vexpr, _m=meth):
-                    return _jsonpath_numeric_method_render(vexpr, _m)
-            elif meth == "double":
-                # .double() (r10): number/numeric-string items render
-                # as the double's canonical text; any other item is a
-                # CONVERSION error (not structural — lax does not
-                # suppress it), so the renderer yields NULL and the
-                # wildcard aggregation below nulls the WHOLE result
-                # (ON ERROR default) instead of skipping the item.
-                size_of = _jsonpath_double_render
-            elif meth == "size":
-                def size_of(vexpr):   # noqa: E731-like rebind — closure
-                    return (f"element_at(transform(array({vexpr}), _jq -> "
-                            f"CASE WHEN _jq IS NULL THEN NULL "
-                            f"WHEN schema_of_variant(_jq) LIKE 'ARRAY%' "
-                            f"THEN CAST(size(try_cast(_jq AS "
-                            f"ARRAY<VARIANT>)) AS STRING) "
-                            f"ELSE '1' END), 1)")
-            else:
-                def size_of(vexpr):
-                    word = _variant_type_word("_jq", quoted=True)
-                    return (
-                        f"element_at(transform(array({vexpr}), _jq -> "
-                        f"CASE WHEN _jq IS NULL THEN NULL "
-                        f"ELSE {word} END), 1)")
-        seq_meths = ("double", "ceiling", "floor", "abs")
-        plain = re.fullmatch(r"\$(?:\.\w+|\[\d+\])*", path)
-        if plain and meth not in seq_meths:
-            vexpr = (f"variant_get(try_parse_json({a[0]}), "
-                     f"{requote(path)}, 'variant')")
-            item = size_of(vexpr) if size_of else f"to_json({vexpr})"
-            if wrapper == "without":
-                return item
-            tail_case = (
-                "CASE WHEN _ji IS NULL THEN NULL "
-                "WHEN startswith(_ji, '[') OR startswith(_ji, '{') "
-                "THEN _ji ELSE concat('[', _ji, ']') END"
-                if wrapper == "cond" else
-                "CASE WHEN _ji IS NULL THEN NULL "
-                "ELSE concat('[', _ji, ']') END")
-            return (f"element_at(transform(array({item}), "
-                    f"_ji -> {tail_case}), 1)")
-        if plain:
-            # plain chain + .double(): route through the sequence
-            # machinery — lax method application unwraps an array item
-            # one level, so the method may yield SEVERAL items and the
-            # wrapper rules must see all of them.
-            vexpr = (f"variant_get(try_parse_json({a[0]}), "
-                     f"{requote(path)}, 'variant')")
-            matches_v = f"filter(array({vexpr}), _jm0 -> _jm0 IS NOT NULL)"
-        else:
-            matches_v = _jsonpath_wildcard_matches(
-                a[0], path, requote, "json_query", strict=strict)
-        if matches_v is not None:
-            # head[*] ?(filter)? tail via the shared VARIANT pipeline
-            # (lax auto-wrap, exact-K3 filter, per-element tail); the
-            # matched items render to JSON text (or the .size()/
-            # .type()/.double() method result) before the wrapper
-            # aggregation.
-            if meth in seq_meths and not strict:
-                # SQL/JSON lax METHOD APPLICATION unwraps arrays one
-                # level before the method; strict applies the method
-                # to the item directly (array → conversion error).
-                matches_v = _jsonpath_unwrap(matches_v, "_jd")
-            elem = size_of("_je") if size_of else "to_json(_je)"
-            matches = f"transform({matches_v}, _je -> {elem})"
-            if meth in seq_meths:
-                # any NULL render = a conversion error → NULL result
-                matches = (f"element_at(transform(array({matches}), "
-                           f"_md -> CASE WHEN _md IS NULL "
-                           f"OR exists(_md, _x -> _x IS NULL) "
-                           f"THEN NULL ELSE _md END), 1)")
-            if wrapper == "with":
-                agg = ("CASE WHEN _m IS NULL OR size(_m) = 0 THEN NULL "
-                       "ELSE concat('[', array_join(_m, ','), ']') END")
-            elif wrapper == "cond":
-                agg = ("CASE WHEN _m IS NULL OR size(_m) = 0 THEN NULL "
-                       "WHEN size(_m) = 1 AND "
-                       "(startswith(element_at(_m, 1), '[') OR "
-                       "startswith(element_at(_m, 1), '{')) "
-                       "THEN element_at(_m, 1) "
-                       "ELSE concat('[', array_join(_m, ','), ']') END")
-            else:
-                agg = ("CASE WHEN _m IS NULL OR size(_m) <> 1 "
-                       "THEN NULL ELSE element_at(_m, 1) END")
-            return (f"element_at(transform(array({matches}), "
-                    f"_m -> {agg}), 1)")
-        raise TrinoSqlUnsupported(
-            "json_query path with item methods other than "
-            ".size()/.type()/.double()/.ceiling()/.floor()/.abs(), "
-            "several filters, or a filter "
-            "not attached to a [*] step — member/subscript chains "
-            "with any number of [*] steps and at most one (possibly "
-            "compound/parenthesized/negated) comparison-or-exists "
-            "filter are the supported surface")
-
-    code = _rewrite_calls(code, "json_query", _json_query_fn)
-
+    "to_utf8": _fixed(1, lambda a: f"encode({a[0]}, 'UTF-8')"),
+    "from_utf8": _fixed(1, lambda a: f"decode({a[0]}, 'UTF-8')"),
+    "array_agg": _array_agg_fn,
+    "json_value": _json_path_fn,
+    "json_exists": _json_exists_fn,
+    "json_query": _json_query_fn,
     # at_timezone(ts, zone) — the function form of AT TIME ZONE; the
     # zone may be any expression here (the call shape is unambiguous).
-    code = _rewrite_calls(
-        code, "at_timezone",
-        lambda a: f"convert_timezone(current_timezone(), {a[1]}, {a[0]})"
-        if len(a) == 2 else None)
-
-    # Trino DECIMAL '1.23' typed literal → CAST with precision/scale
-    # inferred from the literal text (Trino's own inference rule).
-    def _decimal_lit(m: re.Match) -> str:
-        text = stash[int(m.group(1))][1:-1].strip()
-        nm = re.fullmatch(r"[+-]?(\d*)(?:\.(\d*))?", text)
-        if not nm:
-            raise TrinoSqlUnsupported(f"malformed DECIMAL literal {text!r}")
-        digits = len(nm.group(1) or "") + len(nm.group(2) or "")
-        scale = len(nm.group(2) or "")
-        return (f"CAST('\x00{m.group(1)}\x00' "
-                f"AS DECIMAL({max(digits, 1)}, {scale}))")
-
-    code = re.sub(r"\bDECIMAL\s+'\x00(\d+)\x00'", _decimal_lit, code)
-
-    # Trino date_format/date_parse use MySQL %-patterns; Spark's
-    # date_format/to_timestamp take Java patterns.
-    def _datefmt(spark_name):
-        def fn(a):
-            if len(a) != 2:
-                return None
-            lit = _lit(a[1])
-            if lit is None:
-                raise TrinoSqlUnsupported(
-                    f"{spark_name}: non-literal %-pattern cannot be translated")
-            if "%" not in lit:
-                return None  # already a Java pattern (or pure literal)
-            return f"{spark_name}({a[0]}, {requote(_mysql_fmt_to_java(lit))})"
-        return fn
-
-    code = _rewrite_calls(code, "date_format", _datefmt("date_format"))
-    code = _rewrite_calls(code, "date_parse", _datefmt("to_timestamp"))
-
+    "at_timezone": _fixed(2, lambda a: (
+        f"convert_timezone(current_timezone(), {a[1]}, {a[0]})")),
+    "date_format": _datefmt("date_format"),
+    "date_parse": _datefmt("to_timestamp"),
     # ---- wave 16 (r8): base/byte-order conversion, occurrence
     # positions, durations, time-zone parts, interval→ms, Wilson
     # intervals, binary-returning digests. Inputs referenced more than
     # once are bound as lambda variables (the transform(array(x), …)
     # let-binding) so projection collapse can't re-inline them.
-    def _raise(exc: Exception):
-        raise exc
-
-    code = _rewrite_calls(
-        code, "to_base",
-        lambda a: (
-            # Trino emits lowercase digits and a leading '-' for
-            # negatives; Spark's conv is uppercase and treats negative
-            # input as unsigned 64-bit.
-            f"element_at(transform(array(CAST(({a[0]}) AS BIGINT)), _tb -> "
-            f"CASE WHEN _tb < 0 THEN '-' || lower(conv(-_tb, 10, {a[1]})) "
-            f"ELSE lower(conv(_tb, 10, {a[1]})) END), 1)")
-        if len(a) == 2 else None)
-    code = _rewrite_calls(
-        code, "from_base",
-        lambda a: (
-            f"element_at(transform(array(({a[0]})), _fb -> "
-            f"CASE WHEN substring(_fb, 1, 1) = '-' "
-            f"THEN -CAST(conv(substring(_fb, 2), {a[1]}, 10) AS BIGINT) "
-            f"WHEN substring(_fb, 1, 1) = '+' "
-            f"THEN CAST(conv(substring(_fb, 2), {a[1]}, 10) AS BIGINT) "
-            f"ELSE CAST(conv(_fb, {a[1]}, 10) AS BIGINT) END), 1)")
-        if len(a) == 2 else None)
-
+    # Trino to_base emits lowercase digits and a leading '-' for
+    # negatives; Spark's conv is uppercase and treats negative input
+    # as unsigned 64-bit.
+    "to_base": _fixed(2, lambda a: (
+        f"element_at(transform(array(CAST(({a[0]}) AS BIGINT)), _tb -> "
+        f"CASE WHEN _tb < 0 THEN '-' || lower(conv(-_tb, 10, {a[1]})) "
+        f"ELSE lower(conv(_tb, 10, {a[1]})) END), 1)")),
+    "from_base": _fixed(2, lambda a: (
+        f"element_at(transform(array(({a[0]})), _fb -> "
+        f"CASE WHEN substring(_fb, 1, 1) = '-' "
+        f"THEN -CAST(conv(substring(_fb, 2), {a[1]}, 10) AS BIGINT) "
+        f"WHEN substring(_fb, 1, 1) = '+' "
+        f"THEN CAST(conv(substring(_fb, 2), {a[1]}, 10) AS BIGINT) "
+        f"ELSE CAST(conv(_fb, {a[1]}, 10) AS BIGINT) END), 1)")),
     # index(s, sub) (r10): Trino's Teradata-compat alias of strpos.
-    code = _rewrite_calls(
-        code, "index",
-        lambda a: f"instr({a[0]}, {a[1]})" if len(a) == 2 else None)
+    "index": _fixed(2, lambda a: f"instr({a[0]}, {a[1]})"),
     # char2hexint(s) (r10): Teradata compat — the hex rendering of the
     # string's UTF-16BE code units (Spark's hex() is uppercase like
     # Trino's output).
-    code = _rewrite_calls(
-        code, "char2hexint",
-        lambda a: f"hex(encode(({a[0]}), 'UTF-16BE'))"
-        if len(a) == 1 else None)
+    "char2hexint": _fixed(1, lambda a: f"hex(encode(({a[0]}), 'UTF-16BE'))"),
     # strpos(s, sub, n): position of the n-th occurrence (occurrences
     # may overlap — Trino's walk restarts at match+1; negative n counts
     # from the end, 0 of either missing occurrence → 0). The candidate
     # positions are a filtered index sequence; sequence(1, n) DESCENDS
     # for n < 1, so the short-input case returns an empty array
     # explicitly. The 2-arg form falls through to the instr rename.
-    code = _rewrite_calls(
-        code, "strpos",
-        lambda a: (
-            f"coalesce(try_element_at(filter("
-            f"CASE WHEN length({a[0]}) >= length({a[1]}) "
-            f"THEN sequence(1, length({a[0]}) - length({a[1]}) + 1) "
-            f"ELSE CAST(array() AS ARRAY<INT>) END, "
-            f"_sp -> substring({a[0]}, _sp, length({a[1]})) = ({a[1]})), "
-            f"({a[2]})), 0)")
-        if len(a) == 3 else None)
-
-    # regexp_position start/occurrence forms (r9, formerly refused).
-    # 3-arg: search the suffix, re-offset the hit. 4-arg: replay
-    # matcher.find() — each round finds the next match at/after the
-    # cursor, then advances the cursor past the match (max(len, 1) so
-    # empty matches still advance), `occurrence` rounds via an
-    # aggregate fold over sequence(1, occ). Anchors (^) see the
-    # suffix, not the original string — the one documented divergence
-    # of the substring approach.
-    def _regexp_position_fn(a):
-        if len(a) == 2:
-            return ("element_at(transform(array(regexp_instr("
-                    f"{a[0]}, {a[1]})), _rp -> "
-                    "CASE WHEN _rp = 0 THEN -1 "
-                    "ELSE CAST(_rp AS INT) END), 1)")
-        if len(a) not in (3, 4):
-            return None
-        err = requote(
-            "regexp_position: start and occurrence must be positive "
-            "(Trino INVALID_FUNCTION_ARGUMENT)")
-        if len(a) == 3:
-            return (
-                f"element_at(transform(array(named_struct("
-                f"'s', ({a[0]}), 'st', CAST(({a[2]}) AS INT))), _rs -> "
-                f"CASE WHEN _rs.st < 1 THEN "
-                f"CAST(raise_error({err}) AS INT) "
-                f"ELSE element_at(transform(array(regexp_instr("
-                f"substring(_rs.s, _rs.st), {a[1]})), _rp -> "
-                f"CASE WHEN _rp = 0 THEN -1 "
-                f"ELSE CAST(_rp AS INT) + _rs.st - 1 END), 1) END), 1)")
-        step = (
-            f"element_at(transform(array(CAST(regexp_instr("
-            f"substring(_rs.s, _ra.pos), {a[1]}) AS INT)), _rm -> "
-            "IF(_rm = 0, named_struct('pos', _ra.pos, "
-            "'res', CAST(-1 AS INT), 'dead', true), "
-            "named_struct('pos', CAST(_rm + _ra.pos - 1 + "
-            "greatest(length(regexp_extract(substring(_rs.s, "
-            f"CAST(_rm + _ra.pos - 1 AS INT)), {a[1]}, 0)), 1) AS INT), "
-            "'res', CAST(_rm + _ra.pos - 1 AS INT), 'dead', false))"
-            "), 1)")
-        return (
-            f"element_at(transform(array(named_struct("
-            f"'s', ({a[0]}), 'st', CAST(({a[2]}) AS INT), "
-            f"'oc', CAST(({a[3]}) AS INT))), _rs -> "
-            f"CASE WHEN _rs.st < 1 OR _rs.oc < 1 THEN "
-            f"CAST(raise_error({err}) AS INT) "
-            f"ELSE aggregate(sequence(1, _rs.oc), "
-            f"named_struct('pos', _rs.st, 'res', CAST(-1 AS INT), "
-            f"'dead', false), "
-            f"(_ra, _ri) -> IF(_ra.dead, _ra, {step}), "
-            f"_ra -> _ra.res) END), 1)")
-
-    code = _rewrite_calls(code, "regexp_position", _regexp_position_fn)
-
-    def _parse_duration_fn(a):
-        if len(a) != 1:
-            return None
-        lit = _lit(a[0])
-        if lit is not None:
-            m = re.fullmatch(r"\s*(\d+(?:\.\d+)?)\s*(ns|us|ms|s|m|h|d)\s*",
-                             lit)
-            if not m:
-                raise TrinoSqlUnsupported(
-                    f"parse_duration: unparsable duration {lit!r}")
-            mult = {"ns": 1e-9, "us": 1e-6, "ms": 1e-3, "s": 1.0,
-                    "m": 60.0, "h": 3600.0, "d": 86400.0}[m.group(2)]
-            secs = round(float(m.group(1)) * mult, 6)
-            return (f"make_dt_interval(0, 0, 0, "
-                    f"CAST({secs} AS DECIMAL(18, 6)))")
-        # Column path (r10, formerly refused): the same airlift
-        # Duration grammar evaluated in codegen — regexp_extract the
-        # magnitude and unit, CASE the unit to its seconds factor
-        # (identical table to the literal fold above), NULL in → NULL
-        # out, a non-null non-conforming string errors like Trino.
-        pat = requote(r"^\s*(\d+(?:\.\d+)?)\s*(ns|us|ms|s|m|h|d)\s*$")
-        units = (("ns", "1.0e-9"), ("us", "1.0e-6"), ("ms", "1.0e-3"),
-                 ("s", "1.0"), ("m", "60.0"), ("h", "3600.0"),
-                 ("d", "86400.0"))
-        mult = ("CASE _pd.u " + " ".join(
-            f"WHEN {requote(u)} THEN {f}" for u, f in units) + " END")
-        err = requote("parse_duration: unparsable duration: ")
-        src = f"CAST(({a[0]}) AS STRING)"
-        return (
-            f"element_at(transform(array(named_struct("
-            f"'d', {src}, "
-            f"'n', try_cast(regexp_extract({src}, {pat}, 1) AS DOUBLE), "
-            f"'u', regexp_extract({src}, {pat}, 2))), _pd -> "
-            f"CASE WHEN _pd.d IS NULL THEN NULL "
-            f"WHEN _pd.n IS NULL OR _pd.u = {requote('')} THEN "
-            f"make_dt_interval(0, 0, 0, CAST(raise_error(concat({err}, "
-            f"_pd.d)) AS DECIMAL(18, 6))) "
-            f"ELSE make_dt_interval(0, 0, 0, "
-            f"CAST(round(_pd.n * {mult}, 6) AS DECIMAL(18, 6))) END), 1)")
-
-    code = _rewrite_calls(code, "parse_duration", _parse_duration_fn)
-
+    "strpos": _fixed(3, lambda a: (
+        f"coalesce(try_element_at(filter("
+        f"CASE WHEN length({a[0]}) >= length({a[1]}) "
+        f"THEN sequence(1, length({a[0]}) - length({a[1]}) + 1) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END, "
+        f"_sp -> substring({a[0]}, _sp, length({a[1]})) = ({a[1]})), "
+        f"({a[2]})), 0)")),
+    "regexp_position": _regexp_position_fn,
+    "parse_duration": _parse_duration_fn,
     # Normalizing to DAY TO SECOND first makes the numeric cast yield
     # seconds (a day-time interval casts in its END-field unit).
-    code = _rewrite_calls(
-        code, "to_milliseconds",
-        lambda a: (
-            f"CAST(CAST(CAST(({a[0]}) AS INTERVAL DAY TO SECOND) "
-            "AS DECIMAL(30, 6)) * 1000 AS BIGINT)")
-        if len(a) == 1 else None)
-
+    "to_milliseconds": _fixed(1, lambda a: (
+        f"CAST(CAST(CAST(({a[0]}) AS INTERVAL DAY TO SECOND) "
+        "AS DECIMAL(30, 6)) * 1000 AS BIGINT)")),
     # to_iso8601: DATE → yyyy-MM-dd, timestamps → the T form with
     # millis (Trino's timestamp(3) default rendering). typeof() folds
     # to a constant per plan, so the CASE costs nothing at runtime.
-    code = _rewrite_calls(
-        code, "to_iso8601",
-        lambda a: (
-            f"element_at(transform(array(({a[0]})), _ti -> "
-            "CASE WHEN typeof(_ti) = 'date' "
-            "THEN date_format(_ti, 'yyyy-MM-dd') "
-            "ELSE date_format(_ti, 'yyyy-MM-dd\\'T\\'HH:mm:ss.SSS') "
-            "END), 1)")
-        if len(a) == 1 else None)
-
-    # timezone_hour/_minute: the session-zone UTC offset at the given
-    # wall-clock instant (Trino coerces a timestamp to the session
-    # zone). offset = wall-clock minus its UTC rendering, both
-    # interpreted in one fixed zone so the interpretation cancels.
-    def _tz_part(hour: bool):
-        def fn(a):
-            if len(a) != 1:
-                return None
-            off = ("CAST((unix_micros(CAST(({x}) AS TIMESTAMP)) - "
-                   "unix_micros(CAST(convert_timezone("
-                   "current_timezone(), 'UTC', ({x})) AS TIMESTAMP))) "
-                   "DIV 1000000 AS BIGINT)").replace("{x}", a[0])
-            return (f"element_at(transform(array({off}), _tz -> "
-                    + ("_tz DIV 3600" if hour else "(_tz DIV 60) % 60")
-                    + "), 1)")
-        return fn
-
-    code = _rewrite_calls(code, "timezone_hour", _tz_part(True))
-    code = _rewrite_calls(code, "timezone_minute", _tz_part(False))
-
+    "to_iso8601": _fixed(1, lambda a: (
+        f"element_at(transform(array(({a[0]})), _ti -> "
+        "CASE WHEN typeof(_ti) = 'date' "
+        "THEN date_format(_ti, 'yyyy-MM-dd') "
+        "ELSE date_format(_ti, 'yyyy-MM-dd\\'T\\'HH:mm:ss.SSS') "
+        "END), 1)")),
+    "timezone_hour": _tz_part(True),
+    "timezone_minute": _tz_part(False),
     # with_timezone(ts, zone): the wall clock read in `zone`, rendered
     # as its UTC instant — the same convention as zoned TIMESTAMP
     # literals in this front end.
-    code = _rewrite_calls(
-        code, "with_timezone",
-        lambda a: f"convert_timezone({a[1]}, 'UTC', {a[0]})"
-        if len(a) == 2 else None)
-
+    "with_timezone": _fixed(
+        2, lambda a: f"convert_timezone({a[1]}, 'UTC', {a[0]})"),
     # 64-bit big-endian byte order. conv's negative to-base is its
     # signed mode, so 0xFFFF… round-trips to -1 and not 2^64-1.
-    code = _rewrite_calls(
-        code, "from_big_endian_64",
-        lambda a: f"CAST(conv(hex({a[0]}), 16, -10) AS BIGINT)"
-        if len(a) == 1 else None)
-    code = _rewrite_calls(
-        code, "to_big_endian_64",
-        lambda a: f"unhex(lpad(hex(CAST({a[0]} AS BIGINT)), 16, '0'))"
-        if len(a) == 1 else None)
+    "from_big_endian_64": _fixed(
+        1, lambda a: f"CAST(conv(hex({a[0]}), 16, -10) AS BIGINT)"),
+    "to_big_endian_64": _fixed(
+        1, lambda a: f"unhex(lpad(hex(CAST({a[0]} AS BIGINT)), 16, '0'))"),
     # 32-bit variants (r10): hex() prints 64-bit two's complement, so
     # the low 8 hex digits ARE the int32 big-endian bytes; decode
     # re-signs the 32-bit value manually (conv's signed mode is
     # 64-bit-wide, which would leave 0xFFFFFFFF positive) and guards
     # the exact-4-byte input rule like Trino.
-    code = _rewrite_calls(
-        code, "to_big_endian_32",
-        lambda a: (f"unhex(right(lpad(hex(CAST({a[0]} AS BIGINT)), "
-                   f"16, '0'), 8))")
-        if len(a) == 1 else None)
-
-    def _from_be32(a):
-        if len(a) != 1:
-            return None
-        err = requote("from_big_endian_32: input must be exactly 4 bytes")
-        return (
-            f"CASE WHEN octet_length({a[0]}) <> 4 "
-            f"THEN CAST(raise_error({err}) AS INT) "
-            f"ELSE element_at(transform(array("
-            f"CAST(conv(hex({a[0]}), 16, 10) AS BIGINT)), _be -> "
-            f"CAST(IF(_be >= 2147483648, _be - 4294967296, _be) AS INT)"
-            f"), 1) END")
-
-    code = _rewrite_calls(code, "from_big_endian_32", _from_be32)
+    "to_big_endian_32": _fixed(1, lambda a: (
+        f"unhex(right(lpad(hex(CAST({a[0]} AS BIGINT)), 16, '0'), 8))")),
+    "from_big_endian_32": _from_be32,
     # is_finite / is_infinite (r10): NaN compares false against the
     # infinities in BOTH directions under Spark's NaN ordering (NaN is
     # the largest double: NaN < Inf is false, NaN > -Inf is true), so
     # the two-sided range test is exactly Java's Double.isFinite.
-    code = _rewrite_calls(
-        code, "is_finite",
-        lambda a: (f"(CAST(({a[0]}) AS DOUBLE) > CAST('-Infinity' AS "
-                   f"DOUBLE) AND CAST(({a[0]}) AS DOUBLE) < "
-                   f"CAST('Infinity' AS DOUBLE))")
-        if len(a) == 1 else None)
-    code = _rewrite_calls(
-        code, "is_infinite",
-        lambda a: (f"(abs(CAST(({a[0]}) AS DOUBLE)) = "
-                   f"CAST('Infinity' AS DOUBLE))")
-        if len(a) == 1 else None)
+    "is_finite": _fixed(1, lambda a: (
+        f"(CAST(({a[0]}) AS DOUBLE) > CAST('-Infinity' AS "
+        f"DOUBLE) AND CAST(({a[0]}) AS DOUBLE) < "
+        f"CAST('Infinity' AS DOUBLE))")),
+    "is_infinite": _fixed(1, lambda a: (
+        f"(abs(CAST(({a[0]}) AS DOUBLE)) = CAST('Infinity' AS DOUBLE))")),
     # year_of_week / yow (r10): ISO week-numbering year — Spark's
     # EXTRACT(YEAROFWEEK) is the identical ISO-8601 definition.
-    for _yow_name in ("year_of_week", "yow"):
-        code = _rewrite_calls(
-            code, _yow_name,
-            lambda a: f"extract(YEAROFWEEK FROM ({a[0]}))"
-            if len(a) == 1 else None)
+    "year_of_week": _fixed(
+        1, lambda a: f"extract(YEAROFWEEK FROM ({a[0]}))"),
+    "yow": _fixed(1, lambda a: f"extract(YEAROFWEEK FROM ({a[0]}))"),
     # millisecond(ts) (r10): the 0-999 millis field.
-    code = _rewrite_calls(
-        code, "millisecond",
-        lambda a: f"CAST(date_format(({a[0]}), 'SSS') AS INT)"
-        if len(a) == 1 else None)
+    "millisecond": _fixed(
+        1, lambda a: f"CAST(date_format(({a[0]}), 'SSS') AS INT)"),
     # to/from_base64url (r10): RFC 4648 §5 URL-safe alphabet — the
     # standard encoding with +/ swapped for -_ (Java's
     # Base64.getUrlEncoder, which Trino wraps, keeps '=' padding and
     # its decoder accepts unpadded input — unbase64 does too).
-    code = _rewrite_calls(
-        code, "to_base64url",
-        lambda a: f"translate(base64({a[0]}), '+/', '-_')"
-        if len(a) == 1 else None)
+    "to_base64url": _fixed(
+        1, lambda a: f"translate(base64({a[0]}), '+/', '-_')"),
     # from_base64url rejects standard-alphabet input ('+' or '/') the
     # way Trino's strict URL-safe decoder does (r11 — translate alone
     # is a no-op on them, silently accepting invalid input).
-    code = _rewrite_calls(
-        code, "from_base64url",
-        lambda a: (f"unbase64(CASE WHEN ({a[0]}) RLIKE '[+/]' "
-                   f"THEN raise_error(concat('Invalid base64url "
-                   f"character in: ', {a[0]})) "
-                   f"ELSE translate({a[0]}, '-_', '+/') END)")
-        if len(a) == 1 else None)
-
-    def _wilson(sign):
-        def fn(a):
-            if len(a) != 3:
-                return None
-            s, n, z = a
-            return (
-                f"element_at(transform("
-                f"array(CAST(({s}) AS DOUBLE) / ({n})), _wp -> "
-                f"((_wp + ({z}) * ({z}) / (2.0 * ({n})) {sign} ({z}) * "
-                f"sqrt(_wp * (1.0 - _wp) / ({n}) + "
-                f"({z}) * ({z}) / (4.0 * ({n}) * ({n})))) "
-                f"/ (1.0 + ({z}) * ({z}) / ({n})))), 1)")
-        return fn
-
-    code = _rewrite_calls(code, "wilson_interval_lower", _wilson("-"))
-    code = _rewrite_calls(code, "wilson_interval_upper", _wilson("+"))
-
-    # human_readable_seconds: weeks/days/hours/minutes/seconds parts,
-    # singular/plural, ", "-joined, zero-valued parts dropped (CASE
-    # without ELSE is NULL and concat_ws skips NULLs), all-zero → the
-    # literal '0 seconds'. Input rounds half-up to whole seconds.
-    def _hrs_fn(a):
-        if len(a) != 1:
-            return None
-        part = ("CASE WHEN {v} > 0 THEN concat({v}, "
-                "IF({v} = 1, ' {u}', ' {u}s')) END")
-        units = [("_hr DIV 604800", "week"),
-                 ("_hr % 604800 DIV 86400", "day"),
-                 ("_hr % 86400 DIV 3600", "hour"),
-                 ("_hr % 3600 DIV 60", "minute"),
-                 ("_hr % 60", "second")]
-        parts = ", ".join(part.replace("{v}", f"({v})").replace("{u}", u)
-                          for v, u in units)
-        return (f"element_at(transform(array(CAST(floor(({a[0]}) + 0.5) "
-                f"AS BIGINT)), _hr -> CASE WHEN _hr = 0 "
-                f"THEN '0 seconds' "
-                f"ELSE concat_ws(', ', {parts}) END), 1)")
-
-    code = _rewrite_calls(code, "human_readable_seconds", _hrs_fn)
-
-    # luhn_check (wave 18): the Luhn mod-10 checksum as a pure codegen
-    # fold — from the RIGHT, every second digit doubles (minus 9 above
-    # 9). NULL → NULL; non-digit input raises like Trino (raise_error
-    # inside the guarded branch). The input binds once as a lambda
-    # variable.
-    def _luhn_fn(a):
-        if len(a) != 1:
-            return None
-        d = "(ascii(substring(_lu, _li, 1)) - 48)"
-        term = (f"CASE WHEN (length(_lu) - _li) % 2 = 1 THEN "
-                f"CASE WHEN {d} > 4 THEN {d} * 2 - 9 ELSE {d} * 2 END "
-                f"ELSE {d} END")
-        return (f"element_at(transform(array(({a[0]})), _lu -> "
-                "CASE WHEN _lu IS NULL THEN CAST(NULL AS BOOLEAN) "
-                "WHEN NOT (_lu RLIKE '^[0-9]+$') THEN "
-                "CAST(raise_error('luhn_check: input must contain only "
-                "digits') AS BOOLEAN) "
-                "ELSE aggregate(sequence(1, length(_lu)), 0, "
-                f"(_ls, _li) -> _ls + ({term})) % 10 = 0 END), 1)")
-
-    code = _rewrite_calls(code, "luhn_check", _luhn_fn)
-
-    # ---- wave 19 (r8, divergence audit): skewness/kurtosis. Trino
-    # computes the SAMPLE-adjusted statistics (bias-corrected, the
-    # n/((n-1)(n-2)) family); Spark's same-named aggregates are the
-    # POPULATION formulas (g1, m4/m2²-3) — a silent value divergence
-    # on every finite group (verified: n=6 gives 1.0952 vs Trino's
-    # 1.4997). Lowered to power sums (one pass, codegen) with the
-    # central moments bound once per group via the nested-transform
-    # let-binding; n below the defined minimum divides by zero → NULL,
-    # matching both engines' NULL-for-undefined convention.
-    def _sample_moment_fn(kind: str):
-        def fn(a):
-            if len(a) != 1:
-                return None
-            x = f"CAST(({a[0]}) AS DOUBLE)"
-            sums = (f"array(named_struct('n', CAST(count({x}) AS DOUBLE), "
-                    f"'s1', sum({x}), 's2', sum({x} * {x}), "
-                    f"'s3', sum({x} * {x} * {x}), "
-                    f"'s4', sum({x} * {x} * {x} * {x})))")
-            mu = "(_m.s1 / _m.n)"
-            cm = (f"array(named_struct('n', _m.n, "
-                  f"'m2', _m.s2 - _m.n * {mu} * {mu}, "
-                  f"'m3', _m.s3 - 3 * {mu} * _m.s2 "
-                  f"+ 2 * _m.n * {mu} * {mu} * {mu}, "
-                  f"'m4', _m.s4 - 4 * {mu} * _m.s3 "
-                  f"+ 6 * {mu} * {mu} * _m.s2 "
-                  f"- 3 * _m.n * {mu} * {mu} * {mu} * {mu}))")
-            if kind == "skewness":
-                # Undefined below n=3 or on a constant group → NULL
-                # (DuckDB's convention too, so oracles line up).
-                final = ("CASE WHEN _c.n < 3 OR _c.m2 <= 0 "
-                         "THEN CAST(NULL AS DOUBLE) ELSE "
-                         "(_c.n / ((_c.n - 1) * (_c.n - 2))) * _c.m3 "
-                         "/ pow(sqrt(_c.m2 / (_c.n - 1)), 3) END")
-            else:
-                final = ("CASE WHEN _c.n < 4 OR _c.m2 <= 0 "
-                         "THEN CAST(NULL AS DOUBLE) ELSE "
-                         "_c.n * (_c.n + 1) / ((_c.n - 1) * (_c.n - 2) "
-                         "* (_c.n - 3)) * _c.m4 "
-                         "/ pow(_c.m2 / (_c.n - 1), 2) "
-                         "- 3 * (_c.n - 1) * (_c.n - 1) "
-                         "/ ((_c.n - 2) * (_c.n - 3)) END")
-            return (f"element_at(transform({sums}, _m -> "
-                    f"element_at(transform({cm}, _c -> {final}), 1)), 1)")
-        return fn
-
-    code = _rewrite_calls(code, "skewness", _sample_moment_fn("skewness"))
-    code = _rewrite_calls(code, "kurtosis", _sample_moment_fn("kurtosis"))
-
-    # (geometric_mean is wave 7's guarded exp(avg(ln)) above.)
-
-    # 2-arg trim family (wave 20, divergence audit): Trino's
-    # trim/ltrim/rtrim(string, chars) — Spark's 2-arg forms take
-    # (trimStr, string), the arguments REVERSED (verified:
-    # trim('xax', 'x') is 'a' in Trino/DuckDB but '' in Spark) — a
-    # silent wrong-value pass-through until now. Lowered to the
-    # unambiguous SQL-standard TRIM(BOTH|LEADING|TRAILING c FROM s),
-    # identical in both engines. 1-arg forms (and the standard FROM
-    # spelling, which arrives as a single comma-less argument) pass
-    # through untouched.
-    def _trim_fn(kind: str):
-        def fn(a):
-            if len(a) != 2:
-                return None
-            return f"TRIM({kind} ({a[1]}) FROM ({a[0]}))"
-        return fn
-
-    code = _rewrite_calls(code, "trim", _trim_fn("BOTH"))
-    code = _rewrite_calls(code, "ltrim", _trim_fn("LEADING"))
-    code = _rewrite_calls(code, "rtrim", _trim_fn("TRAILING"))
-
-    # ---- wave 20 (r8): counting-distribution entropy, top-n
-    # max_by/min_by, checksum refusal.
-    # entropy(c): Shannon log-2 entropy of COUNT inputs —
-    # -Σ (c/S)·log2(c/S) = log2(S) - Σ(c·log2 c)/S, a one-pass pair of
-    # sums. Zero counts contribute 0; a NEGATIVE count poisons the
-    # result to NaN (Trino raises — NaN is the visible equivalent this
-    # front end can express without a per-row branch to raise_error).
-    def _entropy_fn(a):
-        if len(a) != 1:
-            return None
-        c = f"CAST(({a[0]}) AS DOUBLE)"
-        # Negative branch emits NaN DIRECTLY (r9, advice): bare
-        # log2(negative) is NULL in Spark (the IEEE log wrapper runs
-        # before this pass), and sum() would SKIP the NULL — a silently
-        # wrong finite entropy instead of the documented NaN poison.
-        term = (f"CASE WHEN {c} > 0 THEN {c} * log2({c}) "
-                f"WHEN {c} = 0 THEN 0.0 "
-                f"ELSE CAST('NaN' AS DOUBLE) END")
-        return (f"element_at(transform(array(named_struct("
-                f"'s', sum({c}), 'sl', sum({term}))), _en -> "
-                "CASE WHEN _en.s IS NULL OR _en.s = 0 THEN 0.0 "
-                "ELSE log2(_en.s) - _en.sl / _en.s END), 1)")
-
-    code = _rewrite_calls(code, "entropy", _entropy_fn)
-
-    # max_by(x, y, n) / min_by(x, y, n): the x values of the n
-    # largest/smallest y — Spark's twins are 2-arg only. Sorted
-    # collect_list fold, NULL keys dropped (Trino ignores them), value
-    # as final tie-break so equal keys order deterministically (Trino
-    # leaves ties arbitrary). The 2-arg forms fall through untouched
-    # (same name, same semantics in Spark).
-    def _n_by_fn(desc: bool):
-        def fn(a):
-            if len(a) != 3:
-                return None
-            lo, hi = ("-1", "1") if desc else ("1", "-1")
-            cmp = (f"CASE WHEN _na.k > _nb.k THEN {lo} "
-                   f"WHEN _na.k < _nb.k THEN {hi} "
-                   f"WHEN _na.v > _nb.v THEN {lo} "
-                   f"WHEN _na.v < _nb.v THEN {hi} ELSE 0 END")
-            return (f"transform(slice(array_sort(filter(collect_list("
-                    f"struct(({a[1]}) AS k, ({a[0]}) AS v)), "
-                    f"_nf -> _nf.k IS NOT NULL), "
-                    f"(_na, _nb) -> {cmp}), 1, {a[2]}), _nv -> _nv.v)")
-        return fn
-
-    code = _rewrite_calls(code, "max_by", _n_by_fn(desc=True))
-    code = _rewrite_calls(code, "min_by", _n_by_fn(desc=False))
-
-    code = _rewrite_calls(
-        code, "checksum",
-        _named_unsupported(
-            "checksum", "order-insensitive xxhash64 sketch — engine-"
-            "specific values; hash a canonical sorted rendering "
-            "(e.g. md5 of listagg) for a portable checksum"))
-
-
-    # Trino's md5/sha1 return VARBINARY; Spark's return the hex STRING
-    # (sha256/sha512 are handled the same way earlier in this pass).
-    code = _rewrite_calls(
-        code, "md5",
-        lambda a: f"unhex(md5({a[0]}))" if len(a) == 1 else None)
-    code = _rewrite_calls(
-        code, "sha1",
-        lambda a: f"unhex(sha1({a[0]}))" if len(a) == 1 else None)
-
-    # Honest refusals — passing these through would be silently wrong
-    # or a bare unresolved-routine error.
-    # xxhash64 (r9, formerly refused): Trino's form is seed-0 XXH64
-    # returning the 64-bit result as little-endian VARBINARY
-    # (VarbinaryFunctions.java — airlift Slice.setLong); Spark's
-    # builtin seeds with 42 and returns BIGINT, so it lowers to the
-    # session-registered trino_xxhash64 pandas UDF (trino_compat.xxh64
-    # — bit-verified against Spark's own builtin at seed 42).
-    code = _rewrite_calls(
-        code, "xxhash64",
-        lambda a: f"trino_xxhash64({a[0]})" if len(a) == 1 else None)
-    # to_base32 / from_base32 (r10, formerly a bare unresolved-routine
-    # failure): Spark has no base32 builtin (base64 only), so both
-    # lower to session pandas UDFs verified against RFC 4648's own
-    # test vectors (trino_compat.register_base32).
-    code = _rewrite_calls(
-        code, "to_base32",
-        lambda a: f"trino_to_base32({a[0]})" if len(a) == 1 else None)
-    code = _rewrite_calls(
-        code, "from_base32",
-        lambda a: f"trino_from_base32({a[0]})" if len(a) == 1 else None)
-    # hmac_* / ieee754 codecs (r10, formerly bare unresolved-routines):
-    # session pandas UDFs (trino_compat.register_binary_codecs) —
-    # HMAC proven against RFC 4231/2202 vectors, ieee754 is the exact
-    # Java doubleToLongBits/floatToIntBits big-endian layout.
-    for _alg in ("md5", "sha1", "sha256", "sha512"):
-        code = _rewrite_calls(
-            code, f"hmac_{_alg}",
-            (lambda alg: lambda a: (f"trino_hmac_{alg}({a[0]}, {a[1]})"
-                                    if len(a) == 2 else None))(_alg))
-    # Arrow converts SQL NULL doubles to NaN before the pandas UDF can
-    # see them, so NULL-in-NULL-out must be decided SQL-SIDE — the
-    # CASE guard keeps genuine NaN inputs flowing to the UDF (where
-    # IEEE semantics apply) while NULL never reaches it (r10 review
-    # fix: to_ieee754_64(NULL) returned the NaN bit pattern, and a
-    # NULL sd crashed the stat CDFs' domain checks).
-    for _ieee in ("to_ieee754_64", "to_ieee754_32",
-                  "from_ieee754_64", "from_ieee754_32"):
-        code = _rewrite_calls(
-            code, _ieee,
-            (lambda nm: lambda a: (
-                f"CASE WHEN ({a[0]}) IS NULL THEN NULL "
-                f"ELSE trino_{nm}({a[0]}) END"
-                if len(a) == 1 else None))(_ieee))
-    # statistical CDFs (r10): normal_cdf / inverse_normal_cdf /
-    # beta_cdf / inverse_beta_cdf → session pandas UDFs
-    # (trino_compat.register_stat_fns — erfc-exact normal, Lentz
-    # continued-fraction regularized beta, domain errors like Trino).
-    for _cdf in ("normal_cdf", "inverse_normal_cdf",
-                 "beta_cdf", "inverse_beta_cdf"):
-        code = _rewrite_calls(
-            code, _cdf,
-            (lambda nm: lambda a: (
-                f"CASE WHEN ({a[0]}) IS NULL OR ({a[1]}) IS NULL "
-                f"OR ({a[2]}) IS NULL THEN CAST(NULL AS DOUBLE) "
-                f"ELSE trino_{nm}({a[0]}, {a[1]}, {a[2]}) END"
-                if len(a) == 3 else None))(_cdf))
-    # murmur3 (r10, formerly refused): Trino's 128-bit MurmurHash3
-    # (x64_128, seed 0) via the session-registered trino_murmur3
-    # pandas UDF — implemented from Appleby's public-domain spec and
-    # bit-verified by smhasher's published VERIFICATION value
-    # (trino_compat.murmur3_x64_128).
-    code = _rewrite_calls(
-        code, "murmur3",
-        lambda a: f"trino_murmur3({a[0]})" if len(a) == 1 else None)
-    # word_stem (r10, formerly refused): Trino stems with the Snowball
-    # english stemmer (Porter2); lowered to the session-registered
-    # trino_word_stem pandas UDF (functions/stemmer.py — implemented
-    # from the public snowballstem.org spec, verified against the
-    # spec's own example pairs). Only the english form is expressible;
-    # other language codes keep a named error.
-    def _word_stem(a):
-        if len(a) == 1:
-            return f"trino_word_stem({a[0]})"
-        lang = _lit(a[1].strip()) if len(a) == 2 else None
-        if lang is not None and lang.lower() in ("en", "english"):
-            return f"trino_word_stem({a[0]})"
-        raise TrinoSqlUnsupported(
-            "word_stem: only the english (Porter2) stemmer is "
-            f"implemented — language {lang!r} has no verified "
-            "in-container twin")
-    code = _rewrite_calls(code, "word_stem", _word_stem)
-    # spooky_hash_v2_32/64 (r12, formerly a deliberate refusal): Trino's
-    # SpookyHash V2 (VarbinaryFunctions → airlift SpookyHashV2, seed 0,
-    # big-endian result bytes) via the session-registered trino_spooky32/
-    # 64 pandas UDFs. The r11 refusal condition — a PUBLISHED smhasher
-    # verification constant to break the self-oracle circularity — is
-    # met: the from-scratch implementation reproduces smhasher's
-    # Spooky64 value 0x972C4BDC over all key lengths 0..255
-    # (trino_compat.spooky_v2_128; test_trino_sql.py::
-    # test_spooky_smhasher_verification).
-    code = _rewrite_calls(
-        code, "spooky_hash_v2_64",
-        lambda a: f"trino_spooky64({a[0]})" if len(a) == 1 else None)
-    code = _rewrite_calls(
-        code, "spooky_hash_v2_32",
-        lambda a: f"trino_spooky32({a[0]})" if len(a) == 1 else None)
+    "from_base64url": _fixed(1, lambda a: (
+        f"unbase64(CASE WHEN ({a[0]}) RLIKE '[+/]' "
+        f"THEN raise_error(concat('Invalid base64url "
+        f"character in: ', {a[0]})) "
+        f"ELSE translate({a[0]}, '-_', '+/') END)")),
+    "wilson_interval_lower": _wilson("-"),
+    "wilson_interval_upper": _wilson("+"),
+    "human_readable_seconds": _hrs_fn,
+    "luhn_check": _luhn_fn,
+    "skewness": _sample_moment_fn("skewness"),
+    "kurtosis": _sample_moment_fn("kurtosis"),
+    "trim": _trim_fn("BOTH"),
+    "ltrim": _trim_fn("LEADING"),
+    "rtrim": _trim_fn("TRAILING"),
+    "entropy": _entropy_fn,
+    "max_by": _n_by_fn(desc=True),
+    "min_by": _n_by_fn(desc=False),
+    "checksum": _named_unsupported(
+        "checksum", "order-insensitive xxhash64 sketch — engine-"
+        "specific values; hash a canonical sorted rendering "
+        "(e.g. md5 of listagg) for a portable checksum"),
+    # Session pandas UDFs (trino_compat), each formerly refused or a
+    # bare unresolved routine:
+    # - xxhash64 (r9): Trino's seed-0 XXH64 as little-endian VARBINARY
+    #   (VarbinaryFunctions.java — airlift Slice.setLong); Spark's
+    #   builtin seeds with 42 and returns BIGINT (trino_compat.xxh64 —
+    #   bit-verified against Spark's own builtin at seed 42).
+    # - to/from_base32 (r10): Spark has no base32 builtin; verified
+    #   against RFC 4648's own test vectors (register_base32).
+    # - murmur3 (r10): 128-bit MurmurHash3 x64_128, seed 0, from
+    #   Appleby's public-domain spec, bit-verified by smhasher's
+    #   published VERIFICATION value (murmur3_x64_128).
+    # - spooky_hash_v2_32/64 (r12): SpookyHash V2 (airlift
+    #   SpookyHashV2, seed 0, big-endian result bytes); reproduces
+    #   smhasher's Spooky64 value 0x972C4BDC over all key lengths
+    #   0..255 (spooky_v2_128; test_trino_sql.py::
+    #   test_spooky_smhasher_verification).
+    # - hmac_* (r10): RFC 2104, proven against RFC 4231/2202 vectors
+    #   (register_binary_codecs).
+    # - to/from_ieee754_64/32 (r10): the exact Java doubleToLongBits/
+    #   floatToIntBits big-endian layout.
+    # - normal_cdf / inverse_normal_cdf / beta_cdf / inverse_beta_cdf
+    #   (r10, register_stat_fns): erfc-exact normal, Lentz
+    #   continued-fraction regularized beta, domain errors like Trino.
+    "xxhash64": _udf("trino_xxhash64", 1),
+    "to_base32": _udf("trino_to_base32", 1),
+    "from_base32": _udf("trino_from_base32", 1),
+    "murmur3": _udf("trino_murmur3", 1),
+    "spooky_hash_v2_64": _udf("trino_spooky64", 1),
+    "spooky_hash_v2_32": _udf("trino_spooky32", 1),
+    "hmac_md5": _udf("trino_hmac_md5", 2),
+    "hmac_sha1": _udf("trino_hmac_sha1", 2),
+    "hmac_sha256": _udf("trino_hmac_sha256", 2),
+    "hmac_sha512": _udf("trino_hmac_sha512", 2),
+    "to_ieee754_64": _null_guarded_udf("trino_to_ieee754_64", 1),
+    "to_ieee754_32": _null_guarded_udf("trino_to_ieee754_32", 1),
+    "from_ieee754_64": _null_guarded_udf("trino_from_ieee754_64", 1),
+    "from_ieee754_32": _null_guarded_udf("trino_from_ieee754_32", 1),
+    "normal_cdf": _null_guarded_udf("trino_normal_cdf", 3),
+    "inverse_normal_cdf": _null_guarded_udf("trino_inverse_normal_cdf", 3),
+    "beta_cdf": _null_guarded_udf("trino_beta_cdf", 3),
+    "inverse_beta_cdf": _null_guarded_udf("trino_inverse_beta_cdf", 3),
+    "word_stem": _word_stem,
     # Trino CLI color/bar rendering — terminal-escape helpers with no
     # meaning outside the Trino CLI; refuse by name (r10).
-    for _color_fn in ("bar", "color", "render", "rgb"):
-        code = _rewrite_calls(
-            code, _color_fn,
-            _named_unsupported(_color_fn,
-                               "Trino-CLI terminal color helper"))
-    code = _rewrite_calls(
-        code, "json_array_get",
-        _named_unsupported(
-            "json_array_get", "deprecated in Trino itself (broken "
-            "semantics) — use json_extract(json, '$[i]')"))
-    # format_number(x) (r9, formerly refused): Trino's unit-suffix
-    # rendering — divide by 1000 into K/M/B/T/Q while ≥1000, then
-    # DecimalFormat precision by magnitude of the SCALED value
-    # (#.## under 10, #.# under 100, # otherwise): HALF_EVEN rounding
-    # (Spark bround / DecimalFormat default), trailing zeros and a
-    # bare decimal point stripped. 123456 → '123K', 1000000 → '1M'
-    # (the documented Trino vectors). Rendering goes through
-    # DECIMAL(38,6) so large scaled values never hit double
-    # scientific notation. Best-effort edges, documented: non-finite
-    # doubles render as Spark's NaN/Infinity text; sub-1 doubles keep
-    # the leading zero. Spark's own 2-arg format_number (thousands
-    # separators) is a different function and passes through.
-    def _format_number_fn(a):
-        if len(a) != 1:
-            return None
-        scaled = (
-            "CASE WHEN abs(_fv) >= 1e15 THEN "
-            "named_struct('v', _fv / 1e15, 'u', 'Q') "
-            "WHEN abs(_fv) >= 1e12 THEN "
-            "named_struct('v', _fv / 1e12, 'u', 'T') "
-            "WHEN abs(_fv) >= 1e9 THEN "
-            "named_struct('v', _fv / 1e9, 'u', 'B') "
-            "WHEN abs(_fv) >= 1e6 THEN "
-            "named_struct('v', _fv / 1e6, 'u', 'M') "
-            "WHEN abs(_fv) >= 1e3 THEN "
-            "named_struct('v', _fv / 1e3, 'u', 'K') "
-            "ELSE named_struct('v', _fv, 'u', '') END")
-        strip1 = requote(r"(\.\d*[1-9])0+$")
-        strip2 = requote(r"\.0*$")
-        dollar1 = requote("$1")
-        empty = requote("")
+    **{name: _named_unsupported(name, "Trino-CLI terminal color helper")
+       for name in ("bar", "color", "render", "rgb")},
+    "json_array_get": _named_unsupported(
+        "json_array_get", "deprecated in Trino itself (broken "
+        "semantics) — use json_extract(json, '$[i]')"),
+    "format_number": _format_number_fn,
+}
 
-        def render(d: int) -> str:
-            # bround's scale must be foldable — one branch per scale
-            return (f"regexp_replace(regexp_replace(CAST(try_cast("
-                    f"bround(_fs.v, {d}) AS DECIMAL(38, 6)) AS STRING), "
-                    f"{strip1}, {dollar1}), {strip2}, {empty})")
+#: One alternation over every table name, longest first. A name right
+#: after AS (group 1) is a type, not a call.
+_CALL_RE = re.compile(
+    r"(\bAS\s+)?\b(" + "|".join(sorted(_CALLS, key=len, reverse=True))
+    + r")\s*\(", re.IGNORECASE)
 
-        num = (f"CASE WHEN abs(_fs.v) < 10 THEN {render(2)} "
-               f"WHEN abs(_fs.v) < 100 THEN {render(1)} "
-               f"ELSE {render(0)} END")
-        inf = requote("Infinity")
-        body = (f"CASE WHEN isnan(_fv) OR abs(_fv) = double({inf}) "
-                "THEN CAST(_fv AS STRING) "
-                f"ELSE element_at(transform(array({scaled}), "
-                f"_fs -> concat({num}, _fs.u)), 1) END")
-        return (f"element_at(transform(array(CAST(({a[0]}) AS DOUBLE)), "
-                f"_fv -> {body}), 1)")
 
-    code = _rewrite_calls(code, "format_number", _format_number_fn)
+def _rewrite_call_sites(code: str, stash: list[str]) -> str:
+    """Apply ``_CALLS`` to every call site of the masked statement in
+    one right-to-left scan: inner calls are rewritten before the call
+    holding them, and text a handler emits is never scanned again."""
+    ctx = _CallCtx(stash)
+    sites = list(_CALL_RE.finditer(code))
+    # Spans of type expressions (AS ROW(...), AS MAP(...)); none of the
+    # calls inside them is rewritten, so their offsets stay valid.
+    types = [(m.start(2), _find_close(code, m.end() - 1))
+             for m in sites if m.group(1)]
+    for m in reversed(sites):
+        start = m.start(2)
+        if any(lo <= start <= hi for lo, hi in types):
+            continue
+        close = _find_close(code, m.end() - 1)
+        args = [a.strip() for a in _split_top_level(code[m.end():close])]
+        ctx.code, ctx.end = code, close + 1
+        new = _CALLS[m.group(2).lower()](args, ctx)
+        if new is not None:
+            code = code[:start] + new + code[close + 1:]
+    if re.search(r"\bAS\s+ROW\s*\(", code, re.IGNORECASE):
+        raise TrinoSqlUnsupported(
+            "AS ROW(...) outside a plain CAST/TRY_CAST — rewrite with "
+            "named_struct and a STRUCT<...> cast explicitly")
+    for name in ("qdigest_agg", "tdigest_agg"):
+        if re.search(r"\b" + name + r"\s*\(", code, re.IGNORECASE):
+            raise TrinoSqlUnsupported(
+                f"{name}() outside value_at_quantile/"
+                "values_at_quantiles/quantile_at_value is not supported "
+                "(no portable qdigest/tdigest sketch bytes in Spark — "
+                "use approx_percentile for quantile estimation)")
     return code
 
 
@@ -4146,6 +4068,23 @@ def _rewrite_ddl_head(code: str, stash: list[str]) -> str:
             + " " + code[rest_at:])
 
 
+def _rewrite_decimal_literals(code: str, stash: list[str]) -> str:
+    """Trino DECIMAL '1.23' typed literal → CAST with precision/scale
+    inferred from the literal text (Trino's own inference rule)."""
+
+    def sub(m: re.Match) -> str:
+        text = stash[int(m.group(1))][1:-1].strip()
+        nm = re.fullmatch(r"[+-]?(\d*)(?:\.(\d*))?", text)
+        if not nm:
+            raise TrinoSqlUnsupported(f"malformed DECIMAL literal {text!r}")
+        digits = len(nm.group(1) or "") + len(nm.group(2) or "")
+        scale = len(nm.group(2) or "")
+        return (f"CAST('\x00{m.group(1)}\x00' "
+                f"AS DECIMAL({max(digits, 1)}, {scale}))")
+
+    return re.sub(r"\bDECIMAL\s+'\x00(\d+)\x00'", sub, code)
+
+
 #: Fully-literal integer-division chain prefix: 7/2, 100/7/3, … (each
 #: operand a bare integer literal, no adjacent word/dot chars). A
 #: trailing non-literal divisor (7/2/x) is allowed — the literal
@@ -4204,7 +4143,8 @@ def _rewrite_code(code: str, stash: list[str]) -> str:
     code = _rewrite_try(code, stash)
     code = _rewrite_unnest(code)
     code = _rewrite_listagg(code)
-    code = _structural_rewrites(code, stash)
+    code = _rewrite_call_sites(code, stash)
+    code = _rewrite_decimal_literals(code, stash)
     # Strict subscript accesses keep Trino's out-of-bounds ERROR (the
     # wave-20 try_element_at relaxation applies only to the function
     # spelling, which Trino defines as NULL-on-miss).
@@ -4268,29 +4208,6 @@ def _rewrite_code(code: str, stash: list[str]) -> str:
                   code, flags=re.IGNORECASE)
     code = re.sub(r"\blocaltime\b(?!\s*\()(?!stamp)", "current_time",
                   code, flags=re.IGNORECASE)
-    # CAST(x AS JSON) (r7): Trino's JSON type is a string here. The
-    # cast SERIALIZES the operand to JSON text for every operand type
-    # (varchar → quoted/escaped JSON string — Trino does NOT parse;
-    # numerics/booleans → JSON scalars; arrays/maps/rows → nested
-    # JSON). One type-agnostic lowering: to_json of a 1-field struct,
-    # with the constant {"v": wrapper sliced off — exact JSON escaping
-    # from Spark's own serializer, nested nulls preserved
-    # (ignoreNullFields off). A standalone SQL NULL stays SQL NULL
-    # (Trino's rule), via the CASE.
-    def _cast_json_fn(a):
-        if len(a) != 1:
-            return None
-        cm = re.match(r"(.+)\s+AS\s+JSON\s*$", a[0],
-                      re.IGNORECASE | re.DOTALL)
-        if not cm:
-            return None
-        x = cm.group(1).strip()
-        tj = (f"to_json(named_struct('v', {x}), "
-              f"map('ignoreNullFields', 'false'))")
-        return (f"(CASE WHEN ({x}) IS NULL THEN NULL "
-                f"ELSE substring({tj}, 6, length({tj}) - 6) END)")
-
-    code = _rewrite_calls(code, "CAST", _cast_json_fn)
     if re.search(r"\bAS\s+JSON\b", code, re.IGNORECASE):
         raise TrinoSqlUnsupported(
             "AS JSON outside a plain CAST is not supported — use "

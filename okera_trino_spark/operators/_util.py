@@ -9,16 +9,7 @@ from okera_trino_spark.sources.catalog import load_table
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a fixture table. Plain parquet scan; Catalyst owns pushdown.
-
-    Also the chokepoint where an EXTERNALLY created session (the
-    driver builds its own and never calls get_spark) gets its py4j
-    command sockets tuned — every query implementation loads at least
-    one table before building anything (r16; see
-    session.tune_py4j_gateway; idempotent, guarded, ~no-op cost)."""
-    from okera_trino_spark.session import tune_py4j_gateway
-
-    tune_py4j_gateway(spark)
+    """Load a fixture table. Plain parquet scan; Catalyst owns pushdown."""
     return load_table(spark, sf_dir, name)
 
 

@@ -184,28 +184,17 @@ _PRIORITY: tuple[str, ...] = (
     "q_trino_tpch_q17", "q_trino_tpch_q18", "q_trino_tpch_q2",
     "q_trino_tpch_q22", "q_trino_tpch_q4", "q_union_distinct",
     "q_view_expand", "q_win_frame_groups", "q_win_lag_lead",
-    # 2) changed-implementation jump-queue (standing rule): every key
-    #    whose implementation changed in r16, directly or through a
-    #    shared helper — the as-of tiebreak/semi-join rewrite, the
-    #    single-scan retention, the DSIR scoring revert, the BPE
-    #    probe-fold (both halves share bpe_learn_tok), the Q21
-    #    single-fact-exchange repartition, the trigram-total-from-
-    #    checkpoint rewrite (trigram_xent feeds ccnet_buckets too),
-    #    and the three banded-relation checkpoints
-    #    (lsh_candidate_pairs -> dedup_near/dup_clusters_lsh/
-    #    dedup_apply_lsh/dup_clusters_star; embed_near_dups ->
-    #    semdedup/dedup_embed; the simhash pairing)
+    # 2) changed-implementation jump-queue (standing rule). The
+    #    invariant: every key whose implementation changed since the
+    #    previous window — directly or through a shared helper — sits
+    #    in block 2 or block 3. Block 2 holds only changed keys.
     "q_asof_join", "q_events_retention", "q_llm_dsir",
     "q_llm_bpe", "q_llm_bpe_apply",
     "q_tpch_q21", "q_llm_ccnet_buckets", "q_llm_dedup_near",
     "q_llm_dup_clusters_star", "q_llm_dedup_embed",
     "q_llm_dedup_simhash_pairs",
-    # 3) r12-cohort backfill (5; 34 + 11 + 5 = 50), the changed-
-    #    implementation heavy keys first per the r15 staging note; the
-    #    six deferred staged candidates (q_llm_winnow,
-    #    q_llm_heavy_hitters, q_llm_ann_pq, q_tpch_q18, q_tpch_q3,
-    #    q_events_pattern_rows) and q_llm_curation move to r17 — the
-    #    jump-queue displaced them and they are unchanged this round
+    # 3) the remaining changed keys, then stalest-cohort backfill
+    #    (q_llm_tfidf) up to the 50-key window (34 + 11 + 5)
     "q_llm_dup_clusters_lsh", "q_llm_dedup_apply_lsh",
     "q_llm_semdedup", "q_llm_trigram_lm", "q_llm_tfidf",
 )

@@ -20,12 +20,6 @@ import socket as _socket
 
 from pyspark.sql import SparkSession
 
-#: Gateway clients already tuned by tune_py4j_gateway (by id — the
-#: client object lives as long as the session's JVM connection).
-_TUNED_GATEWAYS: set[int] = set()
-_PY4J_CLASSES_PATCHED = False
-
-
 def _set_nodelay(sock) -> None:
     try:
         sock.setsockopt(_socket.IPPROTO_TCP, _socket.TCP_NODELAY, 1)
@@ -33,76 +27,55 @@ def _set_nodelay(sock) -> None:
         pass
 
 
-def _patch_py4j_connection_classes() -> None:
-    """Make every FUTURE py4j command connection open with TCP_NODELAY.
+def _tune_py4j() -> None:
+    """Open every py4j command connection with TCP_NODELAY, once per
+    process (this module's import).
 
     Why (r16, guide §5 — the driver): py4j frames one command as
     several small socket writes; with Nagle's algorithm on (the
     default) the second write of a command stalls behind the delayed
     ACK of the first, costing up to a full delayed-ACK period PER
-    DRIVER ROUND TRIP. Measured on this host: ~10 ms/py4j op before,
-    ~4.4 ms after (raw localhost RTT 0.2 ms) — every DataFrame method
-    call in plan construction pays it. This is engine-level RPC
+    DRIVER ROUND TRIP. Measured on a 4-vCPU host: ~10 ms/py4j op
+    before, ~4.4 ms after (raw localhost RTT 0.2 ms) — every DataFrame
+    method call in plan construction pays it. This is engine-level RPC
     tuning, the same class of fix as shuffle compression: it computes
-    nothing and changes no plan. Both py4j connection flavors are
-    patched (GatewayConnection for the legacy gateway,
-    ClientServerConnection for the pinned-thread client PySpark 4
-    defaults to); failures fall through silently so a py4j internals
-    change degrades to the unpatched behavior, never an error."""
-    global _PY4J_CLASSES_PATCHED
-    if _PY4J_CLASSES_PATCHED:
-        return
-    _PY4J_CLASSES_PATCHED = True
-    try:
-        from py4j.java_gateway import GatewayConnection
+    nothing and changes no plan.
 
-        if not getattr(GatewayConnection, "_okera_nodelay", False):
-            _orig_start = GatewayConnection.start
-
-            def start(self, *a, **kw):  # type: ignore[no-untyped-def]
-                out = _orig_start(self, *a, **kw)
-                _set_nodelay(getattr(self, "socket", None))
-                return out
-
-            GatewayConnection.start = start
-            GatewayConnection._okera_nodelay = True
-    except Exception:  # pragma: no cover - py4j internals moved
-        pass
+    Both py4j connection flavors are patched (GatewayConnection for the
+    legacy gateway, ClientServerConnection for the pinned-thread client
+    PySpark 4 defaults to — including the JVM-initiated callback
+    connections, which the callback thread reuses for its own
+    commands), so every FUTURE connection is tuned; the
+    connections of a gateway launched before this import (the external
+    driver builds its own SparkSession and only then imports the
+    package) are tuned in place. A py4j internals change degrades to
+    the untuned behavior, never an error."""
     try:
         from py4j.clientserver import ClientServerConnection
+        from py4j.java_gateway import GatewayConnection
+        from pyspark import SparkContext
 
-        if not getattr(ClientServerConnection, "_okera_nodelay", False):
-            _orig_conn = ClientServerConnection.connect_to_java_server
+        for cls, method in ((GatewayConnection, "start"),
+                            (ClientServerConnection,
+                             "connect_to_java_server"),
+                            (ClientServerConnection,
+                             "init_socket_from_python_server")):
+            orig = getattr(cls, method)
 
-            def connect_to_java_server(self, *a, **kw):  # type: ignore[no-untyped-def]
-                out = _orig_conn(self, *a, **kw)
+            def opened(self, *a, _orig=orig, **kw):  # type: ignore[no-untyped-def]
+                out = _orig(self, *a, **kw)
                 _set_nodelay(getattr(self, "socket", None))
                 return out
 
-            ClientServerConnection.connect_to_java_server = \
-                connect_to_java_server
-            ClientServerConnection._okera_nodelay = True
-    except Exception:  # pragma: no cover - py4j internals moved
+            setattr(cls, method, opened)
+        if SparkContext._gateway is not None:
+            for conn in list(SparkContext._gateway._gateway_client.deque):
+                _set_nodelay(getattr(conn, "socket", None))
+    except (ImportError, AttributeError):  # pragma: no cover - py4j moved
         pass
 
 
-def tune_py4j_gateway(spark: SparkSession) -> None:
-    """Set TCP_NODELAY on the session's EXISTING py4j command sockets
-    (see _patch_py4j_connection_classes for why) — idempotent and
-    cheap, so callers may invoke it from hot paths behind the
-    module-level guard. Covers sessions created before this package
-    was imported (the external driver builds its own SparkSession and
-    only then imports the entry module)."""
-    _patch_py4j_connection_classes()
-    try:
-        client = spark._sc._gateway._gateway_client
-    except AttributeError:  # pragma: no cover - connect-style session
-        return
-    if id(client) in _TUNED_GATEWAYS:
-        return
-    _TUNED_GATEWAYS.add(id(client))
-    for conn in list(getattr(client, "deque", [])):
-        _set_nodelay(getattr(conn, "socket", None))
+_tune_py4j()
 
 #: Confs that only matter at session-build time (safe, scale-oriented).
 _BUILD_CONFS: dict[str, str] = {
@@ -127,8 +100,9 @@ _BUILD_CONFS: dict[str, str] = {
     "spark.io.compression.codec": "zstd",
     # Nested-struct column pruning reaches the parquet scan.
     "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
-    # events.ts is parquet TIMESTAMP(NANOS), which the vectorized reader
-    # rejects; read nanos as int64 and rebuild µs timestamps in
+    # Parquet TIMESTAMP(NANOS) (an events.ts shape load_table accepts
+    # from outside the fixture set, which stores µs) is rejected by the
+    # vectorized reader; read nanos as int64 and rebuild µs timestamps in
     # load_table (the reference truncates nanos the same way,
     # RecordServicePageSource.java:353-366). An engine default — set here
     # rather than mutated mid-session by the table loader.
@@ -154,7 +128,6 @@ def get_spark(app_name: str = "okera-trino-spark",
     active = SparkSession.getActiveSession()
     if active is not None:
         install_audit_listener(active)
-        tune_py4j_gateway(active)
         return active
     cpus = default_parallelism()
     builder = (
@@ -171,5 +144,4 @@ def get_spark(app_name: str = "okera-trino-spark",
     # Engine-level audit (OkeraEventListener parity): every DataFrame
     # action on this session lands in the execution log.
     install_audit_listener(spark)
-    tune_py4j_gateway(spark)
     return spark

@@ -946,100 +946,68 @@ class GovernedCatalog:
         qid = self._next_query_id
         self._next_query_id += 1
         start = time.time()
+        error = None
         try:
             user = self._effective_user(user, on_behalf_of)
-        except PermissionError as exc:
-            self._audit.append(AuditRecord(
-                query_id=qid, user=user or self.props.user, sql=sql,
-                start_time=start, elapsed_ms=0.0,
-                success=False, error=str(exc)))
-            raise
-        try:
-            handled = self._handle_set_session(sql)
-            if handled is not None:
-                self._audit.append(AuditRecord(
-                    query_id=qid, user=user, sql=sql,
-                    start_time=start,
-                    elapsed_ms=(time.time() - start) * 1000.0,
-                    success=True))
-                return handled
-        except ValueError:
-            self._audit.append(AuditRecord(
-                query_id=qid, user=user, sql=sql,
-                start_time=start, elapsed_ms=(time.time() - start) * 1000.0,
-                success=False, error="invalid session property"))
-            raise
-        try:
-            handled = self._handle_prepared(sql, user, dialect)
-            if handled is None:
-                handled = self._handle_metadata(sql, user)
-            if handled is not None:
-                self._audit.append(AuditRecord(
-                    query_id=qid, user=user, sql=sql,
-                    start_time=start,
-                    elapsed_ms=(time.time() - start) * 1000.0,
-                    success=True))
-                return handled
-        except (KeyError, ValueError) as exc:
-            self._audit.append(AuditRecord(
-                query_id=qid, user=user, sql=sql,
-                start_time=start, elapsed_ms=(time.time() - start) * 1000.0,
-                success=False, error=str(exc)))
-            raise
-        self._register_governed(user)
-        try:
-            # information_schema SELECTs (both dialects): swap the
-            # references onto policy-scoped registry views; the audit
-            # below records the ORIGINAL text.
-            info = self._rewrite_information_schema(sql, user)
-            plan_sql = info if info is not None else sql
-            if dialect == "trino":
-                from okera_trino_spark.functions.trino_sql import (
-                    ensure_dialect_udfs, execute_match_recognize,
-                    execute_trino_explain, rewrite_trino_sql)
-                ensure_dialect_udfs(self.spark, sql)
-                # EXPLAIN family over the GOVERNED views registered
-                # above — plan output is policy-scoped like the query
-                # itself (VALIDATE on a hidden column fails analysis).
-                ex = execute_trino_explain(self.spark, plan_sql, None,
-                                           params)
-                if ex is not None:
-                    self._audit.append(AuditRecord(
-                        query_id=qid, user=user, sql=sql,
-                        start_time=start,
-                        elapsed_ms=(time.time() - start) * 1000.0,
-                        success=True))
-                    return ex
-                if re.search(r"\bMATCH_RECOGNIZE\b", sql, re.IGNORECASE):
-                    # Lowered onto the match_recognize operator over the
-                    # GOVERNED temp views registered above — policies
-                    # apply to the pattern scan like any other read.
-                    mr = execute_match_recognize(self.spark, sql, params)
-                    if mr is not None:
-                        self._audit.append(AuditRecord(
-                            query_id=qid, user=user, sql=sql,
-                            start_time=start,
-                            elapsed_ms=(time.time() - start) * 1000.0,
-                            success=True))
-                        return mr
-                text = rewrite_trino_sql(plan_sql)
-            elif dialect == "spark":
-                text = plan_sql
-            else:
-                raise ValueError(f"dialect must be spark|trino, got {dialect!r}")
-            df = (self.spark.sql(text, args=params) if params is not None
-                  else self.spark.sql(text))
-            self._audit.append(AuditRecord(
-                query_id=qid, user=user, sql=sql,
-                start_time=start, elapsed_ms=(time.time() - start) * 1000.0,
-                success=True))
-            return df
+            try:
+                df = self._handle_set_session(sql)
+            except ValueError:
+                error = "invalid session property"
+                raise
+            if df is None:
+                df = self._run_governed_sql(sql, user, dialect, params)
         except Exception as exc:  # noqa: BLE001 — audit then re-raise
             self._audit.append(AuditRecord(
-                query_id=qid, user=user, sql=sql,
+                query_id=qid, user=user or self.props.user, sql=sql,
                 start_time=start, elapsed_ms=(time.time() - start) * 1000.0,
-                success=False, error=str(exc)))
+                success=False, error=error or str(exc)))
             raise
+        self._audit.append(AuditRecord(
+            query_id=qid, user=user, sql=sql, start_time=start,
+            elapsed_ms=(time.time() - start) * 1000.0, success=True))
+        return df
+
+    def _run_governed_sql(self, sql: str, user: str, dialect: str,
+                          params: list | None) -> DataFrame:
+        """The non-session-property part of :meth:`execute`: metadata
+        and prepared statements from the registry, everything else
+        planned over ``user``'s governed views."""
+        handled = self._handle_prepared(sql, user, dialect)
+        if handled is None:
+            handled = self._handle_metadata(sql, user)
+        if handled is not None:
+            return handled
+        self._register_governed(user)
+        # information_schema SELECTs (both dialects): swap the
+        # references onto policy-scoped registry views; the audit
+        # records the ORIGINAL text.
+        info = self._rewrite_information_schema(sql, user)
+        plan_sql = info if info is not None else sql
+        if dialect == "trino":
+            from okera_trino_spark.functions.trino_sql import (
+                ensure_dialect_udfs, execute_match_recognize,
+                execute_trino_explain, rewrite_trino_sql)
+            ensure_dialect_udfs(self.spark, sql)
+            # EXPLAIN family over the GOVERNED views registered
+            # above — plan output is policy-scoped like the query
+            # itself (VALIDATE on a hidden column fails analysis).
+            ex = execute_trino_explain(self.spark, plan_sql, None, params)
+            if ex is not None:
+                return ex
+            if re.search(r"\bMATCH_RECOGNIZE\b", sql, re.IGNORECASE):
+                # Lowered onto the match_recognize operator over the
+                # GOVERNED temp views registered above — policies
+                # apply to the pattern scan like any other read.
+                mr = execute_match_recognize(self.spark, sql, params)
+                if mr is not None:
+                    return mr
+            text = rewrite_trino_sql(plan_sql)
+        elif dialect == "spark":
+            text = plan_sql
+        else:
+            raise ValueError(f"dialect must be spark|trino, got {dialect!r}")
+        return (self.spark.sql(text, args=params) if params is not None
+                else self.spark.sql(text))
 
     @property
     def audit_log(self) -> list[AuditRecord]:
