@@ -1896,6 +1896,8 @@ def _jsonpath_wildcard_matches(x_sql: str, path: str, requote,
 # (None = leave the call unchanged) registered under its lowercase
 # name in ``_CALLS``; ``_rewrite_call_sites`` applies the table to a
 # masked statement in one right-to-left scan.
+
+
 class _CallCtx:
     """What a handler may use besides its stripped arguments: the
     literal stash, and the statement text with the offset just past
