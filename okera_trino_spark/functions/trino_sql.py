@@ -2296,7 +2296,7 @@ def _approx_set_fn(a, ctx):
 # divergence: sketch VALUES differ across engines; the estimate
 # is bounds-tested in tests/test_bounds.py), and the inverse
 # lookup is the exact INCLUSIVE CDF avg(x <= v). Convention note
-# (r11 review): at a value carrying large point mass the
+# (r11): at a value carrying large point mass the
 # inclusive-vs-exclusive rank convention dominates any sketch
 # error — Trino's qdigest behavior at such boundary values is
 # unverified offline, so this is a documented convention choice,
@@ -3364,7 +3364,7 @@ def _null_guarded_udf(name: str, arity: int):
     """As _udf, but NULL-in-NULL-out decided SQL-side: Arrow converts
     SQL NULL doubles to NaN before a pandas UDF can see them, so the
     CASE keeps genuine NaN inputs flowing to the UDF (where IEEE
-    semantics apply) while NULL never reaches it (r10 review fix:
+    semantics apply) while NULL never reaches it (r10 fix:
     to_ieee754_64(NULL) returned the NaN bit pattern, and a NULL sd
     crashed the stat CDFs' domain checks)."""
     def template(a):

@@ -35,7 +35,7 @@ def _tune_py4j() -> None:
     several small socket writes; with Nagle's algorithm on (the
     default) the second write of a command stalls behind the delayed
     ACK of the first, costing up to a full delayed-ACK period PER
-    DRIVER ROUND TRIP. Measured on a 4-vCPU host: ~10 ms/py4j op
+    PY4J ROUND TRIP. Measured on a 4-vCPU host: ~10 ms/py4j op
     before, ~4.4 ms after (raw localhost RTT 0.2 ms) — every DataFrame
     method call in plan construction pays it. This is engine-level RPC
     tuning, the same class of fix as shuffle compression: it computes
@@ -46,8 +46,8 @@ def _tune_py4j() -> None:
     PySpark 4 defaults to — including the JVM-initiated callback
     connections, which the callback thread reuses for its own
     commands), so every FUTURE connection is tuned; the
-    connections of a gateway launched before this import (the external
-    driver builds its own SparkSession and only then imports the
+    connections of a gateway launched before this import (a caller
+    that builds its own SparkSession and only then imports the
     package) are tuned in place. A py4j internals change degrades to
     the untuned behavior, never an error."""
     try:
