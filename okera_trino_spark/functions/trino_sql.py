@@ -19,9 +19,16 @@ rewrites still see across literal arguments (``date_add('day', …)``,
 verbatim. Call-shaped rewrites are one table (``_CALLS``: name →
 handler) applied in a single right-to-left scan of the statement; the
 non-call rewrites are the ordered passes of ``_rewrite_code``.
-Everything compiles to Spark builtins — JVM-side, codegen-friendly,
-never a Python UDF — and then Catalyst owns the plan exactly as if the
-query had been written in Spark SQL directly.
+Everything compiles to Spark builtins — JVM-side, codegen-friendly —
+except the calls ``_SESSION_UDFS`` lowers onto registered pandas UDFs;
+then Catalyst owns the plan exactly as if the query had been written in
+Spark SQL directly.
+
+Every statement takes one path, ``execute_trino``: session-UDF setup,
+the EXPLAIN probe, the MATCH_RECOGNIZE lowering or the plain rewrite,
+then ``spark.sql``. ``GovernedCatalog.execute`` enters it after
+registering the caller's governed views; a MATCH_RECOGNIZE statement and
+its DEFINE fragments share ``rewrite_trino_sql``'s masked-text pipeline.
 
 Coverage (each divergence is tested in tests/test_trino_sql.py):
   - function renames: strpos→instr, approx_distinct→
@@ -75,12 +82,10 @@ Coverage (each divergence is tested in tests/test_trino_sql.py):
     array_agg(DISTINCT x) via array_distinct over the NULL-preserving
     collect (keeps one NULL, as Trino; + ORDER BY x self-key variant —
     array_sort's NULLS LAST/reversed-FIRST matches Trino's defaults)
-  - MATCH_RECOGNIZE: not a text rewrite — execute_trino /
-    GovernedCatalog.execute lower the restricted subset (PARTITION/
-    ORDER/ONE ROW PER MATCH/SKIP PAST LAST ROW/defined-variable
-    patterns, measures match_number/classifier/count/first/last/sum/
-    avg/min/max) onto the match_recognize operator
-    (operators/pattern.py) and splice the result into the statement
+  - MATCH_RECOGNIZE: not a text rewrite — execute_trino lowers the
+    supported subset (see execute_match_recognize) onto the
+    match_recognize operator (operators/pattern.py) and splices the
+    result into the statement
   - wave 15 (r8): histogram→map over a lambda-bound collect;
     multimap_agg→grouped entry map; hamming_distance (length-guarded
     position compare); 2-arg bit_count (bits-wide two's complement
@@ -263,6 +268,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from okera_trino_spark.functions import stemmer, trino_compat
 from okera_trino_spark.sources.catalog import register_tables
 
 
@@ -334,19 +340,24 @@ def _segments(sql: str):
 
 
 def _find_close(s: str, open_idx: int) -> int:
-    """Index of the ')' matching s[open_idx] == '(' — runs on MASKED
-    text, where string literals are atomic placeholders with no parens."""
+    """Index of the ']' matching s[open_idx] == '[', else of the ')'
+    matching the paren there — runs on MASKED text, where string
+    literals are atomic placeholders with no brackets."""
+    if s[open_idx:open_idx + 1] == "[":
+        opener, closer, kind = "[", "]", "brackets"
+    else:
+        opener, closer, kind = "(", ")", "parentheses"
     depth, j, n = 0, open_idx, len(s)
     while j < n:
         c = s[j]
-        if c == "(":
+        if c == opener:
             depth += 1
-        elif c == ")":
+        elif c == closer:
             depth -= 1
             if depth == 0:
                 return j
         j += 1
-    raise TrinoSqlUnsupported(f"unbalanced parentheses after offset {open_idx}")
+    raise TrinoSqlUnsupported(f"unbalanced {kind} after offset {open_idx}")
 
 
 # ------------------------------------------------------------- rewrites
@@ -2558,20 +2569,21 @@ def _approx_most_frequent_fn(a, ctx):
 
 # normalize(s[, form]) — UAX #15 Unicode normalization. Spark SQL
 # has no builtin, so this lowers onto the session-registered
-# trino_normalize pandas UDF (trino_compat.register_unicode_
-# normalize; execute_trino and the governed SQL path register it
-# on demand). The form is a bare keyword in Trino's grammar, not a
-# string — anything outside the four standard forms is refused.
-def _normalize_fn(a, ctx):
-    if len(a) == 1:
-        form = "NFC"
-    elif len(a) == 2 and re.fullmatch(r"(?i)NFK?[CD]", a[1].strip()):
-        form = a[1].strip().upper()
-    else:
-        raise TrinoSqlUnsupported(
-            "normalize: the form must be the bare keyword NFC, NFD, "
-            "NFKC or NFKD")
-    return f"trino_normalize({a[0]}, '{form}')"
+# trino_normalize pandas UDF (see _SESSION_UDFS). The form is a bare
+# keyword in Trino's grammar, not a string — anything outside the
+# four standard forms is refused.
+def _normalize_udf(udf: str):
+    def fn(a, ctx):
+        if len(a) == 1:
+            form = "NFC"
+        elif len(a) == 2 and re.fullmatch(r"(?i)NFK?[CD]", a[1].strip()):
+            form = a[1].strip().upper()
+        else:
+            raise TrinoSqlUnsupported(
+                "normalize: the form must be the bare keyword NFC, NFD, "
+                "NFKC or NFKD")
+        return f"{udf}({a[0]}, '{form}')"
+    return fn
 
 
 # chr(cp) — the Unicode codepoint character. Spark's char() wraps
@@ -3287,22 +3299,23 @@ def _n_by_fn(desc: bool):
     return fn
 
 
-# word_stem (r10, formerly refused): Trino stems with the Snowball
-# english stemmer (Porter2); lowered to the session-registered
-# trino_word_stem pandas UDF (functions/stemmer.py — implemented
-# from the public snowballstem.org spec, verified against the
-# spec's own example pairs). Only the english form is expressible;
-# other language codes keep a named error.
-def _word_stem(a, ctx):
-    if len(a) == 1:
-        return f"trino_word_stem({a[0]})"
-    lang = ctx.lit(a[1].strip()) if len(a) == 2 else None
-    if lang is not None and lang.lower() in ("en", "english"):
-        return f"trino_word_stem({a[0]})"
-    raise TrinoSqlUnsupported(
-        "word_stem: only the english (Porter2) stemmer is "
-        f"implemented — language {lang!r} has no verified "
-        "in-container twin")
+# word_stem: Trino stems with the Snowball english stemmer (Porter2);
+# lowered to the session-registered trino_word_stem pandas UDF
+# (functions/stemmer.py — implemented from the public
+# snowballstem.org spec, verified against the spec's own example
+# pairs). Only the english form is expressible; other language codes
+# keep a named error.
+def _word_stem_udf(udf: str):
+    def fn(a, ctx):
+        lang = ctx.lit(a[1].strip()) if len(a) == 2 else None
+        if len(a) == 1 or (lang is not None
+                           and lang.lower() in ("en", "english")):
+            return f"{udf}({a[0]})"
+        raise TrinoSqlUnsupported(
+            "word_stem: only the english (Porter2) stemmer is "
+            f"implemented — language {lang!r} has no verified "
+            "in-container twin")
+    return fn
 
 
 # format_number(x) (r9, formerly refused): Trino's unit-suffix
@@ -3355,24 +3368,78 @@ def _format_number_fn(a, ctx):
             f"_fv -> {body}), 1)")
 
 
-def _udf(name: str, arity: int):
-    """A call lowered onto the session-registered ``name`` UDF."""
-    return _fixed(arity, lambda a: f"{name}({', '.join(a)})")
+def _udf(arity: int):
+    """Handler factory: the call lowered onto the named session UDF."""
+    return lambda udf: _fixed(arity, lambda a: f"{udf}({', '.join(a)})")
 
 
-def _null_guarded_udf(name: str, arity: int):
+def _null_guarded_udf(arity: int):
     """As _udf, but NULL-in-NULL-out decided SQL-side: Arrow converts
     SQL NULL doubles to NaN before a pandas UDF can see them, so the
     CASE keeps genuine NaN inputs flowing to the UDF (where IEEE
-    semantics apply) while NULL never reaches it (r10 fix:
+    semantics apply) while NULL never reaches it (without it,
     to_ieee754_64(NULL) returned the NaN bit pattern, and a NULL sd
     crashed the stat CDFs' domain checks)."""
-    def template(a):
-        nulls = " OR ".join(f"({x}) IS NULL" for x in a)
-        null = "NULL" if arity == 1 else "CAST(NULL AS DOUBLE)"
-        return (f"CASE WHEN {nulls} THEN {null} "
-                f"ELSE {name}({', '.join(a)}) END")
-    return _fixed(arity, template)
+    def make(udf):
+        def template(a):
+            nulls = " OR ".join(f"({x}) IS NULL" for x in a)
+            null = "NULL" if arity == 1 else "CAST(NULL AS DOUBLE)"
+            return (f"CASE WHEN {nulls} THEN {null} "
+                    f"ELSE {udf}({', '.join(a)}) END")
+        return _fixed(arity, template)
+    return make
+
+
+#: Trino calls lowered onto session-registered pandas UDFs: call name →
+#: (UDF name, handler factory taking the UDF name, registrar). Both the
+#: ``_CALLS`` entries and ``ensure_dialect_udfs``'s matcher are built
+#: from this one table. Each UDF replaces a call Spark lacks or
+#: computes differently:
+#: - normalize: Spark SQL has no Unicode normalizer.
+#: - xxhash64: Trino's seed-0 XXH64 as little-endian VARBINARY
+#:   (VarbinaryFunctions.java — airlift Slice.setLong); Spark's builtin
+#:   seeds with 42 and returns BIGINT (trino_compat.xxh64 —
+#:   bit-verified against Spark's own builtin at seed 42).
+#: - to/from_base32: Spark has no base32 builtin; verified against
+#:   RFC 4648's own test vectors.
+#: - murmur3: 128-bit MurmurHash3 x64_128, seed 0, from Appleby's
+#:   public-domain spec, bit-verified by smhasher's published
+#:   VERIFICATION value (murmur3_x64_128).
+#: - spooky_hash_v2_32/64: SpookyHash V2 (airlift SpookyHashV2, seed 0,
+#:   big-endian result bytes); reproduces smhasher's Spooky64 value
+#:   0x972C4BDC over all key lengths 0..255 (spooky_v2_128;
+#:   test_trino_sql.py::test_spooky_smhasher_verification).
+#: - hmac_*: RFC 2104, proven against RFC 4231/2202 vectors.
+#: - to/from_ieee754_64/32: the exact Java doubleToLongBits/
+#:   floatToIntBits big-endian layout.
+#: - normal_cdf / inverse_normal_cdf / beta_cdf / inverse_beta_cdf:
+#:   erfc-exact normal, Lentz continued-fraction regularized beta,
+#:   domain errors like Trino.
+#: - word_stem: the Porter2 english stemmer (functions/stemmer.py).
+_SESSION_UDFS = {
+    "normalize": ("trino_normalize", _normalize_udf,
+                  trino_compat.register_unicode_normalize),
+    "xxhash64": ("trino_xxhash64", _udf(1), trino_compat.register_xxhash64),
+    "to_base32": ("trino_to_base32", _udf(1), trino_compat.register_base32),
+    "from_base32": ("trino_from_base32", _udf(1),
+                    trino_compat.register_base32),
+    "murmur3": ("trino_murmur3", _udf(1), trino_compat.register_murmur3),
+    "spooky_hash_v2_64": ("trino_spooky64", _udf(1),
+                          trino_compat.register_spooky),
+    "spooky_hash_v2_32": ("trino_spooky32", _udf(1),
+                          trino_compat.register_spooky),
+    **{f"hmac_{h}": (f"trino_hmac_{h}", _udf(2),
+                     trino_compat.register_binary_codecs)
+       for h in ("md5", "sha1", "sha256", "sha512")},
+    **{f"{d}_ieee754_{w}": (f"trino_{d}_ieee754_{w}", _null_guarded_udf(1),
+                            trino_compat.register_binary_codecs)
+       for d in ("to", "from") for w in ("64", "32")},
+    **{f"{f}_cdf": (f"trino_{f}_cdf", _null_guarded_udf(3),
+                    trino_compat.register_stat_fns)
+       for f in ("normal", "inverse_normal", "beta", "inverse_beta")},
+    "word_stem": ("trino_word_stem", _word_stem_udf,
+                  stemmer.register_word_stem),
+}
 
 
 #: Call name → handler. Orderings the table relies on, each pinned by
@@ -3529,7 +3596,6 @@ _CALLS = {
         "use width_bucket + count (q_agg_histogram) "
         "or the deterministic equi-depth twin "
         "(q_agg_numeric_histogram_det)"),
-    "normalize": _normalize_fn,
     "chr": _chr_fn,
     "combinations": _combinations_fn,
     # reduce_agg(x, s0, input_fn, combine_fn): Trino REQUIRES the
@@ -3692,48 +3758,7 @@ _CALLS = {
         "checksum", "order-insensitive xxhash64 sketch — engine-"
         "specific values; hash a canonical sorted rendering "
         "(e.g. md5 of listagg) for a portable checksum"),
-    # Session pandas UDFs (trino_compat), each formerly refused or a
-    # bare unresolved routine:
-    # - xxhash64 (r9): Trino's seed-0 XXH64 as little-endian VARBINARY
-    #   (VarbinaryFunctions.java — airlift Slice.setLong); Spark's
-    #   builtin seeds with 42 and returns BIGINT (trino_compat.xxh64 —
-    #   bit-verified against Spark's own builtin at seed 42).
-    # - to/from_base32 (r10): Spark has no base32 builtin; verified
-    #   against RFC 4648's own test vectors (register_base32).
-    # - murmur3 (r10): 128-bit MurmurHash3 x64_128, seed 0, from
-    #   Appleby's public-domain spec, bit-verified by smhasher's
-    #   published VERIFICATION value (murmur3_x64_128).
-    # - spooky_hash_v2_32/64 (r12): SpookyHash V2 (airlift
-    #   SpookyHashV2, seed 0, big-endian result bytes); reproduces
-    #   smhasher's Spooky64 value 0x972C4BDC over all key lengths
-    #   0..255 (spooky_v2_128; test_trino_sql.py::
-    #   test_spooky_smhasher_verification).
-    # - hmac_* (r10): RFC 2104, proven against RFC 4231/2202 vectors
-    #   (register_binary_codecs).
-    # - to/from_ieee754_64/32 (r10): the exact Java doubleToLongBits/
-    #   floatToIntBits big-endian layout.
-    # - normal_cdf / inverse_normal_cdf / beta_cdf / inverse_beta_cdf
-    #   (r10, register_stat_fns): erfc-exact normal, Lentz
-    #   continued-fraction regularized beta, domain errors like Trino.
-    "xxhash64": _udf("trino_xxhash64", 1),
-    "to_base32": _udf("trino_to_base32", 1),
-    "from_base32": _udf("trino_from_base32", 1),
-    "murmur3": _udf("trino_murmur3", 1),
-    "spooky_hash_v2_64": _udf("trino_spooky64", 1),
-    "spooky_hash_v2_32": _udf("trino_spooky32", 1),
-    "hmac_md5": _udf("trino_hmac_md5", 2),
-    "hmac_sha1": _udf("trino_hmac_sha1", 2),
-    "hmac_sha256": _udf("trino_hmac_sha256", 2),
-    "hmac_sha512": _udf("trino_hmac_sha512", 2),
-    "to_ieee754_64": _null_guarded_udf("trino_to_ieee754_64", 1),
-    "to_ieee754_32": _null_guarded_udf("trino_to_ieee754_32", 1),
-    "from_ieee754_64": _null_guarded_udf("trino_from_ieee754_64", 1),
-    "from_ieee754_32": _null_guarded_udf("trino_from_ieee754_32", 1),
-    "normal_cdf": _null_guarded_udf("trino_normal_cdf", 3),
-    "inverse_normal_cdf": _null_guarded_udf("trino_inverse_normal_cdf", 3),
-    "beta_cdf": _null_guarded_udf("trino_beta_cdf", 3),
-    "inverse_beta_cdf": _null_guarded_udf("trino_inverse_beta_cdf", 3),
-    "word_stem": _word_stem,
+    **{call: make(udf) for call, (udf, make, _) in _SESSION_UDFS.items()},
     # Trino CLI color/bar rendering — terminal-escape helpers with no
     # meaning outside the Trino CLI; refuse by name (r10).
     **{name: _named_unsupported(name, "Trino-CLI terminal color helper")
@@ -3785,21 +3810,6 @@ def _rewrite_call_sites(code: str, stash: list[str]) -> str:
     return code
 
 
-def _find_close_bracket(s: str, open_idx: int) -> int:
-    """Index of the ']' matching s[open_idx] == '[' (masked text)."""
-    depth, j, n = 0, open_idx, len(s)
-    while j < n:
-        c = s[j]
-        if c == "[":
-            depth += 1
-        elif c == "]":
-            depth -= 1
-            if depth == 0:
-                return j
-        j += 1
-    raise TrinoSqlUnsupported(f"unbalanced brackets after offset {open_idx}")
-
-
 _ARRAY_LITERAL_RE = re.compile(r"\bARRAY\s*\[", re.IGNORECASE)
 
 
@@ -3812,7 +3822,7 @@ def _rewrite_array_literals(code: str) -> str:
         if not m:
             return code
         open_idx = m.end() - 1
-        close = _find_close_bracket(code, open_idx)
+        close = _find_close(code, open_idx)
         inner = code[open_idx + 1:close]
         code = code[:m.start()] + "array(" + inner + ")" + code[close + 1:]
 
@@ -3850,7 +3860,7 @@ def _rewrite_subscripts(code: str) -> str:
                 break
         if pos < 0:
             return code
-        close = _find_close_bracket(code, pos)
+        close = _find_close(code, pos)
         index = code[pos + 1:close]
         head_end = len(code[:pos].rstrip())
         head = code[:head_end]
@@ -4412,12 +4422,23 @@ def _decode_unicode_literals(sql: str) -> str:
             f"malformed U&'…' Unicode escape: {exc}") from None
 
 
+# The statement pipeline, in two halves so execute_match_recognize can
+# cut fragments out of the masked statement between them.
+def _mask_statement(sql: str) -> tuple[str, list[str]]:
+    """Front half: decode U&'…' literals, then mask."""
+    return _mask(_decode_unicode_literals(sql))
+
+
+def _rewrite_masked(masked: str, stash: list[str]) -> str:
+    """Back half: GROUPS frames, the dialect rewrites, then unmask —
+    over a whole masked statement or a fragment of one."""
+    return _unmask(_rewrite_code(_rewrite_groups_frames(masked), stash),
+                   stash)
+
+
 def rewrite_trino_sql(sql: str) -> str:
     """Rewrite a Trino-dialect SQL string to Spark SQL (pure text)."""
-    sql = _decode_unicode_literals(sql)
-    masked, stash = _mask(sql)
-    masked = _rewrite_groups_frames(masked)
-    return _unmask(_rewrite_code(masked, stash), stash)
+    return _rewrite_masked(*_mask_statement(sql))
 
 
 # ------------------------------------------------- MATCH_RECOGNIZE path
@@ -4554,76 +4575,73 @@ def _mr_parse_sections(inner: str) -> dict[str, str]:
     return out
 
 
-def execute_match_recognize(spark: SparkSession, sql: str,
-                            params: list | None = None) -> DataFrame | None:
-    """Execute a statement whose FROM clause is ``tbl MATCH_RECOGNIZE
-    (...)`` by lowering the pattern block onto the match_recognize
-    operator (operators/pattern.py) and splicing its result back into
-    the surrounding statement, which then runs through the normal
-    dialect rewrite. Returns None when the statement has no
-    MATCH_RECOGNIZE block (caller falls through to the plain path).
+def execute_match_recognize(spark: SparkSession, sql: str) -> str | None:
+    """Lower the ``tbl MATCH_RECOGNIZE (...)`` block of a statement onto
+    the match_recognize operator (operators/pattern.py), register its
+    result as the ``_mr_result`` temp view, and return the Spark text of
+    the statement with the block replaced by that view, for
+    ``execute_trino`` to run. The statement and the DEFINE and PREV/NEXT
+    fragments cut from it go through ``rewrite_trino_sql``'s pipeline
+    (``_mask_statement`` / ``_rewrite_masked``). Returns None when the
+    statement has no MATCH_RECOGNIZE block (caller falls through to the
+    plain path).
 
     Supported subset (anything else raises TrinoSqlUnsupported naming
     the construct):
     - PARTITION BY + ORDER BY required (an unpartitioned pattern scan
       is a single serial partition — in Trino too — and is refused
       rather than silently bottlenecked);
-    - ONE ROW PER MATCH (default) and ALL ROWS PER MATCH (r7 — every
-      matched row with per-row ``classifier()``; empty matches
-      omitted; + WITH UNMATCHED ROWS r8 — unmatched rows with NULL
-      measures, PAST LAST ROW skip only as in Trino), with AFTER
-      MATCH SKIP PAST LAST ROW (default),
-      SKIP TO NEXT ROW (r8 — overlapping matches, the scan restarts
-      one row past each match's first row), or SKIP TO [FIRST|LAST]
-      <variable> (r8 — restart AT that variable's first/last matched
-      row, with Trino's runtime errors for the non-advancing cases);
-      PATTERN supports quantifiers (greedy and reluctant), groups,
-      alternation, and PERMUTE (expanded to its preference-ordered
-      alternation);
+    - ONE ROW PER MATCH (default) and ALL ROWS PER MATCH (every matched
+      row with per-row ``classifier()``; SHOW EMPTY MATCHES by default,
+      OMIT EMPTY MATCHES, or WITH UNMATCHED ROWS — unmatched rows with
+      NULL measures, PAST LAST ROW skip only as in Trino), with AFTER
+      MATCH SKIP PAST LAST ROW (default), SKIP TO NEXT ROW (overlapping
+      matches — the scan restarts one row past each match's first
+      row), or SKIP TO [FIRST|LAST] <variable> (restart AT that
+      variable's first/last matched row, with Trino's runtime errors
+      for the non-advancing cases); PATTERN supports quantifiers
+      (greedy and reluctant), groups, alternation, and PERMUTE
+      (expanded to its preference-ordered alternation);
     - every pattern variable must be DEFINEd with a pattern-independent
       row predicate (an undefined variable is always-true in Trino,
       which breaks first-match-wins classification). ``PREV(expr[, n])``
-      / ``NEXT(expr[, n])`` ARE supported (r7): they navigate physical
-      partition rows in Trino, so they lower to lag/lead columns over
-      the (PARTITION BY, ORDER BY) window — still pattern-independent,
-      still JVM-side. Self-qualified column references (``X.price``
-      inside DEFINE X) resolve to the current row; references
-      qualified by OTHER variables are refused;
+      / ``NEXT(expr[, n])`` navigate physical partition rows in Trino,
+      so they lower to lag/lead columns over the (PARTITION BY, ORDER
+      BY) window — still pattern-independent, still JVM-side.
+      Self-qualified column references (``X.price`` inside DEFINE X)
+      resolve to the current row; references qualified by OTHER
+      variables are refused;
     - MEASURES limited to match_number(), classifier(), count(*), and
-      first/last/sum/avg/min/max over a bare column; in ALL ROWS PER
-      MATCH mode (r8) aggregates take Trino's default RUNNING
-      semantics — evaluated over the match prefix up to each emitted
-      row — or FINAL with the explicit keyword.
+      first/last/sum/avg/min/max over a bare column or qualified by a
+      variable or SUBSET; in ALL ROWS PER MATCH mode aggregates take
+      Trino's default RUNNING semantics — evaluated over the match
+      prefix up to each emitted row — or FINAL with the explicit
+      keyword.
     Output columns follow Trino's ONE ROW PER MATCH shape: the
     partition keys plus the measures (plus match_num/matched when no
     measures are declared).
     """
-    masked, stash = _mask(sql)
+    masked, stash = _mask_statement(sql)
     m = _MR_FROM_RE.search(masked)
     if not m:
         return None
     table = m.group(1).strip("`")
     open_idx = m.end() - 1
     close = _find_close(masked, open_idx)
-    sections = _mr_parse_sections(masked[open_idx + 1:close])
+    body = masked[open_idx + 1:close]
+    sections = _mr_parse_sections(body)
 
-    # SUBSET (union variables) is parsed after DEFINE below; subset
-    # names are valid in MEASURES aggregates (qualified), not as SKIP
-    # TO targets (that lookup raises its named error).
-    all_rows = bool(re.search(
-        r"ALL\s+ROWS\s+PER\s+MATCH", masked[open_idx + 1:close],
-        re.IGNORECASE))
-    with_unmatched = bool(re.search(
-        r"ALL\s+ROWS\s+PER\s+MATCH\s+WITH\s+UNMATCHED\s+ROWS",
-        masked[open_idx + 1:close], re.IGNORECASE))
     # Trino's three ALL-ROWS options are alternatives; SHOW EMPTY
     # MATCHES is the DEFAULT (bare ALL ROWS PER MATCH shows empty
     # matches), OMIT drops them (their match numbers still advance),
-    # WITH UNMATCHED implies showing them (r8; operators/pattern.py).
-    omit_empty = bool(re.search(
-        r"ALL\s+ROWS\s+PER\s+MATCH\s+OMIT\s+EMPTY\s+MATCHES",
-        masked[open_idx + 1:close], re.IGNORECASE))
-    show_empty = all_rows and not omit_empty and not with_unmatched
+    # WITH UNMATCHED implies showing them (operators/pattern.py).
+    rows_per = re.search(
+        r"ALL\s+ROWS\s+PER\s+MATCH(?:\s+(WITH\s+UNMATCHED\s+ROWS"
+        r"|OMIT\s+EMPTY\s+MATCHES))?", body, re.IGNORECASE)
+    all_rows = rows_per is not None
+    option = (rows_per.group(1) or "").upper() if all_rows else ""
+    with_unmatched = option.startswith("WITH")
+    show_empty = all_rows and not option
     after = sections.get("after")
     after_match = "past_last"
     skip_to_var = None   # (kind, VAR) resolved to a letter after DEFINE
@@ -4631,7 +4649,7 @@ def execute_match_recognize(spark: SparkSession, sql: str,
         if re.fullmatch(r"SKIP\s+PAST\s+LAST\s+ROW", after, re.IGNORECASE):
             pass
         elif re.fullmatch(r"SKIP\s+TO\s+NEXT\s+ROW", after, re.IGNORECASE):
-            after_match = "next_row"   # overlapping matches (r8)
+            after_match = "next_row"   # overlapping matches
         else:
             vm = re.fullmatch(r"SKIP\s+TO\s+(?:(FIRST|LAST)\s+)?(\w+)",
                               after, re.IGNORECASE)
@@ -4653,7 +4671,7 @@ def execute_match_recognize(spark: SparkSession, sql: str,
     partition_by = [c.strip().strip("`")
                     for c in sections["partition"].split(",")]
     # ASC is the default; a DESC suffix passes through to the operator
-    # (r8 — the pattern walks that column descending).
+    # (the pattern walks that column descending).
     order_by = [re.sub(r"\s+ASC$", "", c.strip(), flags=re.IGNORECASE)
                 .strip("`") for c in sections["order"].split(",")]
 
@@ -4731,13 +4749,12 @@ def execute_match_recognize(spark: SparkSession, sql: str,
             raise TrinoSqlUnsupported(f"unparsable DEFINE item: {item!r}")
         var, cond = dm.group(1), dm.group(2)
         cond = _lower_nav(var, cond)
-        defines.append((var.upper(),
-                        _unmask(_rewrite_code(cond, stash), stash)))
+        defines.append((var.upper(), _rewrite_masked(cond, stash)))
     if len(defines) > 26:
         raise TrinoSqlUnsupported("more than 26 pattern variables")
     letters = {var: chr(ord("A") + i) for i, (var, _) in enumerate(defines)}
-    # SUBSET U = (A, B), … — union variables (r8): resolved to letter
-    # SETS for qualified MEASURES aggregates.
+    # SUBSET U = (A, B), … — union variables, resolved to letter SETS
+    # for qualified MEASURES aggregates and SKIP TO targets.
     qual_sets: dict[str, str] = {v: l for v, l in letters.items()}
     if sections.get("subset"):
         for item in _split_top_level(sections["subset"]):
@@ -4765,7 +4782,7 @@ def execute_match_recognize(spark: SparkSession, sql: str,
         # operator skips to the first/last row mapped to ANY member.
         after_match = f"{kind}:{qual_sets[var]}"
 
-    # PERMUTE(A, B, …) (r8): alternation of every permutation. Trino's
+    # PERMUTE(A, B, …): alternation of every permutation. Trino's
     # preference order IS the lexicographic order of the listed
     # positions, which is exactly itertools.permutations' emission
     # order, and Python regex alternation prefers leftmost — the
@@ -4791,8 +4808,8 @@ def execute_match_recognize(spark: SparkSession, sql: str,
     # PATTERN: identifiers must all be defined; quantifier punctuation
     # passes through (validated again by the operator) — including
     # reluctant quantifiers (``B+?``), the ^/$ partition anchors and
-    # {- -} output exclusions (r8; quantified/nested-in-group forms r9
-    # via the regex module's every-repetition group spans), which
+    # {- -} output exclusions (quantified and nested-in-group forms via
+    # the regex module's every-repetition group spans), which
     # implement Trino's exact preference/anchor semantics over the
     # per-partition symbol string (exclusions become named groups in
     # the operator).
@@ -4817,7 +4834,7 @@ def execute_match_recognize(spark: SparkSession, sql: str,
         w = Window.partitionBy(*partition_by).orderBy(
             *order_sort_cols(order_by)[1])
         for (kind, expr_txt, off), name in nav_map.items():
-            src = F.expr(_unmask(_rewrite_code(expr_txt, stash), stash))
+            src = F.expr(_rewrite_masked(expr_txt, stash))
             nav = F.lag(src, off) if kind == "PREV" else F.lead(src, off)
             df = df.withColumn(name, nav.over(w))
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -4826,245 +4843,154 @@ def execute_match_recognize(spark: SparkSession, sql: str,
     schema_parts: list[str] = []
     renames: list[tuple[str, str]] = []   # (output col, alias)
     used_cols: list[str] = []             # columns the measures read
-    if sections.get("measures"):
-        for item in _split_top_level(sections["measures"]):
-            mm = re.match(r"\s*(.+?)\s+AS\s+(\w+)\s*$", item.strip(),
-                          re.IGNORECASE | re.DOTALL)
-            if not mm:
-                raise TrinoSqlUnsupported(
-                    f"MEASURES item needs AS alias: {item!r}")
-            expr, alias = mm.group(1).strip(), mm.group(2)
-            # RUNNING (Trino's ALL ROWS default) vs FINAL semantics.
-            # In ONE ROW PER MATCH the output point is the completed
-            # match, so the two coincide — strip and proceed.
-            sem = "running"
-            sm_ = re.match(r"(RUNNING|FINAL)\s+(.+)$", expr,
-                           re.IGNORECASE | re.DOTALL)
-            if sm_:
-                sem = sm_.group(1).lower()
-                expr = sm_.group(2).strip()
-            if re.fullmatch(r"match_number\s*\(\s*\)", expr, re.IGNORECASE):
-                renames.append(("match_num", alias))
-                continue
-            if all_rows and re.fullmatch(r"classifier\s*\(\s*\)", expr,
-                                         re.IGNORECASE):
-                # per-row classifier column comes from the operator.
+    items = (_split_top_level(sections["measures"])
+             if sections.get("measures") else [])
+    for item in items:
+        mm = re.match(r"\s*(.+?)\s+AS\s+(\w+)\s*$", item.strip(),
+                      re.IGNORECASE | re.DOTALL)
+        if not mm:
+            raise TrinoSqlUnsupported(
+                f"MEASURES item needs AS alias: {item!r}")
+        expr, alias = mm.group(1).strip(), mm.group(2)
+        # RUNNING (Trino's default) vs FINAL semantics. ONE ROW PER
+        # MATCH emits once, at the completed match, where RUNNING ==
+        # FINAL: its measures are ALL ROWS' FINAL ones at that point.
+        sem = "running"
+        sm_ = re.match(r"(RUNNING|FINAL)\s+(.+)$", expr,
+                       re.IGNORECASE | re.DOTALL)
+        if sm_:
+            sem, expr = sm_.group(1).lower(), sm_.group(2).strip()
+        run = all_rows and sem == "running"
+        if re.fullmatch(r"match_number\s*\(\s*\)", expr, re.IGNORECASE):
+            renames.append(("match_num", alias))
+            continue
+        if re.fullmatch(r"classifier\s*\(\s*\)", expr, re.IGNORECASE):
+            if all_rows:   # the operator's per-row classifier column
                 renames.append(("classifier", alias))
                 continue
-            if all_rows:
-                # r8: per-row measures. The callable returns a VECTOR
-                # aligned to the match rows (RUNNING — aggregate over
-                # the match prefix up to each row) or a scalar that
-                # broadcasts (FINAL — the whole-match aggregate on
-                # every row), computed inside the same pandas walk.
-                if re.fullmatch(r"count\s*\(\s*\*?\s*\)", expr,
-                                re.IGNORECASE):
-                    # Over an EMPTY match both forms are 0 (Trino);
-                    # the scalar 0 broadcasts to the one emitted row.
-                    if sem == "running":
-                        measures[alias] = (
-                            lambda c, m:
-                            list(range(1, len(c) + 1)) if len(c) else 0)
-                    else:
-                        measures[alias] = lambda c, m: len(c)
-                    schema_parts.append(f"{alias} bigint")
-                    continue
-                qagg = (_MR_QCOUNT_RE.match(expr)
-                        or _MR_QAGG_RE.match(expr))
-                if qagg:   # variable/SUBSET-qualified aggregate (r8)
-                    if qagg.re is _MR_QCOUNT_RE:
-                        fn, name, col = "count", qagg.group(1).upper(), None
-                    else:
-                        fn, name, col = (qagg.group(1).lower(),
-                                         qagg.group(2).upper(),
-                                         qagg.group(3).strip("`"))
-                    if name not in qual_sets:
-                        raise TrinoSqlUnsupported(
-                            f"MEASURES {expr!r}: {name} is neither a "
-                            "pattern variable nor a SUBSET")
-                    is_int = False
-                    if col is not None:
-                        if col not in types:
-                            raise TrinoSqlUnsupported(
-                                f"MEASURES column {col!r} unknown")
-                        used_cols.append(col)
-                        is_int = types[col] in _INT_TYPES
-                    measures[alias] = _mr_qual_agg(
-                        fn, qual_sets[name], col, is_int,
-                        sem == "running")
-                    out_t = ("bigint" if fn == "count"
-                             or (fn == "sum" and is_int)
-                             else "double" if fn in ("sum", "avg")
-                             else types[col])
-                    schema_parts.append(f"{alias} {out_t}")
-                    continue
-                am = _MR_AGG_RE.match(expr)
-                if not am:
-                    raise TrinoSqlUnsupported(
-                        f"ALL ROWS PER MATCH MEASURES {expr!r} — "
-                        "supported: match_number(), classifier(), "
-                        "[RUNNING|FINAL] count(*)/first/last/sum/avg/"
-                        "min/max(column), each optionally qualified by "
-                        "a pattern variable or SUBSET (VAR.col, VAR.*)")
-                fn, col = am.group(1).lower(), am.group(2).strip("`")
+            # The pattern variable of the LAST row of the match, by its
+            # original (upper-cased) name.
+            rev = {letter: var for var, letter in letters.items()}
+            measures[alias] = (
+                lambda c, m, rev=rev:
+                rev[m.group(0)[-1]] if m.group(0) else None)
+            schema_parts.append(f"{alias} string")
+            continue
+        # A RUNNING measure returns a VECTOR aligned to the match rows
+        # (the aggregate over the match prefix up to each row); a FINAL
+        # one a scalar (the whole-match aggregate), which ALL ROWS
+        # broadcasts to every row. Both run inside the operator's
+        # pandas walk.
+        if re.fullmatch(r"count\s*\(\s*\*?\s*\)", expr, re.IGNORECASE):
+            # Over an EMPTY match both forms are 0 (Trino); the scalar
+            # 0 broadcasts to the one emitted row.
+            measures[alias] = (
+                (lambda c, m: list(range(1, len(c) + 1)) if len(c) else 0)
+                if run else (lambda c, m: len(c)))
+            schema_parts.append(f"{alias} bigint")
+            continue
+        qagg = _MR_QCOUNT_RE.match(expr) or _MR_QAGG_RE.match(expr)
+        if qagg:   # variable/SUBSET-qualified aggregate
+            if qagg.re is _MR_QCOUNT_RE:
+                fn, name, col = "count", qagg.group(1).upper(), None
+            else:
+                fn, name, col = (qagg.group(1).lower(),
+                                 qagg.group(2).upper(),
+                                 qagg.group(3).strip("`"))
+            if name not in qual_sets:
+                raise TrinoSqlUnsupported(
+                    f"MEASURES {expr!r}: {name} is neither a "
+                    "pattern variable nor a SUBSET")
+            is_int = False
+            if col is not None:
                 if col not in types:
                     raise TrinoSqlUnsupported(
                         f"MEASURES column {col!r} unknown")
                 used_cols.append(col)
-                t_ = types[col]
-                run = sem == "running"
-                # Empty-match contract (show_empty): the zero-row
-                # slice means NULL for every aggregate but count —
-                # RUNNING vectors come back zero-length (the emit loop
-                # turns them into NULL); the FINAL scalars need
-                # explicit guards (pandas would raise on iloc[0] or
-                # return 0/NaN where Trino says NULL).
-                if fn == "first":   # first row either way
-                    measures[alias] = (
-                        lambda c, m, col=col:
-                        c.iloc[0][col] if len(c) else None)
-                    schema_parts.append(f"{alias} {t_}")
-                elif fn == "last":
-                    # RUNNING last = the current row's value
-                    measures[alias] = (
-                        (lambda c, m, col=col: list(c[col])) if run
-                        else (lambda c, m, col=col:
-                              c.iloc[-1][col] if len(c) else None))
-                    schema_parts.append(f"{alias} {t_}")
-                elif fn == "sum":
-                    if t_ in _INT_TYPES:
-                        measures[alias] = (
-                            (lambda c, m, col=col:
-                             [int(v) for v in c[col].cumsum()]) if run
-                            else (lambda c, m, col=col:
-                                  int(c[col].sum()) if len(c) else None))
-                        schema_parts.append(f"{alias} bigint")
-                    else:
-                        measures[alias] = (
-                            (lambda c, m, col=col:
-                             [float(v) for v in c[col].cumsum()]) if run
-                            else (lambda c, m, col=col:
-                                  float(c[col].sum()) if len(c) else None))
-                        schema_parts.append(f"{alias} double")
-                elif fn == "avg":
-                    measures[alias] = (
-                        (lambda c, m, col=col:
-                         [float(v) for v in c[col].expanding().mean()])
-                        if run
-                        else (lambda c, m, col=col:
-                              float(c[col].mean()) if len(c) else None))
-                    schema_parts.append(f"{alias} double")
-                else:   # min / max
-                    agg = fn
-                    measures[alias] = (
-                        (lambda c, m, col=col, agg=agg:
-                         list(getattr(c[col], "cum" + agg)())) if run
-                        else (lambda c, m, col=col, agg=agg:
-                              getattr(c[col], agg)() if len(c) else None))
-                    schema_parts.append(f"{alias} {t_}")
-                continue
-            if re.fullmatch(r"classifier\s*\(\s*\)", expr, re.IGNORECASE):
-                # Trino ONE ROW PER MATCH classifier(): the pattern
-                # variable of the LAST row of the match, by its
-                # original (upper-cased) name.
-                rev = {letter: var for var, letter in letters.items()}
+                is_int = types[col] in _INT_TYPES
+            measures[alias] = _mr_qual_agg(
+                fn, qual_sets[name], col, is_int, run)
+            out_t = ("bigint" if fn == "count"
+                     or (fn == "sum" and is_int)
+                     else "double" if fn in ("sum", "avg")
+                     else types[col])
+            schema_parts.append(f"{alias} {out_t}")
+            continue
+        am = _MR_AGG_RE.match(expr)
+        if not am:
+            raise TrinoSqlUnsupported(
+                ("ALL ROWS PER MATCH " if all_rows else "")
+                + f"MEASURES expression {expr!r} — supported: "
+                "match_number(), classifier(), [RUNNING|FINAL] "
+                "count(*)/first/last/sum/avg/min/max(column), each "
+                "optionally qualified by a pattern variable or SUBSET "
+                "(VAR.col, VAR.*)")
+        fn, col = am.group(1).lower(), am.group(2).strip("`")
+        if col not in types:
+            raise TrinoSqlUnsupported(f"MEASURES column {col!r} unknown")
+        used_cols.append(col)
+        t_ = types[col]
+        # Empty-match contract (ONE ROW PER MATCH and SHOW EMPTY
+        # MATCHES): the zero-row slice means NULL for every aggregate
+        # but count — RUNNING vectors come back zero-length (the emit
+        # loop turns them into NULL); the FINAL scalars need explicit
+        # guards (pandas would raise on iloc[0] or return 0/NaN where
+        # Trino says NULL).
+        if fn == "first":   # first row either way
+            measures[alias] = (
+                lambda c, m, col=col:
+                c.iloc[0][col] if len(c) else None)
+            schema_parts.append(f"{alias} {t_}")
+        elif fn == "last":
+            # RUNNING last = the current row's value
+            measures[alias] = (
+                (lambda c, m, col=col: list(c[col])) if run
+                else (lambda c, m, col=col:
+                      c.iloc[-1][col] if len(c) else None))
+            schema_parts.append(f"{alias} {t_}")
+        elif fn == "sum":
+            if t_ in _INT_TYPES:
                 measures[alias] = (
-                    lambda c, m, rev=rev:
-                    rev[m.group(0)[-1]] if m.group(0) else None)
-                schema_parts.append(f"{alias} string")
-                continue
-            if re.fullmatch(r"count\s*\(\s*\*?\s*\)", expr, re.IGNORECASE):
-                measures[alias] = lambda c, m: len(c)
+                    (lambda c, m, col=col:
+                     [int(v) for v in c[col].cumsum()]) if run
+                    else (lambda c, m, col=col:
+                          int(c[col].sum()) if len(c) else None))
                 schema_parts.append(f"{alias} bigint")
-                continue
-            qagg = _MR_QCOUNT_RE.match(expr) or _MR_QAGG_RE.match(expr)
-            if qagg:   # variable/SUBSET-qualified aggregate (r8);
-                # RUNNING == FINAL at the one output point per match.
-                if qagg.re is _MR_QCOUNT_RE:
-                    fn, name, col = "count", qagg.group(1).upper(), None
-                else:
-                    fn, name, col = (qagg.group(1).lower(),
-                                     qagg.group(2).upper(),
-                                     qagg.group(3).strip("`"))
-                if name not in qual_sets:
-                    raise TrinoSqlUnsupported(
-                        f"MEASURES {expr!r}: {name} is neither a "
-                        "pattern variable nor a SUBSET")
-                is_int = False
-                if col is not None:
-                    if col not in types:
-                        raise TrinoSqlUnsupported(
-                            f"MEASURES column {col!r} unknown")
-                    used_cols.append(col)
-                    is_int = types[col] in _INT_TYPES
-                measures[alias] = _mr_qual_agg(
-                    fn, qual_sets[name], col, is_int, running=False)
-                out_t = ("bigint" if fn == "count"
-                         or (fn == "sum" and is_int)
-                         else "double" if fn in ("sum", "avg")
-                         else types[col])
-                schema_parts.append(f"{alias} {out_t}")
-                continue
-            am = _MR_AGG_RE.match(expr)
-            if not am:
-                raise TrinoSqlUnsupported(
-                    f"MEASURES expression {expr!r} — supported: "
-                    "match_number(), classifier(), count(*), "
-                    "first/last/sum/avg/min/max(column), each optionally "
-                    "qualified by a pattern variable or SUBSET "
-                    "(VAR.col, VAR.*)")
-            fn, col = am.group(1).lower(), am.group(2).strip("`")
-            if col not in types:
-                raise TrinoSqlUnsupported(f"MEASURES column {col!r} unknown")
-            used_cols.append(col)
-            t_ = types[col]
-            # ONE ROW PER MATCH always includes empty matches (Trino);
-            # the zero-row guards mirror the ALL-ROWS forms above.
-            if fn == "first":
+            else:
                 measures[alias] = (
-                    lambda c, m, col=col:
-                    c.iloc[0][col] if len(c) else None)
-                schema_parts.append(f"{alias} {t_}")
-            elif fn == "last":
-                measures[alias] = (
-                    lambda c, m, col=col:
-                    c.iloc[-1][col] if len(c) else None)
-                schema_parts.append(f"{alias} {t_}")
-            elif fn == "sum":
-                if t_ in _INT_TYPES:
-                    measures[alias] = (
-                        lambda c, m, col=col:
-                        int(c[col].sum()) if len(c) else None)
-                    schema_parts.append(f"{alias} bigint")
-                else:
-                    measures[alias] = (
-                        lambda c, m, col=col:
-                        float(c[col].sum()) if len(c) else None)
-                    schema_parts.append(f"{alias} double")
-            elif fn == "avg":
-                measures[alias] = (
-                    lambda c, m, col=col:
-                    float(c[col].mean()) if len(c) else None)
+                    (lambda c, m, col=col:
+                     [float(v) for v in c[col].cumsum()]) if run
+                    else (lambda c, m, col=col:
+                          float(c[col].sum()) if len(c) else None))
                 schema_parts.append(f"{alias} double")
-            else:  # min / max
-                agg = fn
-                measures[alias] = (
-                    lambda c, m, col=col, agg=agg:
-                    getattr(c[col], agg)() if len(c) else None)
-                schema_parts.append(f"{alias} {t_}")
+        elif fn == "avg":
+            measures[alias] = (
+                (lambda c, m, col=col:
+                 [float(v) for v in c[col].expanding().mean()]) if run
+                else (lambda c, m, col=col:
+                      float(c[col].mean()) if len(c) else None))
+            schema_parts.append(f"{alias} double")
+        else:   # min / max
+            measures[alias] = (
+                (lambda c, m, col=col, agg=fn:
+                 list(getattr(c[col], "cum" + agg)())) if run
+                else (lambda c, m, col=col, agg=fn:
+                      getattr(c[col], agg)() if len(c) else None))
+            schema_parts.append(f"{alias} {t_}")
 
     symbols = [(letters[v], F.expr(cond)) for v, cond in defines]
+    if with_unmatched and after_match != "past_last":
+        raise TrinoSqlUnsupported(
+            "WITH UNMATCHED ROWS requires AFTER MATCH SKIP PAST "
+            "LAST ROW (Trino's own restriction)")
+    out = match_recognize(
+        df, partition_by, order_by, symbols=symbols, pattern=pattern,
+        measures=measures, measure_schema=", ".join(schema_parts),
+        # ALL ROWS emits every input column, so nothing is pruned.
+        used_columns=None if all_rows else used_cols,
+        all_rows=all_rows, after_match=after_match,
+        with_unmatched=with_unmatched, show_empty=show_empty)
     if all_rows:
-        if with_unmatched and after_match != "past_last":
-            raise TrinoSqlUnsupported(
-                "WITH UNMATCHED ROWS requires AFTER MATCH SKIP PAST "
-                "LAST ROW (Trino's own restriction)")
-        out = match_recognize(
-            df, partition_by, order_by, symbols=symbols, pattern=pattern,
-            measures=measures,
-            measure_schema=", ".join(schema_parts),
-            all_rows=True, after_match=after_match,
-            with_unmatched=with_unmatched, show_empty=show_empty)
         # The operator emits the internal letter; surface Trino's
         # classifier() contract — the DEFINE variable name.
         cls = None
@@ -5073,34 +4999,26 @@ def execute_match_recognize(spark: SparkSession, sql: str,
             cls = (F.when(cond_, F.lit(var)) if cls is None
                    else cls.when(cond_, F.lit(var)))
         out = out.withColumn("classifier", cls)
-        for src, alias in renames:
-            out = out.withColumn(alias, F.col(src))
+    for src, alias in renames:
+        out = out.withColumn(alias, F.col(src))
+    if all_rows:
         # Trino ALL ROWS PER MATCH output: the input columns (nav
         # helper columns dropped) + the declared measures; without a
         # MEASURES clause, match_num/classifier are kept by their
         # operator names.
-        base = [c for c in spark.table(table).columns]
+        base = [c for c in df.columns if c not in nav_map.values()]
         extras = ([a for _, a in renames] + list(measures)
                   or ["match_num", "classifier"])
         out = out.select(*base, *extras)
-    else:
-        out = match_recognize(
-            df, partition_by, order_by, symbols=symbols, pattern=pattern,
-            measures=measures,
-            measure_schema=", ".join(schema_parts),
-            used_columns=used_cols, after_match=after_match,
-        )
-        for src, alias in renames:
-            out = out.withColumn(alias, F.col(src))
-        if measures or renames:
-            # Trino ONE ROW PER MATCH output: partition keys + measures.
-            out = out.select(*partition_by,
-                             *[a for _, a in renames], *measures.keys())
+    elif measures or renames:
+        # Trino ONE ROW PER MATCH output: partition keys + measures.
+        out = out.select(*partition_by,
+                         *[a for _, a in renames], *measures.keys())
     out.createOrReplaceTempView("_mr_result")
 
     # Splice: the table reference + pattern block (+ optional alias)
     # becomes the result view; the remaining statement goes through the
-    # normal dialect rewrite.
+    # statement pipeline's back half.
     tail_at = close + 1
     am = _MR_ALIAS_RE.match(masked, tail_at)
     alias_txt = ""
@@ -5112,59 +5030,37 @@ def execute_match_recognize(spark: SparkSession, sql: str,
         tail_at = am.end()
     spliced = (masked[:m.start(1)] + "_mr_result" + alias_txt
                + masked[tail_at:])
-    code = _unmask(_rewrite_code(spliced, stash), stash)
-    ensure_dialect_udfs(spark, code)
-    if params is not None:
-        return spark.sql(code, args=params)
-    return spark.sql(code)
+    return _rewrite_masked(spliced, stash)
+
+
+#: Either spelling of a session-UDF call — the Trino name or the emitted
+#: ``trino_*`` one — → its registrar.
+_UDF_REGISTRARS = {spelling: register
+                   for call, (udf, _, register) in _SESSION_UDFS.items()
+                   for spelling in (call, udf)}
+_UDF_CALL_RE = re.compile(
+    r"\b(" + "|".join(sorted(_UDF_REGISTRARS, key=len, reverse=True))
+    + r")\s*\(", re.IGNORECASE)
 
 
 def ensure_dialect_udfs(spark: SparkSession, sql: str) -> None:
-    """Register the session UDFs a rewritten statement may reference.
-
-    ``normalize()`` (no Spark Unicode normalizer) and ``xxhash64()``
-    (Trino's seed-0 VARBINARY form — Spark's builtin is seed-42
-    BIGINT); registration is gated on the original text actually
-    mentioning them, so the common path pays two regexes and no py4j
-    round-trips."""
-    if re.search(r"\b(trino_)?normalize\s*\(", sql, re.IGNORECASE):
-        from okera_trino_spark.functions.trino_compat import (
-            register_unicode_normalize)
-        register_unicode_normalize(spark)
-    if re.search(r"\b(trino_)?xxhash64\s*\(", sql, re.IGNORECASE):
-        from okera_trino_spark.functions.trino_compat import (
-            register_xxhash64)
-        register_xxhash64(spark)
-    if re.search(r"\b(trino_)?word_stem\s*\(", sql, re.IGNORECASE):
-        from okera_trino_spark.functions.stemmer import register_word_stem
-        register_word_stem(spark)
-    if re.search(r"\b(trino_)?(to|from)_base32\s*\(", sql, re.IGNORECASE):
-        from okera_trino_spark.functions.trino_compat import register_base32
-        register_base32(spark)
-    if re.search(r"\b(trino_)?(hmac_(md5|sha1|sha256|sha512)"
-                 r"|(to|from)_ieee754_(32|64))\s*\(", sql, re.IGNORECASE):
-        from okera_trino_spark.functions.trino_compat import (
-            register_binary_codecs)
-        register_binary_codecs(spark)
-    if re.search(r"\b(trino_)?(inverse_)?(normal|beta)_cdf\s*\(",
-                 sql, re.IGNORECASE):
-        from okera_trino_spark.functions.trino_compat import (
-            register_stat_fns)
-        register_stat_fns(spark)
-    if re.search(r"\b(trino_)?murmur3\s*\(", sql, re.IGNORECASE):
-        from okera_trino_spark.functions.trino_compat import (
-            register_murmur3)
-        register_murmur3(spark)
-    if re.search(r"\b(spooky_hash_v2_(32|64)|trino_spooky(32|64))\s*\(",
-                 sql, re.IGNORECASE):
-        from okera_trino_spark.functions.trino_compat import register_spooky
-        register_spooky(spark)
+    """Register the session UDFs (``_SESSION_UDFS``) a statement may
+    reference, given its Trino text or its rewritten Spark text.
+    Registration is gated on the text actually calling them, so the
+    common path pays one regex scan and no py4j round-trips."""
+    for register in dict.fromkeys(_UDF_REGISTRARS[m.group(1).lower()]
+                                  for m in _UDF_CALL_RE.finditer(sql)):
+        register(spark)
 
 
 def execute_trino(spark: SparkSession, sql: str,
                   sf_dir: str | None = None,
                   params: list | None = None) -> DataFrame:
-    """Run a Trino-dialect SQL string on Spark.
+    """Run a Trino-dialect SQL string on Spark — the one path of every
+    Trino statement: session-UDF setup, the EXPLAIN probe, the
+    MATCH_RECOGNIZE lowering or the plain rewrite, then ``spark.sql``.
+    ``GovernedCatalog.execute`` enters here too, after registering the
+    caller's governed views.
 
     When ``sf_dir`` is given, the fixture tables are registered as temp
     views first (idempotent), so reference queries run verbatim against
@@ -5181,14 +5077,14 @@ def execute_trino(spark: SparkSession, sql: str,
     explained = execute_trino_explain(spark, sql, sf_dir, params)
     if explained is not None:
         return explained
+    text = None
     if re.search(r"\bMATCH_RECOGNIZE\b", sql, re.IGNORECASE):
-        mr = execute_match_recognize(spark, sql, params)
-        if mr is not None:
-            return mr
-    rewritten = rewrite_trino_sql(sql)
+        text = execute_match_recognize(spark, sql)
+    if text is None:
+        text = rewrite_trino_sql(sql)
     if params is not None:
-        return spark.sql(rewritten, args=params)
-    return spark.sql(rewritten)
+        return spark.sql(text, args=params)
+    return spark.sql(text)
 
 
 _EXPLAIN_HEAD_RE = re.compile(r"^\s*EXPLAIN\b", re.IGNORECASE)

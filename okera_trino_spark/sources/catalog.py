@@ -557,9 +557,14 @@ class GovernedCatalog:
     def expand_view(self, name: str, user: str | None = None) -> DataFrame:
         """Expand stored view SQL against the GOVERNED tables
         (read path: RecordServiceMetadata.java:392-444) — view expansion
-        must not bypass the expanding user's policies."""
+        must not bypass the expanding user's policies. The session UDFs
+        a Trino view's text calls are registered first: the session
+        reading the view may not be the one that created it."""
+        from okera_trino_spark.functions.trino_sql import ensure_dialect_udfs
         self._register_governed(user or self.props.user)
-        return self.spark.sql(self._views[name])
+        text = self._views[name]
+        ensure_dialect_udfs(self.spark, text)
+        return self.spark.sql(text)
 
     #: SET SESSION name → SessionProperties field + value parser. The
     #: names are the reference's session properties
@@ -984,30 +989,16 @@ class GovernedCatalog:
         info = self._rewrite_information_schema(sql, user)
         plan_sql = info if info is not None else sql
         if dialect == "trino":
-            from okera_trino_spark.functions.trino_sql import (
-                ensure_dialect_udfs, execute_match_recognize,
-                execute_trino_explain, rewrite_trino_sql)
-            ensure_dialect_udfs(self.spark, sql)
-            # EXPLAIN family over the GOVERNED views registered
-            # above — plan output is policy-scoped like the query
-            # itself (VALIDATE on a hidden column fails analysis).
-            ex = execute_trino_explain(self.spark, plan_sql, None, params)
-            if ex is not None:
-                return ex
-            if re.search(r"\bMATCH_RECOGNIZE\b", sql, re.IGNORECASE):
-                # Lowered onto the match_recognize operator over the
-                # GOVERNED temp views registered above — policies
-                # apply to the pattern scan like any other read.
-                mr = execute_match_recognize(self.spark, sql, params)
-                if mr is not None:
-                    return mr
-            text = rewrite_trino_sql(plan_sql)
-        elif dialect == "spark":
-            text = plan_sql
-        else:
+            from okera_trino_spark.functions.trino_sql import execute_trino
+            # Planned over the GOVERNED views registered above, so
+            # EXPLAIN output and MATCH_RECOGNIZE scans are policy-scoped
+            # like any read. No sf_dir: it would re-register the raw
+            # tables over the governed views.
+            return execute_trino(self.spark, plan_sql, None, params)
+        if dialect != "spark":
             raise ValueError(f"dialect must be spark|trino, got {dialect!r}")
-        return (self.spark.sql(text, args=params) if params is not None
-                else self.spark.sql(text))
+        return (self.spark.sql(plan_sql, args=params) if params is not None
+                else self.spark.sql(plan_sql))
 
     @property
     def audit_log(self) -> list[AuditRecord]:
